@@ -2,7 +2,8 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Scoped lifecycle for the intermediates an operator pins.
   *
@@ -16,45 +17,67 @@ import org.apache.spark.sql.DataFrame
   * that contract as API:
   *
   *   CacheScope.scoped { cs =>
-  *     val base = cs.cache(expensiveProjection)   // pinned for the scope
-  *     ... plan branches over base ...
+  *     val base = cs.cache(expensiveProjection)   // checkpointed now,
+  *     ... plan branches over base ...            // held for the scope
   *   }                                            // result materialized,
   *                                                // pins released
+  *
+  * A pin is an EAGER `localCheckpoint()`: `cache` runs one job and
+  * returns a frame whose plan is a single `LogicalRDD` leaf over the
+  * materialized blocks. Lineage is cut at every pin, so each plan
+  * downstream analyses, optimizes and explain-strings that leaf instead
+  * of the whole chain before it. A `persist()` pin would keep the chain:
+  * its `InMemoryRelation` carries the cached plan, and AQE re-renders
+  * that nested plan into the explain string on every stage update — on
+  * the corpus-build chain that rendering took 43% of the driver thread's
+  * profile samples (JFR, 4 vCPUs). The price: a pin with a single
+  * consumer pays one extra job, so pin only what several branches
+  * re-read.
   *
   * `scoped` runs the builder, EAGERLY materializes its result via
   * `localCheckpoint()` (one job — the same work the caller's first
   * action would have paid, now paid where the pins are still warm), and
-  * releases every pin on the way out — success or failure. The caller
-  * receives a self-contained, lineage-truncated DataFrame: no cache
-  * entry outlives the call (the spec gate: `CacheHygieneSpec` asserts
-  * `sharedState.cacheManager` is empty after every registered query
-  * materializes), and the checkpoint's own blocks are GC-managed by the
-  * ContextCleaner, so dropping the reference frees them — nothing to
-  * unpersist, ever. At 100 TB this is exactly the explicit-checkpoint
-  * boundary SCALE.md prescribes for multi-phase operators; blocks are
-  * MEMORY_AND_DISK, so results larger than storage memory spill rather
-  * than fail. The one trade: `queryExecution` on the returned frame
-  * shows a checkpoint scan, not the interior plan — tests that audit
-  * interiors flip [[auditMode]] for the call.
+  * releases every pin's blocks ([[free]]) on the way out — success or
+  * failure. The caller receives a self-contained, lineage-truncated
+  * DataFrame: no pin outlives the call, and the result checkpoint's own
+  * blocks are GC-managed by the ContextCleaner, so dropping the
+  * reference frees them — nothing to unpersist, ever. At 100 TB this is
+  * exactly the explicit-checkpoint boundary SCALE.md prescribes for
+  * multi-phase operators; blocks are MEMORY_AND_DISK, so pins and results
+  * larger than storage memory spill rather than fail. The one trade:
+  * `queryExecution` on a pin or on the returned frame shows a checkpoint
+  * scan, not the interior plan — tests that audit interiors flip
+  * [[auditMode]] for the call, under which pins fall back to `persist()`
+  * and the result is not checkpointed.
   */
 object CacheScope {
 
   final class Scope private[graft] () {
     private val pinned = mutable.Buffer[DataFrame]()
 
-    /** Pin `df` (persist) until the enclosing scope closes. */
-    def cache(df: DataFrame): DataFrame = { pinned += df.persist(); df }
+    /** Pin `df` until the enclosing scope closes: an eager local
+      * checkpoint, returned in its place (a `persist()` under
+      * [[auditMode]], so the interior plan stays visible).
+      */
+    def cache(df: DataFrame): DataFrame =
+      if (auditing) df.persist()
+      else {
+        val c = keepingFinalPartitions(df.sparkSession)(df.localCheckpoint())
+        pinned += c
+        c
+      }
 
-    private[graft] def release(): Unit =
-      pinned.foreach(_.unpersist(blocking = false))
+    private[graft] def release(): Unit = pinned.foreach(free)
   }
 
-  /** Test-only escape hatch: while set, `scoped` skips the materializing
-    * checkpoint AND the release, so `queryExecution` on the result
-    * exposes the full interior plan (PlanAuditSpec's structural sweeps
-    * need the real join/window tree, which a checkpoint scan hides).
-    * The deliberately-leaked pins are the auditing test's to clear
-    * (`spark.catalog.clearCache()`). Never set in production code.
+  /** Test-only escape hatch: while set, pins are lazy `persist()`s and
+    * `scoped` skips the materializing checkpoint AND the release, so
+    * `queryExecution` on the result exposes the full interior plan
+    * (PlanAuditSpec's structural sweeps and PlanFingerprintSpec's
+    * exchange counts need the real join/window tree, which a checkpoint
+    * scan hides). The deliberately-leaked pins are the auditing test's
+    * to clear (`spark.catalog.clearCache()`). Never set in production
+    * code.
     */
   private[graft] val auditMode = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
@@ -70,6 +93,23 @@ object CacheScope {
     else
       try build(cs).localCheckpoint()
       finally cs.release()
+  }
+
+  /** Run `body` with AQE's final-stage partition coalescing off, as
+    * Spark's cache manager runs a cached plan. A checkpoint freezes its
+    * RDD's partition count, and coalescing sizes that count by bytes: a
+    * small pin would land in one partition, and work that fans out
+    * downstream of it without a shuffle (an explode, the stream side of
+    * a broadcast join) would then run on one core — q97's band join at
+    * sf0.1 on 4 cores ran as 1 task instead of 4, ~2.5× longer. Earlier
+    * stages still coalesce.
+    */
+  private def keepingFinalPartitions[A](spark: SparkSession)(body: => A): A = {
+    val key = "spark.sql.adaptive.applyFinalStageShuffleOptimizations"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Release the block-manager blocks behind an EAGER `localCheckpoint`
@@ -89,8 +129,7 @@ object CacheScope {
     */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
     }
 }

@@ -813,15 +813,24 @@ object TextOps {
     array_compact(transform(shingles, s =>
       pmod(conv(substring(md5(s), 1, 15), 16, 10).cast("long"), lit(MinhashP))))
 
-  /** MinHash signature: array of n mins over the affine family. */
+  /** MinHash signature: array of n mins over the affine family.
+    *
+    * `hashes` is bound once per row through a one-element `transform`
+    * and the n mins read the bound copy. Spelled inline, each min would
+    * re-evaluate `hashes` — n md5s per shingle when the caller passes
+    * `shingleHashes(...)` — and subexpression elimination cannot reach
+    * inside `transform` (a codegen fallback). Null or empty `hashes`
+    * give n nulls, as `array_min` does.
+    */
   def minhashSignature(hashes: Column, n: Int): Column = {
     require(n >= 1 && n <= MinhashCoeffs.size,
       s"minhashSignature: n must be in [1, ${MinhashCoeffs.size}] " +
         s"(coefficient pool size), got $n — a silent take($n) would emit a " +
         "shorter signature and downstream band keys would index past it")
-    array(MinhashCoeffs.take(n).map { case (a, b) =>
-      array_min(transform(hashes, h => pmod(h * a + b, lit(MinhashP))))
-    }: _*)
+    element_at(transform(array(hashes), hs =>
+      array(MinhashCoeffs.take(n).map { case (a, b) =>
+        array_min(transform(hs, h => pmod(h * a + b, lit(MinhashP))))
+      }: _*)), 1)
   }
 
   /** LSH band keys: signature split into `bands` bands of `rowsPerBand`,
@@ -946,12 +955,8 @@ object TextOps {
     * identical boilerplate makes one band key hot → AQE skew split, same
     * playbook as [[editDistanceOnePairs]].
     *
-    * NOTE on caching: the banded fingerprint base is `persist()`-ed and
-    * the handle is NOT released here — unpersisting before the lazy
-    * result runs would evict it. Callers own the cache lifecycle
-    * (Bench/Verify clear per-query caches; a long-lived application
-    * should call `spark.catalog.clearCache()` or unpersist via
-    * `spark.sharedState.cacheManager` once the result is materialized).
+    * The banded fingerprint base is pinned for a [[graft.CacheScope]]
+    * (both self-join sides read it) and released before returning.
     */
   def simhashHammingPairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame = graft.CacheScope.scoped { cs =>

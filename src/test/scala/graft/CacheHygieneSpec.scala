@@ -1,17 +1,18 @@
 package graft
 
 /** The [[CacheScope]] gate (round-7 verdict item 2): cache lifecycle is
-  * an API, not a scaladoc contract. Every registered query — including
-  * the ones whose operators pin multi-branch intermediates
-  * (triangleCount, pareto, ewma, stableRowIds, the q24/q36 shingle
-  * bases, q00/q108's ledger keys) — must leave
+  * an API, not a scaladoc contract. Every registered query must leave
   * `spark.sharedState.cacheManager` EMPTY once its result is
-  * materialized: operators release their own pins, so Bench/Verify no
-  * longer carry a manual `clearCache()` and a long-lived application
-  * can run queries forever without leaking storage memory. (Checkpoint
-  * blocks backing scoped results are GC-managed by the ContextCleaner —
-  * they are not cache entries and free themselves when the result is
-  * dropped.)
+  * materialized, so a long-lived application can run queries forever
+  * without leaking storage memory and Bench/Verify carry no manual
+  * `clearCache()`.
+  *
+  * `CacheScope` pins are eager local checkpoints, not cache-manager
+  * entries, so this gate no longer sees them: it catches a raw
+  * `persist()`/`cache()` left behind by an operator. Pin release (and
+  * the block-manager side of it) is `CacheScopeSpec`'s to check.
+  * Checkpoint blocks backing scoped results are GC-managed by the
+  * ContextCleaner and free themselves when the result is dropped.
   */
 class CacheHygieneSpec extends SparkSpec {
 

@@ -64,6 +64,38 @@ class TextOpsSpec extends SparkSpec {
     assert(sigs("d1").forall(h => h >= 0 && h < TextOps.MinhashP))
   }
 
+  test("minhash: one evaluation of the hashes equals the per-coefficient form") {
+    // the form that re-evaluates `hashes` once per coefficient
+    def perCoefficient(hashes: org.apache.spark.sql.Column, n: Int) =
+      array(TextOps.MinhashCoeffs.take(n).map { case (a, b) =>
+        array_min(transform(hashes, h => pmod(h * a + b, lit(TextOps.MinhashP))))
+      }: _*)
+    val docs = Seq[(Int, String)]((1, "the quick brown fox jumps"), (2, "the quick brown fox"),
+      (3, "one"), (4, ""), (5, null), (6, "zz yy zz yy zz"))
+      .toDF("id", "t")
+      .withColumn("sh", TextOps.wordBigrams(TextOps.tokens(col("t"))))
+      .withColumn("hv", when(col("id") === 5, lit(null))
+        .otherwise(TextOps.shingleHashes(col("sh"))))
+    for (n <- Seq(1, 4, 8)) {
+      val out = docs.select(col("id"),
+          TextOps.minhashSignature(col("hv"), n).as("new_hv"),
+          perCoefficient(col("hv"), n).as("old_hv"),
+          TextOps.minhashSignature(TextOps.shingleHashes(col("sh")), n).as("new_sh"),
+          perCoefficient(TextOps.shingleHashes(col("sh")), n).as("old_sh"))
+        .orderBy("id").collect()
+      assert(out.length == 6)
+      out.foreach { r =>
+        assert(r.getSeq[Any](1) == r.getSeq[Any](2), s"n=$n id=${r.getInt(0)}")
+        assert(r.getSeq[Any](3) == r.getSeq[Any](4), s"n=$n id=${r.getInt(0)}")
+        assert(r.getSeq[Any](1).size == n)
+      }
+      // empty (ids 3, 4) and null (id 5) hash arrays: n nulls, as before
+      out.filter(r => Set(3, 4, 5)(r.getInt(0)))
+        .foreach(r => assert(r.getSeq[Any](1).forall(_ == null)))
+      assert(out.head.getSeq[Any](1).forall(_ != null))
+    }
+  }
+
   test("simhash: deterministic, identical for identical token bags") {
     val df = Seq((1L, "spark scan join"), (2L, "spark scan join"),
       (3L, "totally different words here"), (4L, "")).toDF("id", "t")
