@@ -39,8 +39,10 @@ object Dedup {
     * shape for the real pipeline, where the ledger is a large silver
     * table re-read every micro-batch: its shuffle is paid ONCE at write
     * time, not per batch. (At 100 TB the bucketed write replaces the
-    * per-batch `persist()` q00 models; each micro-batch then appends its
-    * survivors back into the same bucketed layout.)
+    * per-batch `persist()` q00 models.) Nothing appends a batch's
+    * survivors to the bucketed tables yet: they hold the ledger as of
+    * the last `prepareBucketedLedger`, so a later batch is checked
+    * against that ledger, not against the batches since.
     *
     * `warehouseDir`/`tablePrefix` locate the materialized tables
     * (external, `mode=overwrite` — re-running refreshes them). Bucketed
@@ -113,7 +115,6 @@ object Dedup {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Exact whole-row/keyed dedup — hash-shuffle on the key columns. */
   /** Batch MERGE / upsert: updates win on key match, unmatched target
     * rows survive — the warehouse `MERGE INTO` shape (and the batch twin
     * of `StreamingOps.upsertStream`). One anti-join + union: Spark
@@ -126,6 +127,7 @@ object Dedup {
     updates.unionByName(
       target.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti"))
 
+  /** Exact whole-row/keyed dedup — hash-shuffle on the key columns. */
   def exact(df: DataFrame, cols: Seq[String]): DataFrame =
     if (cols.isEmpty) df.dropDuplicates() else df.dropDuplicates(cols)
 

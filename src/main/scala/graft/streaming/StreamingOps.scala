@@ -32,6 +32,7 @@ object StreamingOps {
   /** Session confs that put streaming state in the RocksDB provider —
     * the production configuration for the unbounded-key operators here
     * ([[dedupExact]]: one key per distinct id forever;
+    * [[upsertStream]]: the same, one key per distinct key it has seen;
     * [[domainQuotaStream]]: one Long per domain forever). The default
     * HDFS-backed provider holds every key on the JVM heap, so state
     * growth eventually manifests as executor OOM; RocksDB keeps state
@@ -224,30 +225,57 @@ object StreamingOps {
         col(s"${tsCol}_r") <= col(s"${tsCol}_l") + expr(s"INTERVAL $within"))
   }
 
-  /** Idempotent keyed upsert into a parquet ledger via `foreachBatch` —
-    * the streaming version of F1's anti-join dedup: each micro-batch
-    * drops rows whose key is already in the ledger, then appends the
-    * survivors. `foreachBatch` gives at-least-once batch delivery;
-    * the anti-join makes the append idempotent under replays, which is
-    * the production contract the reference approximates with Redis
-    * SETNX. At scale the ledger read prunes on the key column
-    * (parquet min/max), so the anti-join is a broadcast of batch keys
-    * against a pruned scan, not a full-ledger shuffle.
+  /** Idempotent keyed upsert into a parquet ledger — the streaming
+    * version of F1's anti-join dedup, with the reference's two checks
+    * (the shared Redis set, then the silver ledger) mapped onto Spark:
+    *
+    *  1. [[dedupExact]] drops every key the query has already seen,
+    *     inside a micro-batch and across them (and across restarts from
+    *     its checkpoint). The state store is the Redis set.
+    *  2. A left anti-join drops keys that were in the ledger when the
+    *     query was built. The ledger's keys are snapshotted ONCE, here,
+    *     read with an explicit key schema: no micro-batch lists the
+    *     ledger or infers its footers, and a ledger with no data files
+    *     skips the join altogether. Each micro-batch still reads the
+    *     snapshot's key columns, a cost fixed by the ledger's size at
+    *     start that does not grow while the query runs.
+    *  3. `foreachBatch` appends the survivors to the ledger as parquet.
+    *
+    * Exactly-once: the state store commits with the micro-batch, so
+    * within a run a key is appended at most once. A restart from the
+    * checkpoint resumes the last committed batch's state and replays at
+    * most the uncommitted batch; whatever that batch had appended is
+    * already in the restart's snapshot, so the anti-join absorbs it.
+    * The first writer's row is the one kept.
+    *
+    * Precondition: while the query runs it is the ledger's ONLY writer.
+    * Rows another writer appends after the snapshot are invisible to
+    * both checks, so their keys can be appended a second time. Dedup
+    * state holds every distinct key the query has seen (unbounded, like
+    * [[dedupExact]]); run it under [[RocksDbStateStoreConfs]].
     */
   def upsertStream(stream: DataFrame, keyCols: Seq[String], ledgerPath: String) = {
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch.dropDuplicates(keyCols)
-        val survivors =
-          try {
-            val existing = spark.read.parquet(ledgerPath).select(
-              keyCols.map(col): _*)
-            fresh.join(existing, keyCols, "left_anti")
-          } catch {
-            case _: org.apache.spark.sql.AnalysisException => fresh // first batch
-          }
-        survivors.write.mode("append").parquet(ledgerPath)
+    val fresh = dedupExact(stream, keyCols)
+    val survivors = ledgerKeys(stream, keyCols, ledgerPath)
+      .fold(fresh)(known => fresh.join(known, keyCols, "left_anti"))
+    survivors.writeStream.outputMode("append").foreachBatch {
+      (batch: DataFrame, _: Long) => batch.write.mode("append").parquet(ledgerPath)
+    }
+  }
+
+  /** The key columns of the parquet files under `ledgerPath` now, typed as
+    * in `stream`; None when the ledger has no data files yet.
+    */
+  private def ledgerKeys(stream: DataFrame, keyCols: Seq[String],
+      ledgerPath: String): Option[DataFrame] = {
+    val spark = stream.sparkSession
+    val path = new org.apache.hadoop.fs.Path(ledgerPath)
+    if (!path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)) None
+    else {
+      val keySchema = org.apache.spark.sql.types.StructType(keyCols.map(stream.schema(_)))
+      // the file listing happens here, once; the frame keeps it
+      val keys = spark.read.schema(keySchema).parquet(ledgerPath)
+      if (keys.inputFiles.isEmpty) None else Some(keys)
     }
   }
 

@@ -15,6 +15,16 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(m: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
 
+  /** Runs `body` with `confs` set on the shared session, then restores them. */
+  private def withConfs[T](confs: Map[String, String])(body: => T): T = {
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("F3 streaming dedup: first-writer-wins across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -120,10 +130,7 @@ class StreamingSpec extends SparkSpec {
     // whole stack (provider class + changelog checkpointing + rocksdbjni)
     // actually loads and produces identical results
     implicit val sqlCtx = spark.sqlContext
-    val prev = StreamingOps.RocksDbStateStoreConfs.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    StreamingOps.RocksDbStateStoreConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConfs(StreamingOps.RocksDbStateStoreConfs) {
       val mem = MemoryStream[(String, Long)]
       val docs = mem.toDF().toDF("source", "doc_id")
       val admitted = StreamingOps.domainQuotaStream(docs, "source", "doc_id", cap = 2)
@@ -145,9 +152,6 @@ class StreamingSpec extends SparkSpec {
           .as[(String, Long)].collect().toSet
         assert(out == Set(("a", 1L), ("a", 2L), ("b", 10L), ("b", 11L)))
       } finally q.stop()
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -401,6 +405,90 @@ class StreamingSpec extends SparkSpec {
     assert(out.select("event_id").as[Long].collect().toSet == Set(1L, 2L, 3L))
     // the replayed/duplicate rows never overwrote the first writer
     assert(out.select("event_type").as[String].collect().forall(_ == "orig"))
+  }
+
+  for ((provider, confs) <- Seq("default" -> Map.empty[String, String],
+      "RocksDB" -> StreamingOps.RocksDbStateStoreConfs))
+    test(s"ledger upsert over a seeded ledger: each key once, first writer kept ($provider state store)") {
+      implicit val sqlCtx = spark.sqlContext
+      val base = java.nio.file.Files.createTempDirectory("graft_seeded").toString
+      val ledger = s"$base/ledger"
+      // rows already in the ledger before the query starts
+      Seq(Ev(1, ts(0), 1, "seed", 1.0), Ev(2, ts(0), 1, "seed", 2.0))
+        .toDF().write.parquet(ledger)
+      withConfs(confs) {
+        val mem = MemoryStream[Ev]
+        val q = StreamingOps.upsertStream(mem.toDF(), Seq("event_id"), ledger)
+          .option("checkpointLocation", s"$base/ckpt").start()
+        try {
+          // a seeded key, a fresh key and its in-batch duplicate
+          mem.addData(Ev(1, ts(1), 1, "dup", 9.0), Ev(3, ts(1), 1, "first", 3.0),
+            Ev(3, ts(2), 1, "dup", 9.0))
+          q.processAllAvailable()
+          // a cross-batch duplicate, the other seeded key, a fresh key
+          mem.addData(Ev(3, ts(3), 1, "dup", 9.0), Ev(2, ts(3), 1, "dup", 9.0),
+            Ev(4, ts(4), 2, "first", 4.0))
+          q.processAllAvailable()
+          // duplicates only: nothing to append
+          mem.addData(Ev(4, ts(5), 2, "dup", 9.0), Ev(1, ts(5), 1, "dup", 9.0))
+          q.processAllAvailable()
+          val out = spark.read.parquet(ledger).select("event_id", "event_type")
+            .as[(Long, String)].collect()
+          assert(out.map(_._1).sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+          assert(out.toMap == Map(1L -> "seed", 2L -> "seed", 3L -> "first", 4L -> "first"))
+          // one state row per distinct key the run has seen, seeded ones too
+          val state = q.lastProgress.stateOperators.head
+          assert(state.numRowsTotal == 4)
+          if (confs.nonEmpty)
+            assert(state.customMetrics.keySet.asScala.exists(_.toLowerCase.contains("rocksdb")),
+              s"no rocksdb metrics on the state operator: ${state.customMetrics.keySet}")
+        } finally q.stop()
+      }
+    }
+
+  test("ledger upsert: jobs per micro-batch stay flat as the ledger grows") {
+    implicit val sqlCtx = spark.sqlContext
+    // job count by (query id, batch id), from the local properties every
+    // micro-batch job carries
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        for {
+          props <- Option(js.properties)
+          query <- Option(props.getProperty("sql.streaming.queryId"))
+          batch <- Option(props.getProperty("streaming.sql.batchId"))
+        } jobs.merge((query, batch.toLong), 1, _ + _)
+    }
+    // listener events post asynchronously: poll until the count stops moving
+    def settled(): Unit = {
+      def total = jobs.values.asScala.sum
+      var prev = -1; var cur = total
+      while (prev != cur) { prev = cur; Thread.sleep(250); cur = total }
+    }
+    def jobsPerBatch(seeded: Boolean): Seq[Int] = {
+      val ledger = java.nio.file.Files.createTempDirectory("graft_jobs").toString + "/l"
+      if (seeded) Seq(Ev(0, ts(0), 1, "seed", 0.0)).toDF().write.parquet(ledger)
+      val mem = MemoryStream[Ev]
+      val q = StreamingOps.upsertStream(mem.toDF(), Seq("event_id"), ledger).start()
+      val batches = 6
+      try (1 to batches).foreach { b =>
+        mem.addData((1 to 8).map(i => Ev(b * 100L + i, ts(b), i, "a", 1.0)): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      settled()
+      assert(spark.read.parquet(ledger).count() == batches * 8 + (if (seeded) 1 else 0))
+      (0 until batches).map(b => jobs.getOrDefault((q.id.toString, b.toLong), 0))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // an empty ledger: the dedup shuffle and the append are one job
+      val empty = jobsPerBatch(seeded = false)
+      assert(empty.forall(_ == 1), s"jobs per batch from an empty ledger: $empty")
+      // a seeded ledger adds the snapshot join (a broadcast job), the same every batch
+      val seeded = jobsPerBatch(seeded = true)
+      assert(seeded.forall(_ == seeded.head) && seeded.head <= 2,
+        s"jobs per batch from a seeded ledger: $seeded")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("per-batch dim refresh: a dim row added mid-stream is picked up") {
