@@ -270,7 +270,7 @@ object StreamingOps {
       ledgerPath: String): Option[DataFrame] = {
     val spark = stream.sparkSession
     val path = new org.apache.hadoop.fs.Path(ledgerPath)
-    if (!path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)) None
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) None
     else {
       val keySchema = org.apache.spark.sql.types.StructType(keyCols.map(stream.schema(_)))
       // the file listing happens here, once; the frame keeps it
