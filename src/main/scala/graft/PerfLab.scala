@@ -35,8 +35,9 @@ object PerfLab {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // measurement hook (round 19): `SPARK_GRAFT_EXTRA_CONF=k=v,k=v`
-    // pins session confs — used by the SCALE.md drives to disable the
-    // size-adaptive local fast paths so the sf10 rows measure the
+    // pins session confs — the SCALE.md drives pass
+    // `spark.graft.localFastPath.enabled=false` to turn every
+    // size-adaptive local fast path off, so the sf10 rows measure the
     // DISTRIBUTED loops (the plans that run at 100 TB)
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(",")
       .filter(_.contains("=")).foreach { kv =>

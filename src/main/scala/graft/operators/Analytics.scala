@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.CacheScope
+import graft.{CacheScope, LocalFastPath}
 import graft.functions.GraftFunctions
 
 /** Gap-fill analytics (SURVEY.md §2.7): windows, top-k, sessionization,
@@ -159,41 +159,16 @@ object Analytics {
     * that appears in an edge; isolated nodes never enter and callers
     * left-join + coalesce to themselves.
     */
-  /** Size cutoff for the components LOCAL fast path (round 18 — guide
-    * §1.2/§2: the iterative loops below cost a fixed 4–6 Spark jobs per
-    * round regardless of data size, so an answer-sized edge set — the
-    * common case after near-dup verification — pays seconds of pure
-    * job-scheduling overhead for milliseconds of work). At or below the
-    * threshold the materialized edge set is collected and closed with
-    * union-find (union-by-min keeps every root the minimum member, so
-    * labels are IDENTICAL to both distributed variants' min-id fixpoint,
-    * independent of edge order); above it the audited distributed loop
-    * runs unchanged — at 100 TB a corpus-mass edge set never collects.
-    * Scale-adaptive, not local-mode-tuned: the threshold bounds the
-    * driver collect at ~2·8 bytes/edge (≤ ~8 MB at the default 500k) on
-    * ANY cluster, and `spark.graft.cc.localEdges` overrides it (0
-    * disables the fast path entirely — AnalyticsSpec pins fast == loop).
-    */
-  private def ccLocalEdgeThreshold(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.cc.localEdges")
-      .map(_.toLong).getOrElse(500000L)
-
-  /** Size cutoff shared by the OTHER iterative-graph local fast paths
-    * (round 19 — the same §1.2/§2.4 cure extended from CC to pagerank,
-    * k-core and triangle counting: each pays 1–4 fixed Spark jobs per
-    * round / join stage regardless of data size). Same scale-adaptive
-    * contract as [[ccLocalEdgeThreshold]]: the collect is bounded at
-    * ≤ ~24 bytes/edge on ANY cluster (≤ ~48 MB at the 2M default — the
-    * local engines are primitive-array O(m)-per-round loops that close a
-    * 2M-edge graph in well under a second, where each distributed round
-    * costs multiple fixed shuffles of the same data), the distributed
-    * loops run unchanged above the threshold, and
-    * `spark.graft.graph.localEdges` overrides (0 disables — the
-    * equivalence specs pin fast == loop).
-    */
-  private def graphLocalEdgeThreshold(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.graph.localEdges")
-      .map(_.toLong).getOrElse(2000000L)
+  // Local fast paths (round 18 for components, round 19 for pagerank,
+  // k-core and triangles — guide §1.2/§2.4): the iterative loops below
+  // cost a fixed 1–6 Spark jobs per round regardless of data size, so an
+  // answer-sized edge set — the common case after near-dup verification
+  // — pays seconds of pure job scheduling for milliseconds of work. When
+  // [[graft.LocalFastPath]] admits the materialized edge set (bounds
+  // `CcEdges` and `GraphEdges`), it is collected once and closed by a
+  // primitive-array in-process engine that computes the same labels,
+  // ranks or counts; above the bound the audited distributed loop runs
+  // unchanged. StarCCPropSpec and GraphLocalSpec pin fast == loop.
 
   /** Sorted distinct node ids of a (u, v) edge array — the shared
     * primitive index the local engines binary-search instead of paying
@@ -214,15 +189,12 @@ object Analytics {
     java.util.Arrays.copyOf(all, n)
   }
 
-  /** Bounded (u, v) edge collect: Some(edges) when every endpoint is
-    * non-null (a null endpoint falls through to the distributed loop,
-    * keeping its null-row semantics). */
-  private def collectEdges(df: DataFrame): Option[Array[(Long, Long)]] = {
-    val rows = df.collect()
-    if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-      Some(rows.map(r => (r.getLong(0), r.getLong(1))))
-    else None
-  }
+  /** A (u, v) edge row for the local engines; a NULL endpoint (only if
+    * a caller casts junk) is rejected, so the distributed loop keeps its
+    * null-row semantics. */
+  private def edgeRow(r: Row): Option[(Long, Long)] =
+    if (r.isNullAt(0) || r.isNullAt(1)) None
+    else Some((r.getLong(0), r.getLong(1)))
 
   /** Union-find with union-by-min over a bounded edge list: every root
     * is the smallest id of its component (attach the larger root under
@@ -272,19 +244,12 @@ object Analytics {
       col(dstCol).cast("long").as("b"))
     val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
       .distinct().persist()
-    // size-adaptive local fast path (see ccLocalEdgeThreshold): the
-    // symmetric edge set is materialized either way — one count against
-    // the pinned cache decides, and the collect is threshold-bounded
-    val threshold = ccLocalEdgeThreshold(edges)
-    if (threshold > 0 && sym.count() <= threshold) {
-      val rows = sym.collect()
-      // a NULL endpoint (possible only if a caller casts junk) keeps the
-      // old loop's null-row semantics by falling through to it
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        val collected = rows.map(r => (r.getLong(0), r.getLong(1)))
-        sym.unpersist(blocking = false)
-        return localComponentsDf(edges.sparkSession, collected)
-      }
+    // size-adaptive local fast path: the symmetric edge set is
+    // materialized either way — one count against the pinned cache
+    // decides, and the collect is bounded
+    LocalFastPath.collect(sym, LocalFastPath.CcEdges)(edgeRow).foreach { es =>
+      sym.unpersist(blocking = false)
+      return localComponentsDf(edges.sparkSession, es)
     }
     // localCheckpoint, not persist, for the per-round labeling: the
     // pointer-doubling self-join references the previous round's plan
@@ -474,21 +439,15 @@ object Analytics {
         least(col("u"), col("v")).as("v"))
       .distinct().localCheckpoint()
 
-    // size-adaptive local fast path (see ccLocalEdgeThreshold): the
-    // canonical edge set is already materialized by the checkpoint; at
-    // or below the threshold, close it with union-find and keep ONLY
-    // the final label-every-node aggregate distributed (nodes is
-    // corpus-sized; the component table is answer-sized)
-    val threshold = ccLocalEdgeThreshold(edges)
-    if (threshold > 0 && e.count() <= threshold) {
-      val rows = e.collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        val comp = localComponentsDf(edges.sparkSession,
-          rows.map(r => (r.getLong(0), r.getLong(1))))
-        return comp
-          .union(nodes.select(col("id"), col("id").as("component")))
-          .groupBy(col("id")).agg(min(col("component")).as("component"))
-      }
+    // size-adaptive local fast path: the canonical edge set is already
+    // materialized by the checkpoint; when admitted, close it with
+    // union-find and keep ONLY the final label-every-node aggregate
+    // distributed (nodes is corpus-sized; the component table is
+    // answer-sized)
+    LocalFastPath.collect(e, LocalFastPath.CcEdges)(edgeRow).foreach { es =>
+      return localComponentsDf(edges.sparkSession, es)
+        .union(nodes.select(col("id"), col("id").as("component")))
+        .groupBy(col("id")).agg(min(col("component")).as("component"))
     }
 
     def largeStar(cur: DataFrame): DataFrame = {
@@ -600,15 +559,13 @@ object Analytics {
     // distributed fixpoint at any edge order; the count runs against the
     // already-checkpointed edge state, and above the threshold the
     // audited loop below runs unchanged — at 100 TB the edge state never
-    // collects. PageRankLocalSpec pins fast == loop.
-    val grThr = graphLocalEdgeThreshold(edges)
-    if (grThr > 0 && ed.count() <= grThr) {
-      val rows = ed.select(col("u"), col("v"), col("deg")).collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))) {
-        val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        CacheScope.free(ed)
-        return localPageRankDf(edges.sparkSession, es, iters, scale, base)
-      }
+    // collects. GraphLocalSpec pins fast == loop.
+    LocalFastPath.collect(ed, LocalFastPath.GraphEdges) { r =>
+      if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) None
+      else Some((r.getLong(0), r.getLong(1), r.getLong(2)))
+    }.foreach { es =>
+      CacheScope.free(ed)
+      return localPageRankDf(edges.sparkSession, es, iters, scale, base)
     }
     var ranks = ed.select(col("u").as("node")).distinct()
       .withColumn("rank", lit(scale))
@@ -935,13 +892,9 @@ object Analytics {
       // intersection is the exact distributed computation (degree
       // orientation and intersection counts are order-free), and above
       // the threshold the audited join plan runs unchanged.
-      // TriangleLocalSpec pins fast == join plan.
-      val triThr = graphLocalEdgeThreshold(edges)
-      if (triThr > 0 && e.count() <= triThr) {
-        collectEdges(e) match {
-          case Some(es) => return localTriangleDf(edges.sparkSession, es)
-          case None => ()
-        }
+      // GraphLocalSpec pins fast == join plan.
+      LocalFastPath.collect(e, LocalFastPath.GraphEdges)(edgeRow).foreach {
+        es => return localTriangleDf(edges.sparkSession, es)
       }
       // one |V|-row degree table serves the orientation joins AND the
       // vertex count (the former separate union+distinct was a second
@@ -1209,13 +1162,10 @@ object Analytics {
     // k-core fixpoint is unique and order-independent, so the local peel
     // is label-identical; the count runs against the already-checkpointed
     // canonical edges, and above the threshold the audited loop runs
-    // unchanged. KCoreLocalSpec pins fast == loop.
-    val kcThr = graphLocalEdgeThreshold(edges)
-    if (kcThr > 0 && e.count() <= kcThr) {
-      collectEdges(e).foreach { es =>
-        CacheScope.free(e)
-        return localKCoreDf(edges.sparkSession, es, k)
-      }
+    // unchanged. GraphLocalSpec pins fast == loop.
+    LocalFastPath.collect(e, LocalFastPath.GraphEdges)(edgeRow).foreach { es =>
+      CacheScope.free(e)
+      return localKCoreDf(edges.sparkSession, es, k)
     }
     var prev = -1L
     var done = false

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.LocalFastPath
+
 /** Training-data preparation operators (builder-prompt first-class
   * additions beyond the reference inventory): the corpus-shaping steps a
   * large-scale LLM data pipeline runs between raw documents and training
@@ -470,8 +472,8 @@ object TrainPrep {
       .localCheckpoint()
     // round 19: in-process merge loop when the word table is bounded
     // (one count job against the checkpoint — the CC fast-path budget)
-    if (symbols.count() <= bpeLocalWordsMax(docs)) {
-      return pairMergeLoopLocal(collectSyms(symbols), nMerges)
+    collectSyms(symbols).foreach { rows =>
+      return pairMergeLoopLocal(rows, nMerges)
         .toDF("rank", "a", "b", "cnt")
         .select(col("rank").cast("long").as("rank"), col("a"), col("b"),
           col("cnt"))
@@ -528,11 +530,10 @@ object TrainPrep {
   // pays 2 bounded jobs PER MERGE ROUND (argmax collect + symbol-table
   // re-checkpoint) over a vocab-sized table whose per-round job
   // scheduling, not data, dominates at benchmark scale. When the
-  // checkpointed word-frequency table is at or below
-  // `spark.graft.bpe.localWords` rows (default 131072 — ≤ ~70 MB of
-  // (f, syms) rows at typical word lengths, a bounded driver transfer
-  // on ANY cluster; 0 disables), the table is collected ONCE and the
-  // loop replays in-process. Above the threshold the audited
+  // checkpointed word-frequency table is admitted by
+  // [[graft.LocalFastPath]] (bound `BpeWords`, a bounded driver
+  // transfer on ANY cluster), the table is collected ONCE and the
+  // loop replays in-process. Above the bound the audited
   // distributed loops run unchanged — a 100 TB corpus's word table
   // never collects. Exactness by construction: the INITIAL symbol
   // table is the distributed computation's own rows (collected, never
@@ -544,10 +545,6 @@ object TrainPrep {
   // real corpora and tie-heavy fixtures; the q212/q217/q220/q221
   // oracles replay every round in SQL.
   // ==========================================================================
-
-  private def bpeLocalWordsMax(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.bpe.localWords")
-      .map(_.toLong).getOrElse(131072L)
 
   /** Spark's string ordering — UTF8String.compareTo: unsigned byte-wise
     * comparison of the UTF-8 encodings. (Scala's String.compareTo is
@@ -584,11 +581,14 @@ object TrainPrep {
     acc.toArray
   }
 
-  /** Collect a checkpointed (f, syms) symbol table for the local loop. */
-  private def collectSyms(symbols: DataFrame): Array[(Long, Array[String])] = {
-    val rows = symbols.select(col("f"), col("syms")).collect()
-      .map(r => (r.getLong(0), r.getSeq[String](1).toArray))
-    graft.CacheScope.free(symbols)
+  /** The checkpointed (f, syms) symbol table collected for the local
+    * loop, its blocks then freed; None when [[graft.LocalFastPath]]
+    * sends the trainer down its distributed loop. */
+  private def collectSyms(
+      symbols: DataFrame): Option[Array[(Long, Array[String])]] = {
+    val rows = LocalFastPath.collect(symbols, LocalFastPath.BpeWords)(r =>
+      Some((r.getLong(0), r.getSeq[String](1).toArray)))
+    if (rows.isDefined) graft.CacheScope.free(symbols)
     rows
   }
 
@@ -908,8 +908,8 @@ object TrainPrep {
     var symbols = ptoks.select(col("f"), byteChars(col("pt")).as("syms"))
       .localCheckpoint()
     // round 19: in-process merge loop when the pre-token table is bounded
-    if (symbols.count() <= bpeLocalWordsMax(docs)) {
-      return pairMergeLoopLocal(collectSyms(symbols), nMerges)
+    collectSyms(symbols).foreach { rows =>
+      return pairMergeLoopLocal(rows, nMerges)
         .toDF("rank", "a", "b", "cnt")
         .select(col("rank").cast("long").as("rank"), col("a"), col("b"),
           col("cnt"))
@@ -946,115 +946,6 @@ object TrainPrep {
     merges.result()
       .toDF("rank", "a", "b", "cnt")
       .select(col("rank").cast("long").as("rank"), col("a"), col("b"), col("cnt"))
-  }
-
-  /** Batched-disjoint-merge byte-BPE trainer (round 14 — the SCALE
-    * PATH next to [[byteBpeTrain]]'s one-merge-per-round loop): each
-    * driver round computes the pair table ONCE, reads a bounded slice
-    * of its head, and greedily selects up to `batchSize` top pairs in
-    * rank order, STOPPING the round at the first pair that touches a
-    * symbol an earlier selection already touched (operand or merged
-    * output). All selected merges apply in one plan (nested folds, one
-    * checkpoint per ROUND), so an m-merge vocabulary costs ~m/batch
-    * Spark jobs instead of m sequential ones on Zipf-shaped pair
-    * tables whose head is mostly disjoint.
-    *
-    * Why STOP rather than skip-and-continue (derived, then spec-pinned):
-    * a selected pair's symbols are untouched by the round's earlier
-    * merges, so its count and greedy-leftmost application are exactly
-    * sequential's. The threats to list-equality are (1) a skipped
-    * conflicting pair that still outranks a later selection after the
-    * recount, and (2) a pair involving a just-created merged symbol -
-    * but every new pair (x,ab)/(ab,y) is bounded by an OLD conflicting
-    * pair's count (x must have preceded a; y must have followed b).
-    * Under skip semantics both threats are live even with strictly
-    * distinct counts ((a,b):100 (b,c):90 (d,e):80 - skip takes (d,e),
-    * sequential recounts (b,c) to e.g. 85 and takes it first). Under
-    * the stop rule every selection ranks ABOVE every conflicting pair,
-    * so with strictly distinct counts both threats are dominated and
-    * the merge list (counts included) PROVABLY equals
-    * [[byteBpeTrain]]'s; tied counts can still reorder via the lex
-    * tie-break (a repeated long word's internal chain is all ties -
-    * the stop rule auto-serializes the chain instead of splitting it).
-    * BpeSpec pins list-equality on a distinct-count fixture with real
-    * conflicts and batchSize-1 degeneration on a tie-heavy one; the
-    * sequential trainer remains the oracle-facing twin (q210's pair
-    * table is the shared selection criterion). Output adds the driver
-    * `round` each merge landed in: (rank, round, a, b, cnt).
-    */
-  def byteBpeTrainBatched(docs: DataFrame, textCol: String, nMerges: Int,
-      batchSize: Int = 16): DataFrame = {
-    require(nMerges >= 1 && nMerges <= 50000,
-      s"byteBpeTrainBatched: bad nMerges $nMerges")
-    require(batchSize >= 1 && batchSize <= 256,
-      s"byteBpeTrainBatched: bad batchSize $batchSize")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val ptoks = docs
-      .select(explode(gpt2PreTokens(col(textCol))).as("pt"))
-      .groupBy(col("pt")).agg(count(lit(1)).as("f"))
-    var symbols = ptoks.select(col("f"), byteChars(col("pt")).as("syms"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Int, Int, String, String, Long)]
-    var rank = 0
-    var round = 0
-    var exhausted = false
-    while (rank < nMerges && !exhausted) {
-      // bounded driver read: enough head rows that batchSize disjoint
-      // pairs are almost always found; the table itself never collects
-      val top = symbols
-        .select(col("f"), explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("l"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("r"))).as("p"))
-        .select(col("p.l").as("a"), col("p.r").as("b"), col("f"))
-        .groupBy(col("a"), col("b")).agg(sum(col("f")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(batchSize * 4).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val touched = scala.collection.mutable.Set.empty[String]
-        val selected = Seq.newBuilder[(String, String, Long)]
-        var n = 0
-        var conflicted = false
-        val want = math.min(batchSize, nMerges - rank)
-        top.iterator.takeWhile(_ => n < want && !conflicted).foreach { r =>
-          val (a, b) = (r.getString(0), r.getString(1))
-          if (touched(a) || touched(b) || touched(a + b)) conflicted = true
-          else {
-            selected += ((a, b, r.getLong(2)))
-            touched += a; touched += b; touched += (a + b)
-            n += 1
-          }
-        }
-        val sel = selected.result()
-        // one plan per ROUND: nested greedy-leftmost folds in rank
-        // order (disjointness makes the order immaterial to the result,
-        // but rank order keeps it deterministic); unique lambda names —
-        // nested HOFs must not shadow each other's variables
-        val exprStr = sel.zipWithIndex.foldLeft("syms") {
-          case (inner, ((a, b, _), k)) =>
-            s"""aggregate($inner, cast(array() as array<string>), (ac$k, x$k) ->
-               |  if(size(ac$k) > 0 and element_at(ac$k, -1) = ${sqlLit(a)}
-               |       and x$k = ${sqlLit(b)},
-               |     concat(slice(ac$k, 1, size(ac$k) - 1),
-               |            array(${sqlLit(a + b)})),
-               |     concat(ac$k, array(x$k))))""".stripMargin
-        }
-        val nextSyms = symbols.select(col("f"), expr(exprStr).as("syms"))
-          .localCheckpoint()
-        graft.CacheScope.free(symbols) // dead once nextSyms materialized (§5)
-        symbols = nextSyms
-        sel.foreach { case (a, b, cnt) =>
-          merges += ((rank, round, a, b, cnt)); rank += 1
-        }
-        round += 1
-      }
-    }
-    graft.CacheScope.free(symbols) // merge list is driver-side; symbols dead
-    merges.result()
-      .toDF("rank", "round", "a", "b", "cnt")
-      .select(col("rank").cast("long").as("rank"),
-        col("round").cast("long").as("round"), col("a"), col("b"), col("cnt"))
   }
 
   /** Tokenize ONE pre-token under a byte-level merge list — the
@@ -1201,10 +1092,10 @@ object TrainPrep {
     * replays the ENTIRE loop in SQL — pair table, unit tables, HUGEINT
     * floor score, argmax, delimited-replace merge — round by round.
     *
-    * Why there is NO batched variant (unlike [[byteBpeTrainBatched]]):
-    * BPE's criterion is the raw pair count, which for a pair
-    * conflicting with an applied merge can only FALL — that monotone
-    * domination is what makes the stop-at-first-conflict batch provably
+    * Why merges are not batched several per round: BPE's criterion is
+    * the raw pair count, which for a pair conflicting with an applied
+    * merge can only FALL — that monotone domination is what would make
+    * a stop-at-first-conflict batch of byte-BPE merges provably
     * sequential-equal. WordPiece's normalized score
     * cab/(cu(a)·cu(b)) has no such monotonicity: applying a merge that
     * consumes occurrences of `a` SHRINKS cu(a), so a conflicting
@@ -1227,8 +1118,8 @@ object TrainPrep {
       .select(col("f"), wordPieceInitSyms(col("w")).as("syms"))
       .localCheckpoint()
     // round 19: in-process merge loop when the word table is bounded
-    if (symbols.count() <= bpeLocalWordsMax(docs)) {
-      return wordPieceLoopLocal(collectSyms(symbols), nMerges)
+    collectSyms(symbols).foreach { rows =>
+      return wordPieceLoopLocal(rows, nMerges)
         .toDF("rank", "a", "b", "merged", "cab", "ca", "cb", "score_q")
         .select(col("rank").cast("long").as("rank"), col("a"), col("b"),
           col("merged"), col("cab"), col("ca"), col("cb"), col("score_q"))
@@ -2001,9 +1892,8 @@ object TrainPrep {
     // CC/graph fast-path pattern, judged REAL in r18): when the feature
     // table is provably control-plane-sized — featureHash aggregates per
     // (doc, bucket), so it holds AT MOST n·(dim+1) rows — collect it ONCE
-    // and replay every GD round in-process. The guard n·(dim+1) ≤
-    // `spark.graft.logreg.localFeats` (default 4M rows ⇒ ≤ ~96 MB
-    // collected on ANY cluster; 0 disables) is decided BEFORE anything is
+    // and replay every GD round in-process. [[graft.LocalFastPath]]
+    // admits n·(dim+1) against `LogregFeats` BEFORE anything is
     // collected, so at 100 TB (n in the billions) the audited distributed
     // loop below runs unchanged. Exactness by construction: margins,
     // sigmoid, and gradients are the same integer arithmetic over the
@@ -2013,10 +1903,8 @@ object TrainPrep {
     // bit-identical round for round (LogregLocalSpec pins fast ==
     // distributed on the real corpus; the q228/q232 oracles replay all
     // rounds).
-    val localMax = docs.sparkSession.conf
-      .getOption("spark.graft.logreg.localFeats").map(_.toLong)
-      .getOrElse(4000000L)
-    if (rounds > 0 && n <= localMax / (dim + 1L)) {
+    if (rounds > 0 && LocalFastPath.admits(docs.sparkSession,
+        n * (dim + 1L), LocalFastPath.LogregFeats)) {
       return logregTrainLocal(labels, logregFeatures(docs, idCol, textCol,
         dim), dim, rounds, lrDiv, n)
     }

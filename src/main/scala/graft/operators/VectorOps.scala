@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.LocalFastPath
 import graft.functions.GraftFunctions
 
 /** Similarity search over embedding columns (builder prompt: ANN over
@@ -620,40 +621,29 @@ object VectorOps {
   // applied to the heaviest loop in the suite: every NN-descent round is
   // ~6 fixed shuffles + an eager checkpoint job regardless of corpus
   // size, so an answer-sized vector set pays seconds of scheduling for
-  // milliseconds of arithmetic). At or below
-  // `spark.graft.nn.localVecs` (default 4096 — ≤ ~2 MB of quantized
-  // vectors collected on ANY cluster at 64 dims) the quantized corpus is
-  // collected and the ENTIRE construction (ring seeds, rounds, final
-  // scoring) replays in-process. Exactness: every dot/norm is a sum of
+  // milliseconds of arithmetic). When [[graft.LocalFastPath]] admits the
+  // corpus (bound `NnVecs`) the quantized corpus is collected and the
+  // ENTIRE construction (ring seeds, rounds, final scoring) replays
+  // in-process. Exactness: every dot/norm is a sum of
   // integer-valued products < 2^53 (the quantization contract above), so
   // Long accumulation equals Spark's double fold bit-for-bit, and the
   // single IEEE divide/sqrt per pair is the same operation in both
   // engines; ranking ties ((cosine DESC, nb ASC)) use the same total
-  // order. Above the threshold the audited distributed loop runs
-  // unchanged — at 100 TB a corpus never collects. NnLocalSpec pins
+  // order. Above the bound the audited distributed loop runs
+  // unchanged — at 100 TB a corpus never collects. GraphLocalSpec pins
   // fast == distributed on every fixture.
   // ==========================================================================
 
-  private def nnLocalThreshold(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.nn.localVecs")
-      .map(_.toLong).getOrElse(4096L)
-
-  /** Bounded collect of the quantized corpus: Some((id, v)) rows when
-    * every id and vector element is non-null (anything else falls
-    * through to the distributed path). */
+  /** The quantized corpus for an admitted size probe, or None — a null
+    * id or vector element, or duplicate ids (they would collapse in the
+    * local index, where the distributed path multiplies them through
+    * its joins) — and the distributed path runs instead. */
   private def collectQuantized(
-      base: DataFrame): Option[Array[(Long, Array[Long])]] = {
-    val rows = base.collect()
-    if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-        !r.getSeq[Any](1).contains(null))) {
-      val data = rows.map(r =>
-        (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
-      // duplicate ids would collapse in the local index — fall through
-      // to the distributed path, which multiplies them through its joins
-      if (data.iterator.map(_._1).toSet.size == data.length) Some(data)
-      else None
-    } else None
-  }
+      base: DataFrame): Option[Array[(Long, Array[Long])]] =
+    LocalFastPath.decodeAll(base) { r =>
+      if (r.isNullAt(0) || r.isNullAt(1) || r.getSeq[Any](1).contains(null)) None
+      else Some((r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
+    }.filter(data => data.iterator.map(_._1).toSet.size == data.length)
 
   /** In-process NN-descent over a bounded quantized corpus — the exact
     * construction of [[nnDescentInit]] + [[nnDescentRound]] +
@@ -930,8 +920,8 @@ object VectorOps {
       k: Int, iters: Int, nBits: Int = 4, seedMod: Int = 64): DataFrame = {
     require(k >= 1 && k <= 128, s"nnDescentGraph: bad k $k")
     require(iters >= 0 && iters <= 16, s"nnDescentGraph: bad iters $iters")
-    val thr = nnLocalThreshold(corpus)
-    if (thr > 0 && corpus.count() <= thr) {
+    if (LocalFastPath.admits(corpus.sparkSession, corpus.count(),
+        LocalFastPath.NnVecs)) {
       collectQuantized(nnBase(corpus, idCol, vecCol)).foreach { data =>
         val eng = new LocalNnDescent(data, k, nBits, seedMod)
         var g = eng.init()
@@ -981,8 +971,7 @@ object VectorOps {
     val n = base.count()
     // size-adaptive local fast path — same δ-termination loop over the
     // in-process engine (see the LocalNnDescent contract above)
-    val thr = nnLocalThreshold(corpus)
-    if (thr > 0 && n <= thr) {
+    if (LocalFastPath.admits(corpus.sparkSession, n, LocalFastPath.NnVecs)) {
       collectQuantized(base).foreach { data =>
         val eng = new LocalNnDescent(data, k, nBits, seedMod)
         val threshold = math.max(1L, (minUpdateFrac * k * n).toLong)

@@ -247,41 +247,6 @@ class BpeSpec extends SparkSpec {
       s"trained $merges\nref ${referenceByteBpe(corpus, 12)}")
   }
 
-  test("byteBpeTrainBatched ≡ sequential merge list (counts included), in far fewer rounds") {
-    // strictly-distinct pair counts WITH real conflicts: overlapping
-    // words force (t,h)/(he,r)/(e,r) to collide with the (h,e) family
-    // across rounds (the stop rule's equality precondition is distinct
-    // counts — see the operator scaladoc for why skip semantics break
-    // even then), while the m/n/o/p/q/s families keep the head of the
-    // table genuinely disjoint so rounds actually batch
-    val corpus =
-      Seq.fill(100)("he") ++ Seq.fill(50)("the") ++ Seq.fill(20)("her") ++
-        Seq.fill(9)("era") ++ Seq.fill(4)("rat") ++
-        Seq.fill(90)("mn") ++ Seq.fill(40)("op") ++ Seq.fill(17)("qs")
-    val nM = 6
-    val seqRef = referenceByteBpe(corpus, nM)
-    val batched = TrainPrep.byteBpeTrainBatched(corpus.toDF("text"), "text",
-        nM, batchSize = 4)
-      .orderBy(col("rank")).collect()
-    assert(batched.map(r => (r.getString(2), r.getString(3), r.getLong(4)))
-      .toSeq == seqRef,
-      s"batched diverged from sequential:\n${batched.toSeq}\n$seqRef")
-    // the point of batching: materially fewer driver rounds than merges
-    val rounds = batched.map(_.getLong(1)).max + 1
-    assert(rounds < nM, s"expected < $nM rounds, got $rounds")
-    info(s"$nM merges in $rounds driver rounds (batchSize 4)")
-    // batchSize 1 degenerates to the sequential trainer exactly, even
-    // on a tie-heavy corpus (emoji byte chains are all tied counts)
-    val ties = Seq(
-      "the cat the hat", "naïve naïve café", "don't don't stop",
-      "low lower 🙂 🙂 🙂", "she sells sea shells by the sea shore")
-    val one = TrainPrep.byteBpeTrainBatched(ties.toDF("text"), "text",
-        6, batchSize = 1)
-      .orderBy(col("rank")).collect()
-      .map(r => (r.getString(2), r.getString(3), r.getLong(4))).toSeq
-    assert(one == referenceByteBpe(ties, 6))
-  }
-
   test("byteBpePairCounts: the argmax IS the trainer's first merge (q210 contract)") {
     val corpus = Seq("the cat the hat", "naïve naïve café", "low low lower")
     val top = TrainPrep.byteBpePairCounts(corpus.toDF("text"), "text")

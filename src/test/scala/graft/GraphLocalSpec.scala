@@ -7,23 +7,13 @@ import graft.operators.{Analytics, VectorOps}
 
 /** Round-19 equivalence gates for the size-adaptive LOCAL fast paths
   * (pagerank / k-core / triangle count / NN-descent — the CC fast path's
-  * §1.2/§2.4 cure extended to every iterative graph operator): with the
-  * threshold conf pinned to 0 the audited distributed loops run; with
+  * §1.2/§2.4 cure extended to every iterative graph operator): with
+  * [[LocalFastPath]] off the audited distributed loops run; with
   * defaults the in-process replay runs; both must produce IDENTICAL rows
   * (including bitwise-equal doubles for NN-descent cosines).
   */
 class GraphLocalSpec extends SparkSpec {
   import spark.implicits._
-
-  private def withGraphFastPathOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.graph.localEdges", "0")
-    try body finally spark.conf.unset("spark.graft.graph.localEdges")
-  }
-
-  private def withNnFastPathOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.nn.localVecs", "0")
-    try body finally spark.conf.unset("spark.graft.nn.localVecs")
-  }
 
   private def graphFixtures: Seq[(String, Seq[(Long, Long)])] = {
     val rnd = new scala.util.Random(41)
@@ -41,7 +31,7 @@ class GraphLocalSpec extends SparkSpec {
   test("pageRank local fast path is bit-identical to the distributed rounds") {
     for ((tag, edges) <- graphFixtures; iters <- Seq(0, 1, 3, 10)) {
       val df = edges.toDF("src", "dst")
-      val slow = withGraphFastPathOff(
+      val slow = withLocalFastPathOff(
         Analytics.pageRank(df, "src", "dst", iters = iters)
           .as[(Long, Long)].collect().toSet)
       val fast = Analytics.pageRank(df, "src", "dst", iters = iters)
@@ -53,7 +43,7 @@ class GraphLocalSpec extends SparkSpec {
   test("kCore local fast path matches the distributed peel exactly") {
     for ((tag, edges) <- graphFixtures; k <- Seq(1, 2, 3, 5)) {
       val df = edges.toDF("src", "dst")
-      val slow = withGraphFastPathOff(
+      val slow = withLocalFastPathOff(
         Analytics.kCore(df, "src", "dst", k)
           .as[(Long, Long)].collect().toSet)
       val fast = Analytics.kCore(df, "src", "dst", k)
@@ -65,7 +55,7 @@ class GraphLocalSpec extends SparkSpec {
   test("triangleCount local fast path matches the distributed join plan") {
     for ((tag, edges) <- graphFixtures) {
       val df = edges.toDF("src", "dst")
-      val slow = withGraphFastPathOff(
+      val slow = withLocalFastPathOff(
         Analytics.triangleCount(df, "src", "dst")
           .as[(Long, Long, Long)].collect().toSeq)
       val fast = Analytics.triangleCount(df, "src", "dst")
@@ -83,7 +73,7 @@ class GraphLocalSpec extends SparkSpec {
   test("nnDescentGraph local fast path is bitwise-identical to the distributed loop (q205 shape)") {
     val emb = graft.sources.Ingest.table(spark, "/root/testdata/sf0.001",
       "embeddings")
-    val slow = withNnFastPathOff(nnRows(
+    val slow = withLocalFastPathOff(nnRows(
       VectorOps.nnDescentGraph(emb, "vec_id", "embedding",
         k = 20, iters = 3, nBits = 4, seedMod = 64)))
     val fast = nnRows(
@@ -100,7 +90,7 @@ class GraphLocalSpec extends SparkSpec {
   test("nnDescentGraphConverged local fast path matches rows AND round count") {
     val emb = graft.sources.Ingest.table(spark, "/root/testdata/sf0.001",
       "embeddings")
-    val (slowDf, slowRounds) = withNnFastPathOff {
+    val (slowDf, slowRounds) = withLocalFastPathOff {
       val (d, r) = VectorOps.nnDescentGraphConverged(emb, "vec_id",
         "embedding", k = 10, maxIters = 6)
       (nnRows(d), r)

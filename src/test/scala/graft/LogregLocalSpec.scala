@@ -6,25 +6,13 @@ import graft.operators.TrainPrep
 
 /** Round-19 equivalence gate for logregTrain's size-adaptive LOCAL fast
   * path (the CC/graph-tier pattern applied to the GD round loop): with
-  * `spark.graft.logreg.localFeats` pinned to 0 the audited distributed
-  * loop runs; with defaults the in-process replay runs; both must
+  * [[LocalFastPath]] off the audited distributed loop runs; with
+  * defaults the in-process replay runs; both must
   * produce bit-identical weight vectors on every fixture, including the
   * real sf0.001 corpus, duplicate label rows, and empty-text docs.
   */
 class LogregLocalSpec extends SparkSpec {
   import spark.implicits._
-
-  private def withLocalOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.logreg.localFeats", "0")
-    try body finally spark.conf.unset("spark.graft.logreg.localFeats")
-  }
-
-  // force the fast path regardless of n·(dim+1) so the comparison is
-  // never vacuously distributed-vs-distributed
-  private def withLocalForced[T](body: => T): T = {
-    spark.conf.set("spark.graft.logreg.localFeats", "1000000000")
-    try body finally spark.conf.unset("spark.graft.logreg.localFeats")
-  }
 
   test("local GD fast path is bit-identical to the distributed rounds") {
     val real = graft.sources.Ingest.table(spark, "/root/testdata/sf0.001",
@@ -43,10 +31,16 @@ class LogregLocalSpec extends SparkSpec {
         ("real-sf0.001", real, 64, 8),
         ("real-sf0.001-dim4096", real, 4096, 4),
         ("dup-ids", dupIds, 16, 32))) {
-      val slow = withLocalOff(
+      // precondition: n·(dim+1) fits the constant local bound, so the
+      // default arm really runs in-process — the comparison is never
+      // vacuously distributed-vs-distributed
+      val n = docs.count()
+      assert(n * (dim + 1L) <= LocalFastPath.LogregFeats,
+        s"logregTrain $tag: n=$n, dim=$dim exceeds the local bound")
+      val slow = withLocalFastPathOff(
         TrainPrep.logregTrain(docs, "doc_id", "text", "y", dim, rounds, 2L))
-      val fast = withLocalForced(
-        TrainPrep.logregTrain(docs, "doc_id", "text", "y", dim, rounds, 2L))
+      val fast =
+        TrainPrep.logregTrain(docs, "doc_id", "text", "y", dim, rounds, 2L)
       assert(fast == slow, s"logregTrain $tag diverges")
       assert(fast.exists(_ != 0L), s"logregTrain $tag learned nothing")
     }

@@ -36,15 +36,11 @@ class PlanFingerprintSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // Pin every size-adaptive local fast path OFF so the goldens record
-    // the DISTRIBUTED plans — the ones that run at 100 TB — not the
-    // small-data in-process shortcuts that are always active at sf0.001.
-    val fastPathConfs = Seq("spark.graft.cc.localEdges",
-      "spark.graft.graph.localEdges", "spark.graft.nn.localVecs")
-    val prevFast = fastPathConfs.map(c => c -> spark.conf.getOption(c))
-    fastPathConfs.foreach(spark.conf.set(_, "0"))
     CacheScope.auditMode.set(true)
-    try {
+    // every size-adaptive local fast path OFF so the goldens record the
+    // DISTRIBUTED plans — the ones that run at 100 TB — not the
+    // small-data in-process shortcuts that are always active at sf0.001
+    try withLocalFastPathOff {
       Queries.all.map { q =>
         val plan = q.run(spark, sfDir).queryExecution.executedPlan
         val sh = plan.collect { case e: ShuffleExchangeExec => e }.size
@@ -54,10 +50,6 @@ class PlanFingerprintSpec extends SparkSpec {
     } finally {
       CacheScope.auditMode.set(false)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      prevFast.foreach {
-        case (c, Some(v)) => spark.conf.set(c, v)
-        case (c, None)    => spark.conf.unset(c)
-      }
       spark.catalog.clearCache()
     }
   }

@@ -18,11 +18,9 @@ class StarCCPropSpec extends SparkSpec {
   private def check(edges: Seq[(Long, Long)], tag: String): Unit = {
     val df = edges.toDF("a", "b")
     // distributed loops (fast path disabled) — the 100-TB plans
-    spark.conf.set("spark.graft.cc.localEdges", "0")
-    val (prop, star) =
-      try (labels(Analytics.connectedComponents(df, "a", "b")),
-        labels(Analytics.connectedComponentsStar(df, "a", "b")))
-      finally spark.conf.unset("spark.graft.cc.localEdges")
+    val (prop, star) = withLocalFastPathOff(
+      (labels(Analytics.connectedComponents(df, "a", "b")),
+        labels(Analytics.connectedComponentsStar(df, "a", "b"))))
     assert(star == prop, s"$tag: star vs propagation labelings diverge")
     // size-adaptive union-find fast path (round 18) must be label-exact
     // against both loops
@@ -59,5 +57,26 @@ class StarCCPropSpec extends SparkSpec {
     check(dense ++ pairs, "dense+pairs")
     // self-loop-only input → empty labeling from both
     check(Seq((7L, 7L)), "self-loop-only")
+  }
+
+  test("a non-numeric endpoint casts to NULL: the fallback labels alike on and off") {
+    // "x" casts to NULL under a non-ANSI cast, so connectedComponents'
+    // fast path rejects the symmetric edge set and falls back to the
+    // loop; star CC drops the NULL edge before its fast path
+    val df = Seq(("1", "2"), ("2", "3"), ("x", "4"), ("5", "6"))
+      .toDF("a", "b")
+    def nullable(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    def both() = (nullable(Analytics.connectedComponents(df, "a", "b")),
+      nullable(Analytics.connectedComponentsStar(df, "a", "b")))
+    val ansi = "spark.sql.ansi.enabled"
+    val prevAnsi = spark.conf.getOption(ansi)
+    spark.conf.set(ansi, "false")
+    val (off, on) =
+      try (withLocalFastPathOff(both()), both())
+      finally prevAnsi.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
+    assert(on == off, "fast-path switch changes the NULL-endpoint labeling")
+    // union-find never emits a NULL id: this one proves the loop ran
+    assert(on._1.exists(_._1.isEmpty), s"no NULL-row label: ${on._1}")
   }
 }

@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainPrep
+import graft.operators.{TextOps, TrainPrep}
 
 /** Round-19 equivalence gates for the tokenizer trainers' size-adaptive
   * LOCAL merge loops (bpeTrain / byteBpeTrain / wordPieceTrain): with
-  * `spark.graft.bpe.localWords` pinned to 0 the audited distributed
-  * loops run; forced on, the in-process replay runs; both must produce
+  * [[LocalFastPath]] off the audited distributed loops run; with
+  * defaults the in-process replay runs; both must produce
   * IDENTICAL merge lists (ranks, symbols, counts, scores) on the real
   * sf0.001 corpus, tie-heavy fixtures, and non-ASCII symbols where
   * Spark's binary UTF-8 ordering differs from Java's UTF-16 order.
@@ -16,14 +16,14 @@ import graft.operators.TrainPrep
 class TrainerLocalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withLocalOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.bpe.localWords", "0")
-    try body finally spark.conf.unset("spark.graft.bpe.localWords")
-  }
-
-  private def withLocalForced[T](body: => T): T = {
-    spark.conf.set("spark.graft.bpe.localWords", "1000000000")
-    try body finally spark.conf.unset("spark.graft.bpe.localWords")
+  // precondition: the fixture's word table (keyed by `word`, as the
+  // trainer keys it) fits the constant local bound, so the default arm
+  // really runs in-process — never distributed against distributed
+  private def assertLocalSized(tag: String, docs: DataFrame,
+      word: Column): Unit = {
+    val rows = docs.select(explode(word).as("w")).distinct().count()
+    assert(rows <= LocalFastPath.BpeWords,
+      s"$tag: $rows-row word table exceeds the local bound")
   }
 
   private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
@@ -48,30 +48,33 @@ class TrainerLocalSpec extends SparkSpec {
 
   test("bpeTrain local merge loop equals the distributed loop") {
     for ((tag, docs) <- fixtures; nM <- Seq(1, 6, 12)) {
-      val slow = withLocalOff(rowsOf(
+      assertLocalSized(tag, docs, split(lower(col("text")), "\\s+"))
+      val slow = withLocalFastPathOff(rowsOf(
         TrainPrep.bpeTrain(docs, "text", nM).orderBy(col("rank"))))
-      val fast = withLocalForced(rowsOf(
-        TrainPrep.bpeTrain(docs, "text", nM).orderBy(col("rank"))))
+      val fast = rowsOf(
+        TrainPrep.bpeTrain(docs, "text", nM).orderBy(col("rank")))
       assert(fast == slow, s"bpeTrain $tag nM=$nM diverges")
     }
   }
 
   test("byteBpeTrain local merge loop equals the distributed loop") {
     for ((tag, docs) <- fixtures; nM <- Seq(1, 6)) {
-      val slow = withLocalOff(rowsOf(
+      assertLocalSized(tag, docs, TrainPrep.gpt2PreTokens(col("text")))
+      val slow = withLocalFastPathOff(rowsOf(
         TrainPrep.byteBpeTrain(docs, "text", nM).orderBy(col("rank"))))
-      val fast = withLocalForced(rowsOf(
-        TrainPrep.byteBpeTrain(docs, "text", nM).orderBy(col("rank"))))
+      val fast = rowsOf(
+        TrainPrep.byteBpeTrain(docs, "text", nM).orderBy(col("rank")))
       assert(fast == slow, s"byteBpeTrain $tag nM=$nM diverges")
     }
   }
 
   test("wordPieceTrain local merge loop equals the distributed loop") {
     for ((tag, docs) <- fixtures; nM <- Seq(1, 6)) {
-      val slow = withLocalOff(rowsOf(
+      assertLocalSized(tag, docs, TextOps.tokens(col("text")))
+      val slow = withLocalFastPathOff(rowsOf(
         TrainPrep.wordPieceTrain(docs, "text", nM).orderBy(col("rank"))))
-      val fast = withLocalForced(rowsOf(
-        TrainPrep.wordPieceTrain(docs, "text", nM).orderBy(col("rank"))))
+      val fast = rowsOf(
+        TrainPrep.wordPieceTrain(docs, "text", nM).orderBy(col("rank")))
       assert(fast == slow, s"wordPieceTrain $tag nM=$nM diverges")
     }
   }
