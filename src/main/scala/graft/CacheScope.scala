@@ -72,12 +72,13 @@ object CacheScope {
 
   /** Test-only escape hatch: while set, pins are lazy `persist()`s and
     * `scoped` skips the materializing checkpoint AND the release, so
-    * `queryExecution` on the result exposes the full interior plan
-    * (PlanAuditSpec's structural sweeps and PlanFingerprintSpec's
-    * exchange counts need the real join/window tree, which a checkpoint
-    * scan hides). The deliberately-leaked pins are the auditing test's
-    * to clear (`spark.catalog.clearCache()`). Never set in production
-    * code.
+    * `queryExecution` on the result exposes the full interior plan. The
+    * test-side registry planning pass (`RegistryPlans`, read by
+    * PlanAuditSpec's structural audits and PlanFingerprintSpec's
+    * exchange counts) and `graft.Explain` set it: they need the real
+    * join/window tree, which a checkpoint scan hides. The
+    * deliberately-leaked pins are the setter's to clear
+    * (`spark.catalog.clearCache()`). Never set on a production path.
     */
   private[graft] val auditMode = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE

@@ -263,7 +263,9 @@ object Analytics {
     var iter = 0
     var done = false
     while (!done && iter < maxIters) {
-      val nbr = sym.join(labels, sym("b") === labels("id"))
+      // a NULL id takes no neighbour's label and keeps its own NULL, as
+      // in connectedComponentsStar, which drops NULL edges
+      val nbr = sym.join(labels, sym("b") === labels("id") && sym("a").isNotNull)
         .select(sym("a").as("id"), labels("component").as("component"))
       // pointer doubling: jump to the label's label in the same round
       val l2 = labels.select(col("id").as("pid"), col("component").as("pcomp"))

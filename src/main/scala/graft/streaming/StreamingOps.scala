@@ -83,36 +83,6 @@ object StreamingOps {
       keyCols: Seq[String]): DataFrame =
     stream.join(dim, keyCols, "left")
 
-  /** Streaming robots.txt admission — the crawl-frontier gate as a
-    * stream-static broadcast join, the stateless twin of
-    * `TextOps.robotsFilter` (q155). The static side pre-aggregates the
-    * parsed rules into ONE array-valued row per domain, so the
-    * per-URL longest-prefix decision is a pure array fold
-    * (`array_max(filter(...))` over (len, is_allow, prefix) structs —
-    * the SAME lexicographic key the batch operator maxes over, so
-    * decisions are identical by construction; StreamingSpec asserts
-    * it). No state store, no watermark: robots semantics are
-    * memoryless per URL, which is why this runs at ingest rate — the
-    * rules table is crawl-config-sized and broadcasts.
-    */
-  def robotsAdmitStream(urls: DataFrame, domainCol: String, pathCol: String,
-      robots: DataFrame, robotsDomainCol: String, contentCol: String): DataFrame = {
-    val rules = graft.operators.TextOps
-      .parseRobots(robots, robotsDomainCol, contentCol)
-      .groupBy(col("domain"))
-      .agg(collect_list(
-        struct(col("prefix_len"), col("is_allow"), col("prefix"))).as("__rules"))
-      .withColumnRenamed("domain", "__rdomain")
-    urls
-      .join(broadcast(rules), urls(domainCol) === rules("__rdomain"), "left")
-      .withColumn("__best", array_max(filter(col("__rules"),
-        r => col(pathCol).startsWith(r.getField("prefix")))))
-      .withColumn("allowed", coalesce(col("__best.is_allow"), lit(true)))
-      .withColumn("matched_prefix", col("__best.prefix"))
-      .withColumn("matched_len", col("__best.prefix_len"))
-      .drop("__rdomain", "__rules", "__best")
-  }
-
   /** Stream enrichment with PER-BATCH dimension refresh: the dim frame is
     * rebuilt from `dimPath` inside `foreachBatch`, so its file listing
     * re-resolves every micro-batch and rows added mid-stream are joined
@@ -201,28 +171,6 @@ object StreamingOps {
             out.result().iterator
           }
       }
-  }
-
-  /** Stream-stream interval join: match each left event to right events
-    * for the same user within `[0, within]` AFTER the left event (the
-    * view→click attribution shape). Both sides carry watermarks and the
-    * join condition bounds event-time distance, so the state store holds
-    * only `watermark + within` of history per side — bounded state, the
-    * only stream-stream join shape that survives an unbounded run.
-    *
-    * Column names are suffixed `_l`/`_r` so callers can join a stream to
-    * itself (the common attribution case) without ambiguity.
-    */
-  def intervalJoin(left: DataFrame, right: DataFrame, keyCol: String,
-      tsCol: String, within: String, watermark: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark(tsCol, watermark)
-      .select(left.columns.map(c => col(c).as(s"${c}_l")): _*)
-    val r = right.withWatermark(tsCol, watermark)
-      .select(right.columns.map(c => col(c).as(s"${c}_r")): _*)
-    l.join(r,
-      col(s"${keyCol}_l") === col(s"${keyCol}_r") &&
-        col(s"${tsCol}_r") >= col(s"${tsCol}_l") &&
-        col(s"${tsCol}_r") <= col(s"${tsCol}_l") + expr(s"INTERVAL $within"))
   }
 
   /** Idempotent keyed upsert into a parquet ledger — the streaming
@@ -566,17 +514,6 @@ object StreamingOps {
     val s = (BigDecimal(p.toString) * 100).underlying.stripTrailingZeros.toPlainString
     "p" + s.replace(".", "_").replace("-", "m")
   }
-
-  /** Session windows per user: built-in `session_window` with a gap —
-    * the streaming twin of the batch sessionize query.
-    */
-  def sessionCounts(events: DataFrame, tsCol: String, gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("user_id"), col("n_events"))
 
   /** Streaming media-decode health monitor (round 10): run the REAL
     * [[graft.operators.Multimodal.decodeMedia]] dispatcher on a binary

@@ -5,6 +5,14 @@ import org.apache.spark.sql.functions._
 /** Physical-plan audits: the scale claims the operator docs make, asserted
   * against the actual Catalyst output so regressions surface as test
   * failures rather than 100-TB incidents.
+  *
+  * The registry-wide audits (plan hygiene, the ≤1-row aggregate join,
+  * q84's broadcasts, q163's window keys) read the one planning pass in
+  * [[RegistryPlans]], which PlanFingerprintSpec reads too. That pass
+  * plans with every LocalFastPath site off, so these audits check the
+  * distributed plans: at 100 TB every fast-path site is over its bound,
+  * and those are the plans that run. `sparkPlan` does not depend on AQE,
+  * so the pass's AQE-off setting does not change what they see.
   */
 class PlanAuditSpec extends SparkSpec {
 
@@ -21,32 +29,15 @@ class PlanAuditSpec extends SparkSpec {
   private val partitionlessWindowExempt =
     Set("q88_rolling_dau", "q168_compaction_plan")
 
-  /** Run `body` with CacheScope's materializing checkpoint disabled, so
-    * `queryExecution` on scoped operators (triangleCount, pareto, ewma,
-    * stableRowIds, the shingle bases, q00's ledger) exposes the full
-    * interior plan instead of a checkpoint scan; the pins scoped
-    * operators would normally release are cleared afterwards. */
-  private def auditingPlans[A](body: => A): A =
-    try { CacheScope.auditMode.set(true); body }
-    finally { CacheScope.auditMode.set(false); spark.catalog.clearCache() }
-
   test("plan hygiene: no CartesianProduct, no partitionless WindowExec") {
     // crossJoin against a broadcast side plans BroadcastNestedLoopJoin
     // (bounded: |small| × partition) — an unhinted CartesianProduct is the
     // O(n²) shuffle explosion no registered query should ever produce.
-    // Both checks share one planning pass over all registered queries.
-    import org.apache.spark.sql.execution.window.WindowExec
-    auditingPlans {
-      Queries.all.foreach { q =>
-        val plan = q.run(spark, sfDir).queryExecution.sparkPlan
-        assert(!plan.toString.contains("CartesianProduct"),
-          s"${q.name} plans a CartesianProduct:\n$plan")
-        if (!partitionlessWindowExempt(q.name)) {
-          val bad = plan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
-          assert(bad.isEmpty,
-            s"${q.name} plans a partitionless WindowExec (single-task global sort):\n$plan")
-        }
-      }
+    RegistryPlans.all.foreach { q =>
+      assert(!q.cartesian, s"${q.name} plans a CartesianProduct:\n${q.plan}")
+      if (!partitionlessWindowExempt(q.name))
+        assert(!q.windowKeys.contains(""),
+          s"${q.name} plans a partitionless WindowExec (single-task global sort):\n${q.plan}")
     }
   }
 
@@ -54,36 +45,17 @@ class PlanAuditSpec extends SparkSpec {
     // A no-grouping aggregate is ≤ 1 row by construction; if it feeds a
     // join side (through narrow operators only — an explode could fan it
     // out again), broadcasting is strictly better than shuffling the big
-    // side. VERDICT r6 task 5's third structural check.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec}
-    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
-    val narrow = Set("ProjectExec", "FilterExec", "SortExec",
-      "ShuffleExchangeExec", "CoalesceExec", "InputAdapter")
-    def tinyAggSide(p: SparkPlan): Boolean = p match {
-      case a: BaseAggregateExec => a.groupingExpressions.isEmpty
-      case _ if p.children.size == 1 && narrow(p.getClass.getSimpleName) =>
-        tinyAggSide(p.children.head)
-      case _ => false
-    }
-    auditingPlans {
-      Queries.all.foreach { q =>
-        val plan = q.run(spark, sfDir).queryExecution.sparkPlan
-        val bad = plan.collect {
-          case j: SortMergeJoinExec if tinyAggSide(j.left) || tinyAggSide(j.right) => j
-          case j: ShuffledHashJoinExec if tinyAggSide(j.left) || tinyAggSide(j.right) => j
-        }
-        assert(bad.isEmpty,
-          s"${q.name} shuffle-joins a ≤1-row global-aggregate side (broadcast it):\n$plan")
-      }
+    // side. VERDICT r6 task 5's third structural check; the side walk is
+    // RegistryPlans.tinyAggSide.
+    RegistryPlans.all.foreach { q =>
+      assert(!q.tinyAggShuffleJoin,
+        s"${q.name} shuffle-joins a ≤1-row global-aggregate side (broadcast it):\n${q.plan}")
     }
   }
 
   test("star join broadcasts every dimension (q84)") {
-    val plan = Queries.all.find(_.name == "q84_star_revenue").get
-      .run(spark, sfDir).queryExecution.sparkPlan.toString
-    val broadcasts = "BroadcastHashJoin".r.findAllIn(plan).size
-    assert(broadcasts >= 4, s"expected >=4 broadcast joins, got $broadcasts:\n$plan")
+    val broadcasts = RegistryPlans("q84_star_revenue").broadcastJoins
+    assert(broadcasts >= 4, s"expected >=4 broadcast joins, got $broadcasts")
   }
 
   test("column pruning reaches the parquet scan through the ingest fan-out") {
@@ -98,12 +70,6 @@ class PlanAuditSpec extends SparkSpec {
       s"scan reads pruned columns: $readSchema")
   }
 
-  private def withBroadcastThreshold[A](value: String)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try { spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value); body }
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("pageRank rank-side join is size-aware: no broadcast past threshold (q80)") {
     import graft.operators.Analytics
     import spark.implicits._
@@ -112,7 +78,7 @@ class PlanAuditSpec extends SparkSpec {
     val ed = Analytics.pageRankEdgeState(edges)
     val ranks = ed.select(col("u").as("node")).distinct()
       .withColumn("rank", lit(1000000000L))
-    withBroadcastThreshold("-1") {
+    SparkSpec.withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // past the threshold (disabled ⇒ everything is past it) the rank
       // side must shuffle-join — an unconditional broadcast() was the
       // 100×-scale driver-OOM hazard flagged in round 4
@@ -144,7 +110,7 @@ class PlanAuditSpec extends SparkSpec {
   test("exact TF-IDF pair join carries no forced broadcast (q43)") {
     import graft.operators.Similarity
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    withBroadcastThreshold("-1") {
+    SparkSpec.withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (pairs, vecs) = Similarity.exactTfidfCosinePairsImpl(
         docs, "doc_id", "text", "source", threshold = 0.8)
       try {
@@ -167,9 +133,7 @@ class PlanAuditSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    SparkSpec.withConfs(confs: _*) {
       // payload must be per-row distinct — a constant pad would compress
       // to nothing in the shuffle and the hot partition would never trip
       // the byte threshold
@@ -184,9 +148,6 @@ class PlanAuditSpec extends SparkSpec {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE did not split the hot partition:\n$finalPlan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -273,17 +234,11 @@ class PlanAuditSpec extends SparkSpec {
     // partial-aggregating groupBy + join-back; the only windows allowed on
     // this path are the per-document interval sweeps (bounded by doc
     // length by construction).
-    import org.apache.spark.sql.execution.window.WindowExec
-    auditingPlans {
-      val q = Queries.all.find(_.name == "q163_substring_dedup").get
-      val plan = q.run(spark, sfDir).queryExecution.sparkPlan
-      val wins = plan.collect { case w: WindowExec => w }
-      assert(wins.nonEmpty, "q163 lost its per-doc interval-merge window")
-      wins.foreach { w =>
-        val keys = w.partitionSpec.map(_.toString).mkString(",")
-        assert(keys.contains("doc_id") && !keys.contains("gram"),
-          s"q163 windows on a non-doc key (hot-gram skew):\n  keys=$keys\n$plan")
-      }
+    val wins = RegistryPlans("q163_substring_dedup").windowKeys
+    assert(wins.nonEmpty, "q163 lost its per-doc interval-merge window")
+    wins.foreach { keys =>
+      assert(keys.contains("doc_id") && !keys.contains("gram"),
+        s"q163 windows on a non-doc key (hot-gram skew):\n  keys=$keys")
     }
   }
 }

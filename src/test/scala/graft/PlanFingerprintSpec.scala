@@ -14,13 +14,16 @@ import scala.jdk.CollectionConverters._
   * landing unnoticed; this locks in the round-3→8 plan work
   * permanently.
   *
-  * Protocol: fingerprints are taken at sf0.001 with AQE OFF (the gate
-  * pins the STATIC plan Catalyst produces — AQE's runtime rewrites are
-  * measured by Bench, not asserted here), shuffle.partitions as in
-  * SparkSpec, default broadcast threshold, and CacheScope audit mode on
-  * so scoped operators expose their interior plans. `ReusedExchange`
-  * nodes deliberately do not count — reuse is the optimization, not a
-  * new shuffle.
+  * Protocol: the counts come from the `executedPlan`s of the one
+  * registry planning pass that PlanAuditSpec also reads
+  * ([[RegistryPlans]]): sf0.001, AQE OFF (the gate pins the STATIC plan
+  * Catalyst produces — AQE's runtime rewrites are measured by Bench, not
+  * asserted here), every LocalFastPath site off (the distributed plans
+  * that run at 100 TB, not the in-process shortcuts that are always
+  * taken at sf0.001), shuffle.partitions as in SparkSpec, default
+  * broadcast threshold, and CacheScope audit mode on so scoped operators
+  * expose their interior plans. `ReusedExchange` nodes deliberately do
+  * not count — reuse is the optimization, not a new shuffle.
   *
   * After an INTENTIONAL plan change, regenerate with:
   *   SPARK_GRAFT_REGEN_FINGERPRINTS=1 sbt 'testOnly graft.PlanFingerprintSpec'
@@ -29,33 +32,10 @@ import scala.jdk.CollectionConverters._
   */
 class PlanFingerprintSpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
   private val goldenPath = Paths.get("src/test/resources/plan_fingerprints.tsv")
 
-  private def currentFingerprints(): Seq[(String, Int, Int)] = {
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    CacheScope.auditMode.set(true)
-    // every size-adaptive local fast path OFF so the goldens record the
-    // DISTRIBUTED plans — the ones that run at 100 TB — not the
-    // small-data in-process shortcuts that are always active at sf0.001
-    try withLocalFastPathOff {
-      Queries.all.map { q =>
-        val plan = q.run(spark, sfDir).queryExecution.executedPlan
-        val sh = plan.collect { case e: ShuffleExchangeExec => e }.size
-        val bc = plan.collect { case e: BroadcastExchangeExec => e }.size
-        (q.name, sh, bc)
-      }
-    } finally {
-      CacheScope.auditMode.set(false)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.catalog.clearCache()
-    }
-  }
-
   test("every query's shuffle/broadcast count matches the golden fingerprint") {
-    val current = currentFingerprints()
+    val current = RegistryPlans.all.map(q => (q.name, q.shuffles, q.broadcasts))
     if (sys.env.contains("SPARK_GRAFT_REGEN_FINGERPRINTS")) {
       val body = ("# query\tshuffles\tbroadcasts" +:
         current.map { case (n, s, b) => s"$n\t$s\t$b" }).mkString("", "\n", "\n")

@@ -13,13 +13,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Run `body` with every size-adaptive local fast path off, so the
     * operators run their distributed loops (the plans that run at
     * 100 TB); the previous setting is restored afterwards. */
-  def withLocalFastPathOff[T](body: => T): T = {
-    val prev = spark.conf.getOption(LocalFastPath.EnabledConf)
-    spark.conf.set(LocalFastPath.EnabledConf, "false")
-    try body
-    finally prev.fold(spark.conf.unset(LocalFastPath.EnabledConf))(
-      spark.conf.set(LocalFastPath.EnabledConf, _))
-  }
+  def withLocalFastPathOff[T](body: => T): T =
+    SparkSpec.withConfs(LocalFastPath.EnabledConf -> "false")(body)
 }
 
 object SparkSpec {
@@ -33,5 +28,15 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Run `body` with the given session confs set; each previous value
+    * (or its absence) is restored afterwards. */
+  def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val conf = session.conf
+    val prev = confs.map { case (k, _) => k -> conf.getOption(k) }
+    confs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
   }
 }

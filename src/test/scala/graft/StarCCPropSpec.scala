@@ -76,6 +76,8 @@ class StarCCPropSpec extends SparkSpec {
       try (withLocalFastPathOff(both()), both())
       finally prevAnsi.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
     assert(on == off, "fast-path switch changes the NULL-endpoint labeling")
+    // both variants label the NULL id NULL: no neighbour's label reaches it
+    assert(on._1 == on._2, s"propagation ${on._1} vs star ${on._2} on a NULL endpoint")
     // union-find never emits a NULL id: this one proves the loop ran
     assert(on._1.exists(_._1.isEmpty), s"no NULL-row label: ${on._1}")
   }

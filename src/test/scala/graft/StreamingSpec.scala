@@ -15,16 +15,6 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(m: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
 
-  /** Runs `body` with `confs` set on the shared session, then restores them. */
-  private def withConfs[T](confs: Map[String, String])(body: => T): T = {
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("F3 streaming dedup: first-writer-wins across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -130,7 +120,7 @@ class StreamingSpec extends SparkSpec {
     // whole stack (provider class + changelog checkpointing + rocksdbjni)
     // actually loads and produces identical results
     implicit val sqlCtx = spark.sqlContext
-    withConfs(StreamingOps.RocksDbStateStoreConfs) {
+    SparkSpec.withConfs(StreamingOps.RocksDbStateStoreConfs.toSeq: _*) {
       val mem = MemoryStream[(String, Long)]
       val docs = mem.toDF().toDF("source", "doc_id")
       val admitted = StreamingOps.domainQuotaStream(docs, "source", "doc_id", cap = 2)
@@ -324,27 +314,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-stream interval join: right events within the window only") {
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    val joined = StreamingOps.intervalJoin(
-      views.toDF(), clicks.toDF(), "user_id", "ts", within = "10 minutes")
-    val q = joined.writeStream.format("memory").queryName("ij_out")
-      .outputMode("append").start()
-    try {
-      views.addData(Ev(1, ts(0), 7, "view", 0.0), Ev(2, ts(0), 8, "view", 0.0))
-      clicks.addData(
-        Ev(10, ts(5), 7, "click", 1.0),   // 5 min after view → match
-        Ev(11, ts(20), 7, "click", 1.0),  // 20 min after → outside window
-        Ev(12, ts(5), 9, "click", 1.0))   // no matching user
-      q.processAllAvailable()
-      val out = spark.table("ij_out").select("event_id_l", "event_id_r")
-        .as[(Long, Long)].collect().toSet
-      assert(out == Set((1L, 10L)))
-    } finally q.stop()
-  }
-
   test("foreachBatch ledger upsert: appends only unseen keys across batches") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_ledger").toString + "/t"
@@ -416,7 +385,7 @@ class StreamingSpec extends SparkSpec {
       // rows already in the ledger before the query starts
       Seq(Ev(1, ts(0), 1, "seed", 1.0), Ev(2, ts(0), 1, "seed", 2.0))
         .toDF().write.parquet(ledger)
-      withConfs(confs) {
+      SparkSpec.withConfs(confs.toSeq: _*) {
         val mem = MemoryStream[Ev]
         val q = StreamingOps.upsertStream(mem.toDF(), Seq("event_id"), ledger)
           .option("checkpointLocation", s"$base/ckpt").start()
@@ -514,23 +483,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("session windows close after the gap") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val sessions = StreamingOps.sessionCounts(mem.toDF(), "ts", "30 minutes", "2 hours")
-    val q = sessions.writeStream.format("memory").queryName("sess_out")
-      .outputMode("complete").start()
-    try {
-      // two bursts 40 min apart → two sessions for user 1
-      mem.addData(
-        Ev(1, ts(0), 1, "a", 1.0), Ev(2, ts(5), 1, "a", 1.0),
-        Ev(3, ts(50), 1, "a", 1.0))
-      q.processAllAvailable()
-      val n = spark.table("sess_out").count()
-      assert(n == 2)
-    } finally q.stop()
-  }
-
   test("stream-static enrichment joins the dim per micro-batch, left-preserving") {
     implicit val sqlCtx = spark.sqlContext
     val dim = Seq((7L, "gold"), (8L, "basic")).toDF("user_id", "tier")
@@ -547,44 +499,6 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, String)].collect().toMap
       // matched rows carry the dim attribute; unmatched (9) survives with null
       assert(out == Map(1L -> "gold", 2L -> null, 3L -> "basic"))
-    } finally q.stop()
-  }
-
-  test("streaming robots admission matches the batch filter decision-for-decision") {
-    import graft.operators.TextOps
-    implicit val sqlCtx = spark.sqlContext
-    val robots = Seq(
-      ("a.com", "User-agent: *\nDisallow: /private/\nAllow: /private/pub/"),
-      ("b.com", "User-agent: *\nDisallow: /")).toDF("domain", "robots_txt")
-    val urlRows = Seq(
-      (1L, "a.com", "/private/x"), (2L, "a.com", "/private/pub/ok"),
-      (3L, "a.com", "/open"), (4L, "b.com", "/anything"),
-      (5L, "nowhere.com", "/x"))
-    val mem = MemoryStream[(Long, String, String)]
-    val admitted = StreamingOps.robotsAdmitStream(
-      mem.toDF().toDF("id", "domain", "path"), "domain", "path",
-      robots, "domain", "robots_txt")
-    val q = admitted.writeStream.format("memory").queryName("robots_out")
-      .outputMode("append").start()
-    try {
-      mem.addData(urlRows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(urlRows.drop(2): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("robots_out")
-        .select("id", "allowed", "matched_prefix")
-        .as[(Long, Boolean, Option[String])].collect()
-        .map { case (k, a, p) => k -> ((a, p)) }.toMap
-      val batch = TextOps.robotsFilter(
-          urlRows.toDF("id", "domain", "path"), "id", "domain", "path",
-          robots, "domain", "robots_txt")
-        .select("id", "allowed", "matched_prefix")
-        .as[(Long, Boolean, Option[String])].collect()
-        .map { case (k, a, p) => k -> ((a, p)) }.toMap
-      assert(streamed == batch)
-      assert(streamed(1L) == ((false, Some("/private/"))))
-      assert(streamed(2L) == ((true, Some("/private/pub/"))))
-      assert(streamed(5L) == ((true, None)))
     } finally q.stop()
   }
 

@@ -299,11 +299,17 @@ class VectorOpsSpec extends SparkSpec {
         .mapValues(_.sortBy(r => (-r._3, r._2)).map(r => (r._2, r._3)).toSeq)
         .toMap
     }
+    // each round reads its input graph several times: the checkpoints
+    // truncate lineage, so later rounds and every ranked() call do not
+    // re-compute all earlier rounds
     val init = VectorOps.nnDescentInit(emb, "vec_id", "embedding", k = 20,
-      nBits = 4, seedMod = 64)
+      nBits = 4, seedMod = 64).localCheckpoint()
     val r1 = VectorOps.nnDescentRound(emb, "vec_id", "embedding", init, k = 20)
+      .localCheckpoint()
     val r2 = VectorOps.nnDescentRound(emb, "vec_id", "embedding", r1, k = 20)
+      .localCheckpoint()
     val r3 = VectorOps.nnDescentRound(emb, "vec_id", "embedding", r2, k = 20)
+      .localCheckpoint()
     val (g0, g1, g2, g3) = (ranked(init), ranked(r1), ranked(r2), ranked(r3))
     // each round re-ranks a SUPERSET of the previous edges, so the j-th
     // best cosine per node can only improve — an exact invariant
@@ -338,6 +344,7 @@ class VectorOpsSpec extends SparkSpec {
     val initRecall = g0.map { case (id, ns) =>
       ns.take(10).map(_._1).toSet.intersect(brute(id)).size.toDouble / 10 }
     info(f"init-only recall@10: ${initRecall.sum / initRecall.size}%.3f")
+    Seq(init, r1, r2, r3).foreach(CacheScope.free)
   }
 
   test("nnDescentGraphConverged: delta termination converges and matches fixed-round recall") {
