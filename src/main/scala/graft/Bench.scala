@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import scala.collection.mutable
 
 /** Benchmark main (driver-run per round → BENCH_r{N}.json).
@@ -133,7 +131,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val budget = sys.env.getOrElse("SPARK_GRAFT_TIME_BUDGET", "1500").toDouble
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_local_latest.json")
     // optional comma-separated name filter for isolated perf work, e.g.
@@ -149,14 +146,7 @@ object Bench {
     // explicit SPARK_GRAFT_REPS always wins.
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt.max(1))
       .getOrElse(if (suite.size > 160) 2 else 3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-bench")
     // ERROR, not WARN: the headline JSON must land inside the driver's
     // 2000-char output tail, so routine WARN chatter after the last
     // print is budget spent against the parse window
@@ -257,19 +247,11 @@ object Bench {
             // failed queries record the sentinel -1, never a healthy-looking
             // near-zero elapsed time
             recorded(q.name) += (if (ok) (System.nanoTime() - qt0) / 1e9 else -1.0)
-            // UNTIMED hygiene (round 19, guide §5): the result is fully
-            // materialized into the noop sink, so any still-persisted RDD
-            // is a dead operator-RESULT checkpoint (CacheScope.scoped
-            // outputs, the star CC loop's final round …) that only the
-            // GC-lazy ContextCleaner would free. Round 18's driver run
-            // measured the cost of NOT doing this: rep 2 ran 3–8× slower
-            // than rep 1 on the artifact tier and +27% suite-wide from
-            // accumulated block-manager state squeezing execution memory.
-            // Released OUTSIDE the timed region: every rep of every query
-            // still computes from the parquet inputs, it just starts from
-            // the same storage state the first one did.
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
+            // UNTIMED hygiene: dead result checkpoints are released
+            // OUTSIDE the timed region (round 18: +27% suite-wide without
+            // it), so every rep of every query computes from the parquet
+            // inputs starting from the same storage state the first did.
+            CacheScope.freeAll(spark)
             emit(finalLine = false)
           }
         }

@@ -133,4 +133,16 @@ object CacheScope {
       case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** End-of-query sweep for the mains: once a query's result is fully
+    * written, any RDD still persisted is a dead operator-result
+    * checkpoint (a [[scoped]] output, the star CC loop's final round …)
+    * that only the ContextCleaner would eventually free. Across a
+    * registry run that accumulation squeezes execution memory (round 18:
+    * rep 2 ran 3–8× slower than rep 1 on the artifact tier), so release
+    * them before the next query. Call it outside any timed region.
+    */
+  def freeAll(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up derivation for the 10× rehearsal
@@ -41,18 +41,12 @@ object DeriveScale {
     val dst = args.drop(1).headOption.getOrElse("/root/repo/scratch/sf1")
     val copies = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     require(copies >= 1, s"copies must be >= 1, got $copies")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-derive-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts has drifted between TIMESTAMP(NANOS) and timestamp[us]
-      // across driver rounds; keep the nanos conf so a NANOS fixture is
-      // copied as BIGINT (exactly how Ingest.events reads it) — for
-      // timestamp[us] data it is a no-op and the copy round-trips as-is
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-derive-scale")
+    // events.ts has drifted between TIMESTAMP(NANOS) and timestamp[us]
+    // across driver rounds; keep the nanos conf so a NANOS fixture is
+    // copied as BIGINT (exactly how Ingest.events reads it) — for
+    // timestamp[us] data it is a no-op and the copy round-trips as-is
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sparkContext.setLogLevel("WARN")
 
     val abc = "abcdefghijklmnopqrstuvwxyz"

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection: `runMain graft.Explain [sfDir] [queryName ...]`.
   * Prints the formatted physical plan per query — the review loop for
   * scan pruning (PushedFilters/ReadSchema), join strategy (broadcast vs
   * SMJ), and WholeStageCodegen coverage.
   *
-  * `SPARK_GRAFT_PLAN_DIR`: also write each plan to `<dir>/<query>.txt`
-  * (the r18 optimization-evidence capture).
   * `SPARK_GRAFT_PLAN_AUDIT=1`: flip [[CacheScope.auditMode]] so scoped
   * queries expose their full interior plan instead of the checkpoint
   * scan the scope's eager materialization leaves behind (same switch
@@ -19,15 +15,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Queries.all.map(_.name)
-    val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val audit = sys.env.get("SPARK_GRAFT_PLAN_AUDIT").contains("1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    planDir.foreach(d => new java.io.File(d).mkdirs())
     if (audit) CacheScope.auditMode.set(true)
     names.foreach { n =>
       println(s"\n========== $n ==========")
@@ -35,15 +25,7 @@ object Explain {
         val q = Queries.all.find(_.name == n)
           .getOrElse(sys.error(s"unknown query $n"))
         q.prepare.foreach(_(spark, sfDir))
-        val df = q.fn(spark, sfDir)
-        df.explain("formatted")
-        planDir.foreach { d =>
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$d/$n.txt"),
-            plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
+        q.fn(spark, sfDir).explain("formatted")
         if (audit) spark.catalog.clearCache() // audit mode leaks scope pins
       } catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }

@@ -906,47 +906,19 @@ object Queries {
     * full corpus scale the blocked side exceeds broadcast range — switch
     * to the EXACT prefix-join form (`ngramJaccardPairsPrefix`, q117) or
     * the probabilistic MinHash banding (q24).
+    *
+    * Shared by q36/q61 and the other consumers at `theta`. The shingle
+    * projection is pinned because both join sides read it; q61
+    * additionally runs through connectedComponents'
+    * self-contained-result contract. `minId2` is the delta face's probe
+    * filter (see [[ngramJaccardPairsDelta]]).
     */
-  /** Shared by q36/q61: blocked char-trigram Jaccard pairs at `theta`.
-    * The shingle projection is persisted because both join sides read it;
-    * Bench/Verify clear per-query caches, and q61 additionally runs
-    * through connectedComponents' self-contained-result contract.
-    */
-  private def ngramJaccardPairs(s: SparkSession, dir: String, theta: Double): DataFrame =
-    ngramJaccardPairsImpl(s, dir, theta, cache = true)
-
-  /** PerfLab face: the same plan without the persist, so rule-on /
-    * rule-off / presorted-native comparisons all rebuild the shingle
-    * projection per rep on equal footing. */
-  private[graft] def ngramJaccardPairsNoCache(s: SparkSession, dir: String,
-      theta: Double): DataFrame =
-    ngramJaccardPairsImpl(s, dir, theta, cache = false)
-
-  /** Delta face (q208): only pairs whose LARGER id is ≥ `minId2` — the
-    * probe side shrinks to today's batch BEFORE the block join, the way
-    * a production daily delta blocks new docs against the corpus
-    * instead of regenerating every pair (ids below the cutoff only ever
-    * appear as id1, so the filter loses nothing). Round-16 sf10 note:
-    * of the two EXACT plans this stays the right one — the block plan
-    * is CPU-quadratic in block density (measured 1457.7 s at 500k docs)
-    * but streams pairs through the codegen'd intersect WITHOUT
-    * materializing them, while the prefix plan's candidate-verify join
-    * ships both shingle arrays per candidate and exceeded the box's
-    * disk at this fixture's batch density (batch ≈ corpus). Neither
-    * exact plan is the 100-TB path: q231 is — LSH-banded candidates +
-    * exact verify, the q26-vs-q28 exact-twin/scale-path precedent
-    * applied to admission.
-    */
-  private def ngramJaccardPairsDelta(s: SparkSession, dir: String,
-      theta: Double, minId2: Long): DataFrame =
-    ngramJaccardPairsImpl(s, dir, theta, cache = true, minId2 = Some(minId2))
-
-  private def ngramJaccardPairsImpl(s: SparkSession, dir: String, theta: Double,
-      cache: Boolean, minId2: Option[Long] = None): DataFrame = {
+  private[graft] def ngramJaccardPairs(s: SparkSession, dir: String,
+      theta: Double, minId2: Option[Long] = None): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    def body(pin: DataFrame => DataFrame): DataFrame = {
+    graft.CacheScope.scoped { cs =>
       // both join sides derive from g: the pin tokenizes+hashes once
-      val g = pin(t(s, dir, "documents").select(col("doc_id"), col("lang"),
+      val g = cs.cache(t(s, dir, "documents").select(col("doc_id"), col("lang"),
         floor(length(col("text")) / 100).cast("long").as("lb"),
         sort_array(array_distinct(TextOps.shingleHashes(
           TextOps.charNgrams(col("text"), 3)))).as("hv")))
@@ -971,8 +943,26 @@ object Queries {
         .filter(col("jaccard") >= theta)
         .select(col("id1"), col("id2"), col("jaccard"))
     }
-    if (cache) graft.CacheScope.scoped(cs => body(cs.cache)) else body(identity)
   }
+
+  /** Delta face (q208): only pairs whose LARGER id is ≥ `minId2` — the
+    * probe side shrinks to today's batch BEFORE the block join, the way
+    * a production daily delta blocks new docs against the corpus
+    * instead of regenerating every pair (ids below the cutoff only ever
+    * appear as id1, so the filter loses nothing). Round-16 sf10 note:
+    * of the two EXACT plans this stays the right one — the block plan
+    * is CPU-quadratic in block density (measured 1457.7 s at 500k docs)
+    * but streams pairs through the codegen'd intersect WITHOUT
+    * materializing them, while the prefix plan's candidate-verify join
+    * ships both shingle arrays per candidate and exceeded the box's
+    * disk at this fixture's batch density (batch ≈ corpus). Neither
+    * exact plan is the 100-TB path: q231 is — LSH-banded candidates +
+    * exact verify, the q26-vs-q28 exact-twin/scale-path precedent
+    * applied to admission.
+    */
+  private def ngramJaccardPairsDelta(s: SparkSession, dir: String,
+      theta: Double, minId2: Long): DataFrame =
+    ngramJaccardPairs(s, dir, theta, minId2 = Some(minId2))
 
   /** The 100-TB form of the same EXACT pairs: an AllPairs/PPJoin prefix
     * filter replaces the per-block all-pairs stream AND the corpus-side
@@ -4269,8 +4259,7 @@ object Queries {
     * registered form grows the probe set WITH the corpus (0.60 sf1
     * exponent — a data-construction artifact); the production shape
     * with a pinned probe set measures 2.40× for a 10× corpus
-    * (exponent 0.38, SCALE.md §Multimodal round-10 note, `PerfLab
-    * deconfixed`).
+    * (exponent 0.38, SCALE.md §Multimodal round-10 note).
     */
   val q124: Q = Q(
     "q124_decontaminate",
@@ -10902,31 +10891,25 @@ object Queries {
     * spam plant is content-keyed so re-crawl duplicates cannot straddle
     * the gate.
     */
-  /** The q232 chain, cut at `upTo` — the timed query is `upTo = "full"`;
-    * every other value exists for PerfLab's per-link cost anatomy
-    * (`q232phases`). All links are `lazy val`s, so a cut builds (and
-    * pays for) exactly the prefix it returns — the "full" cut forces
-    * the identical dependency chain the inline body used to, in the
-    * same order, inside the same cache scope. */
-  private[graft] def q232Upto(s: SparkSession, dir: String,
-      upTo: String): DataFrame = graft.CacheScope.scoped { cs =>
+  private def q232Chain(s: SparkSession, dir: String): DataFrame =
+    graft.CacheScope.scoped { cs =>
       import graft.operators.{TokenizerArtifact, UnigramLm}
-      lazy val corpus = cs.cache(q227Corpus(s, dir, spam = true))
+      val corpus = cs.cache(q227Corpus(s, dir, spam = true))
       // heuristic prefilter (q21/q73 thresholds)
-      lazy val qd = TextOps.qualityMetrics(corpus, "text")
+      val qd = TextOps.qualityMetrics(corpus, "text")
         .filter(col("n_tokens") >= 20 && col("alpha_ratio") >= 0.5)
         .select("doc_id", "lang", "source", "text")
       // TRAINED quality gate: score FROM the committed model (q229's
       // deployed shape), keep what the model calls clean
-      lazy val wv = TokenizerArtifact.parseLinear(
+      val wv = TokenizerArtifact.parseLinear(
         TokenizerArtifact.load(s, q232ModelDir(dir))
           .getOrElse(sys.error(s"q232: no model at ${q232ModelDir(dir)}")))
-      lazy val qm = qd.join(
+      val qm = qd.join(
         TrainPrep.logregScore(qd, "doc_id", "text", wv, logregDim)
           .filter(col("pred") === 0L)
           .select(col("doc_id"), col("p_micro")), "doc_id")
       // exact dedup, keep-first (q20/q73)
-      lazy val ded = cs.cache(qm
+      val ded = cs.cache(qm
         .withColumn("__fp", TextOps.fingerprint(col("text")))
         .withColumn("__rn", row_number().over(
           Window.partitionBy(col("__fp")).orderBy(col("doc_id"))))
@@ -10951,13 +10934,13 @@ object Queries {
       // collect_list re-agg variant was measured and REJECTED (+7 s
       // more: it rebuilds every shingle array through a second
       // corpus-mass shuffle the literal form never pays).
-      lazy val sh0 = cs.cache(ded.select(col("doc_id"),
+      val sh0 = cs.cache(ded.select(col("doc_id"),
           TextOps.wordBigrams(TextOps.tokens(col("text"))).as("sh"))
         .filter(size(col("sh")) > 0))
       // ONE action produces both the corpus count and the df table
       // (round 18 — verdict item 5: the oracle's nbn CROSS JOIN shape;
       // the old form paid a separate count() job over the cache)
-      lazy val boiler = sh0.select(explode(col("sh")).as("s"))
+      val boiler = sh0.select(explode(col("sh")).as("s"))
         .groupBy(col("s")).agg(count(lit(1)).as("df"))
         .crossJoin(sh0.select(count(lit(1)).as("n")))
         .filter(col("df") >
@@ -10967,23 +10950,23 @@ object Queries {
       // array_except at control-plane sizes, broadcast-variable UDF
       // past TextOps.BoilerLiteralMax so the plan stays small when a
       // production corpus suppresses tens of thousands of shingles
-      lazy val base = cs.cache(sh0.select(col("doc_id"),
+      val base = cs.cache(sh0.select(col("doc_id"),
           TextOps.suppressBoilerplate(s, col("sh"), boiler).as("sh"))
         .filter(size(col("sh")) > 0))
-      lazy val sig = base
+      val sig = base
         .withColumn("hv", TextOps.shingleHashes(col("sh")))
         .withColumn("sig", TextOps.minhashSignature(col("hv"), 8))
       // pinned: self-joined band table (see q24) — avoids recomputing the
       // md5 shingle hashes + signatures once per join side
-      lazy val banded = cs.cache(sig.select(col("doc_id"),
+      val banded = cs.cache(sig.select(col("doc_id"),
         posexplode(TextOps.lshBandKeys(col("sig"), 4, 2)).as(Seq("band", "bkey"))))
-      lazy val cand = banded.alias("x").join(banded.alias("y"),
+      val cand = banded.alias("x").join(banded.alias("y"),
           col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
             && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2")).distinct()
-      lazy val ex = base.select(col("doc_id"), explode(col("sh")).as("s"))
-      lazy val sizes = base.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
-      lazy val nearDupPairs = cand
+      val ex = base.select(col("doc_id"), explode(col("sh")).as("s"))
+      val sizes = base.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
+      val nearDupPairs = cand
         .join(ex.select(col("doc_id").as("id1"), col("s")), "id1")
         .join(ex.select(col("doc_id").as("id2"), col("s")), Seq("id2", "s"))
         .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("n_inter"))
@@ -11003,67 +10986,52 @@ object Queries {
       // only, and the non-canonical ids broadcast back out as the
       // anti-join. Docs outside every component are singleton clusters
       // — trivially their own canonical copy — so only losers move.
-      lazy val comp = Analytics.connectedComponents(nearDupPairs, "id1", "id2")
+      val comp = Analytics.connectedComponents(nearDupPairs, "id1", "id2")
         .withColumnRenamed("id", "doc_id")
-      lazy val losers = ded.join(broadcast(comp), Seq("doc_id"))
+      val losers = ded.join(broadcast(comp), Seq("doc_id"))
         .withColumn("__kr", row_number().over(
           Window.partitionBy(col("component"))
             .orderBy(col("p_micro"), col("doc_id"))))
         .filter(col("__kr") > 1).select(col("doc_id"))
-      lazy val nd = ded.join(broadcast(losers), Seq("doc_id"), "left_anti")
+      val nd = ded.join(broadcast(losers), Seq("doc_id"), "left_anti")
       // decontamination (q124 face at n=5)
-      lazy val isProbe = col("doc_id") % 97 === 0 && col("doc_id") < 1000000L
-      lazy val probes = corpus.filter(isProbe)
-      lazy val nonProbe = nd.filter(!isProbe)
-      lazy val contaminated = TextOps.decontaminate(nonProbe, probes,
+      val isProbe = col("doc_id") % 97 === 0 && col("doc_id") < 1000000L
+      val probes = corpus.filter(isProbe)
+      val nonProbe = nd.filter(!isProbe)
+      val contaminated = TextOps.decontaminate(nonProbe, probes,
           "doc_id", "text", n = 5)
         .select(col("doc_id"))
-      lazy val clean = nonProbe.join(contaminated, Seq("doc_id"), "left_anti")
+      val clean = nonProbe.join(contaminated, Seq("doc_id"), "left_anti")
       // per-domain quota (q107) and stratified language mix (q64)
-      lazy val quota = TrainPrep.domainQuota(clean, lower(col("source")),
+      val quota = TrainPrep.domainQuota(clean, lower(col("source")),
           "doc_id", cap = 15)
         .drop("domain", "quota_rank")
-      lazy val mixed = cs.cache(TrainPrep.stratifiedSample(quota, "doc_id", "lang",
+      val mixed = cs.cache(TrainPrep.stratifiedSample(quota, "doc_id", "lang",
         Map("en" -> 80, "de" -> 50, "fr" -> 50, "es" -> 30, "zh" -> 20)))
       // tokenize FROM the committed artifact (q222 shape)
-      lazy val vocab = TokenizerArtifact.parseUnigram(
+      val vocab = TokenizerArtifact.parseUnigram(
         TokenizerArtifact.load(s, q232ArtifactDir(dir))
           .getOrElse(sys.error(s"q232: no artifact at ${q232ArtifactDir(dir)}")))
       // pinned (round 19, guide §5): two consumers — packEpochShards and
       // the output join — otherwise the Viterbi tokenize runs per side
-      lazy val tkf = cs.cache(UnigramLm.apply(mixed, "doc_id", "text", vocab, 4)
+      val tkf = cs.cache(UnigramLm.apply(mixed, "doc_id", "text", vocab, 4)
         .join(mixed.select(col("doc_id"), col("lang"), col("source"),
           col("p_micro")), "doc_id"))
       // pack into seeded epoch shards on the TOKENIZED length (q216)
-      lazy val packed = TrainPrep.packEpochShards(
+      val packed = TrainPrep.packEpochShards(
         tkf.select(col("doc_id"), col("n_pieces")), "doc_id", "n_pieces",
         seed = "graft17", epochs = 2, nShards = 8, budget = 512L)
-      lazy val full = packed.join(tkf.drop("n_pieces"), "doc_id")
+      packed.join(tkf.drop("n_pieces"), "doc_id")
         .select(col("doc_id"), col("lang"), col("source"), col("n_words"),
           col("n_tok").as("n_pieces"), col("pieces_md5"), col("nll_micro"),
           col("p_micro"), col("epoch"), col("shard"), col("pos"),
           col("pack_id"), col("pack_offset"))
         .orderBy(col("doc_id"), col("epoch"))
-      upTo match {
-        case "corpus"     => corpus
-        case "quality"    => qd
-        case "scored"     => qm
-        case "exactdedup" => ded
-        case "suppress"   => base
-        case "candidates" => cand
-        case "verify"     => nearDupPairs
-        case "elect"      => nd
-        case "decontam"   => clean
-        case "mix"        => mixed
-        case "tokenize"   => tkf
-        case "full"       => full
-        case other        => sys.error(s"q232Upto: unknown cut $other")
-      }
-  }
+    }
 
   val q232: Q = Q(
     "q232_corpus_build_trained",
-    (s, dir) => q232Upto(s, dir, "full"),
+    (s, dir) => q232Chain(s, dir),
     Some(s"""
       |WITH RECURSIVE crawl AS (
       |  SELECT doc_id, lang, source, n_chars, text FROM documents

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -68,14 +67,8 @@ object StreamBench {
     val nFiles = args.drop(1).headOption.map(_.toInt).getOrElse(64)
     val perTrigger = args.drop(2).headOption.map(_.toInt).getOrElse(8)
 
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    StreamingOps.RocksDbStateStoreConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = LocalSession("graft-stream-bench")
+    StreamingOps.RocksDbStateStoreConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")
 
     val replay = Files.createTempDirectory("graft-stream-bench").toString

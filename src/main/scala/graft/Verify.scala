@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,13 +11,7 @@ object Verify {
     // queries that ran
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -30,15 +23,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // no clearCache: operators close their own cache scopes
-      // (graft.CacheScope; gate = CacheHygieneSpec). Checkpoint blocks
-      // are a different story (round 19, guide §5): the result is fully
-      // written, so any STILL-persisted RDD is a dead operator-result
-      // checkpoint (a CacheScope.scoped output, the star CC loop's final
-      // round …) that only the ContextCleaner would eventually free —
-      // across 235 dumps that accumulation squeezes execution memory.
-      // Release them before the next query.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // (graft.CacheScope; gate = CacheHygieneSpec); dead result
+      // checkpoints are released before the next query
+      CacheScope.freeAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

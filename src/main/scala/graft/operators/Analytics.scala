@@ -985,7 +985,7 @@ object Analytics {
 
   /** De-duplicated undirected edge list canonicalized to u < v (reversed
     * duplicates collapse, self-loops drop). */
-  private def canonicalEdges(edges: DataFrame, srcCol: String,
+  private[graft] def canonicalEdges(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
     val s = col(srcCol).cast("long")
     val d = col(dstCol).cast("long")
@@ -994,17 +994,14 @@ object Analytics {
   }
 
   /** (id, deg) for every endpoint of the canonical edge list. */
-  private def vertexDegrees(e: DataFrame): DataFrame =
+  private[graft] def vertexDegrees(e: DataFrame): DataFrame =
     e.select(col("u").as("id")).union(e.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
 
   /** Orient each canonical edge from its (degree, id)-lower endpoint `a`
     * to its higher endpoint `b`; `rd` carries rank-degree of `b` so the
     * wedge join can order out-neighbour pairs without a third join. */
-  private def orientByDegree(e: DataFrame): DataFrame =
-    orientByDegree(e, vertexDegrees(e))
-
-  private def orientByDegree(e: DataFrame, deg: DataFrame): DataFrame = {
+  private[graft] def orientByDegree(e: DataFrame, deg: DataFrame): DataFrame = {
     val uLower = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     e.join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
@@ -1256,23 +1253,5 @@ object Analytics {
           org.apache.spark.sql.Row(ids(v), core(v)) }, 1),
       StructType(Seq(StructField("id", LongType, nullable = false),
         StructField("core_deg", LongType, nullable = false))))
-  }
-
-  /** Test/audit probe: number of wedges the triangle join would
-    * enumerate under degree ordering vs the naive id ordering (orient
-    * low-id → high-id). Degree ordering bounds this at O(m^1.5); id
-    * ordering is unbounded on hub graphs. */
-  private[graft] def wedgeCounts(edges: DataFrame, srcCol: String,
-      dstCol: String): (Long, Long) = {
-    val e = canonicalEdges(edges, srcCol, dstCol).persist()
-    val o = orientByDegree(e)
-    val byDeg = o.as("e1").join(o.as("e2"),
-        col("e1.a") === col("e2.a") &&
-          (col("e1.rd") < col("e2.rd") ||
-            (col("e1.rd") === col("e2.rd") && col("e1.b") < col("e2.b"))))
-      .count()
-    val byId = e.as("e1").join(e.as("e2"), col("e1.v") === col("e2.u")).count()
-    e.unpersist()
-    (byDeg, byId)
   }
 }

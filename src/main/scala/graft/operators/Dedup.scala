@@ -31,18 +31,22 @@ object Dedup {
       .join(byEtl, Seq("company_id", "etl_checksum"), "left_anti")
   }
 
-  /** `againstLedger`, production layout: the ledger's two key
-    * projections are materialized as BUCKETED tables (bucket+sort on the
-    * exact anti-join keys), so the ledger side of each anti-join reads
-    * co-located buckets with NO shuffle exchange — only the (small)
-    * incoming batch shuffles into the ledger's partitioning. This is the
-    * shape for the real pipeline, where the ledger is a large silver
-    * table re-read every micro-batch: its shuffle is paid ONCE at write
-    * time, not per batch. (At 100 TB the bucketed write replaces the
-    * per-batch `persist()` q00 models.) Nothing appends a batch's
-    * survivors to the bucketed tables yet: they hold the ledger as of
-    * the last `prepareBucketedLedger`, so a later batch is checked
-    * against that ledger, not against the batches since.
+  /** `againstLedger`, production layout, PREPARE half: materialize the
+    * ledger's two anti-join key projections as BUCKETED tables
+    * (bucket+sort on the exact anti-join keys), so the ledger side of
+    * each anti-join in [[probeBucketedLedger]] reads co-located buckets
+    * with NO shuffle exchange — only the (small) incoming batch shuffles
+    * into the ledger's partitioning. This is the shape for the real
+    * pipeline, where the ledger is a large silver table re-read every
+    * micro-batch: its shuffle is paid ONCE at write time, not per batch
+    * — the once-per-layout cost a production pipeline pays at
+    * silver-write time, benched separately (q116) from the steady-state
+    * probe (q108). (At 100 TB the bucketed write replaces the per-batch
+    * `persist()` q00 models.) Nothing appends a batch's survivors to the
+    * bucketed tables yet: they hold the ledger as of the last call, so a
+    * later batch is checked against that ledger, not against the
+    * batches since. The ledger scan is pinned while both projections
+    * write, then released — the cache lifecycle closes inside this call.
     *
     * `warehouseDir`/`tablePrefix` locate the materialized tables
     * (external, `mode=overwrite` — re-running refreshes them). Bucketed
@@ -51,21 +55,6 @@ object Dedup {
     * toy sizes — the bucket layout matters precisely when the ledger is
     * too big to broadcast (BucketingSpec pins the shuffle-free plan with
     * broadcast disabled).
-    */
-  def againstBucketedLedger(batch: DataFrame, ledger: DataFrame,
-      nBuckets: Int, warehouseDir: String,
-      tablePrefix: String = "graft_ledger"): DataFrame = {
-    prepareBucketedLedger(ledger, nBuckets, warehouseDir, tablePrefix)
-    probeBucketedLedger(batch, tablePrefix)
-  }
-
-  /** PREPARE half of [[againstBucketedLedger]]: materialize the ledger's
-    * two anti-join key projections as bucketed+sorted external tables.
-    * This is the once-per-layout cost a production pipeline pays at
-    * silver-write time and amortizes over every subsequent micro-batch —
-    * benched separately (q116) from the steady-state probe (q108). The
-    * ledger scan is pinned while both projections write, then released —
-    * the cache lifecycle closes inside this call.
     */
   def prepareBucketedLedger(ledger: DataFrame, nBuckets: Int,
       warehouseDir: String, tablePrefix: String = "graft_ledger"): Unit = {
@@ -86,7 +75,7 @@ object Dedup {
     } finally pinned.unpersist(blocking = false): Unit
   }
 
-  /** PROBE half of [[againstBucketedLedger]]: the per-micro-batch
+  /** PROBE half of [[prepareBucketedLedger]]: the per-micro-batch
     * two-stage anti-join against the already-bucketed ledger tables —
     * the ledger side reads co-located buckets with no shuffle exchange;
     * only the (small) batch shuffles into the ledger's partitioning.

@@ -1893,28 +1893,6 @@ object Multimodal {
     Wav.encode(kept, math.max(1, meta.sample_rate.toInt / everyN))
   }
 
-  /** REAL BMP nearest-neighbor resize: decode pixels (bottom-up rows,
-    * padding), sample the source grid at scaled coordinates, re-encode
-    * a valid BMP at (outW, outH).
-    */
-  def bmpResize(id: Long, bytes: Array[Byte], outW: Int, outH: Int): Array[Byte] = {
-    require(outW > 0 && outH > 0, s"resize dims must be positive (doc $id)")
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val m = Bmp.decode(id, bytes) // validates container, gives dims
-    val w = m.width.toInt
-    val h = m.height.toInt
-    val pixOff = buf.getInt(10)
-    val bottomUp = buf.getInt(22) > 0
-    val stride = ((w * 3) + 3) / 4 * 4
-    def src(x: Int, y: Int): (Int, Int, Int) = {
-      val row = if (bottomUp) h - 1 - y else y
-      val base = pixOff + row * stride + x * 3
-      ((bytes(base + 2) & 0xff), (bytes(base + 1) & 0xff), (bytes(base) & 0xff))
-    }
-    Bmp.encode(outW, outH, (x, y) => src(x * w / outW, y * h / outH))
-  }
-
   /** Per-doc deterministic PCM16 synth (what a crawler's audio column
     * would hold): n and rate vary with doc_id so duration/padding paths
     * all get exercised; sample i = ((id·31 + i·7) mod 2¹⁶) − 2¹⁵.
@@ -2094,69 +2072,6 @@ object Multimodal {
       .mapPartitions(_.map(id => (id, synthMedia(id))))
       .toDF(idCol, "media_bytes")
     decodeMedia(media, idCol, "media_bytes")
-  }
-
-  /** Feature extraction over a heterogeneous media column. For the five
-    * real formats the 8-dim embedding is computed from the ACTUAL decode
-    * (image channel means + dims, audio RMS/rate/duration, container
-    * dims/duration/tracks — everything short of running a vision/audio
-    * model, which is the genuinely library-bound step); unknown payloads
-    * keep the byte-histogram fallback, dimension-compatible so one ANN
-    * index serves the whole column. Output plugs directly into VectorOps:
-    * the multimodal → embedding → similarity-search pipeline end to end.
-    * Feature 0 is a format code, so same-format media cluster first —
-    * spec-gated in MultimodalSpec.
-    */
-  def extractFeatures(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, bytes) =>
-        def img(code: Double, w: Long, h: Long, sr: Long, sg: Long, sb: Long) = {
-          val n = (w * h * 255).toDouble
-          Array(code, w / 1024.0, h / 1024.0, sr / n, sg / n, sb / n, 0.0, 0.0)
-        }
-        val feats: Array[Double] =
-          try sniffFormat(bytes) match {
-            case "wav" =>
-              val m = Wav.decode(id, bytes)
-              Array(1 / 8.0, m.sample_rate / 48000.0, m.n_samples / 65536.0,
-                math.sqrt(m.sum_sq.toDouble / math.max(1L, m.n_samples)) / 32768.0,
-                m.duration_ms / 60000.0, 0.0, 0.0, 0.0)
-            case "bmp" =>
-              val m = Bmp.decode(id, bytes)
-              img(2 / 8.0, m.width, m.height, m.sum_r, m.sum_g, m.sum_b)
-            case "png" =>
-              val m = Png.decode(id, bytes)
-              img(3 / 8.0, m.width, m.height, m.sum_r, m.sum_g, m.sum_b)
-            case "jpeg" =>
-              val m = Jpeg.decode(id, bytes)
-              img(4 / 8.0, m.width, m.height, m.sum_r, m.sum_g, m.sum_b)
-            case "mp4" =>
-              val m = Mp4.decode(id, bytes)
-              Array(5 / 8.0, m.width / 1024.0, m.height / 1024.0,
-                m.duration_ms / 60000.0, m.n_tracks / 8.0, 0.0, 0.0, 0.0)
-            case "gif" =>
-              val m = Gif.decode(id, bytes)
-              img(6 / 8.0, m.width, m.height, m.sum_r, m.sum_g, m.sum_b)
-            case "flac" =>
-              val m = Flac.decode(id, bytes)
-              Array(7 / 8.0, m.sample_rate / 48000.0, m.total_samples / 65536.0,
-                m.bits_per_sample / 32.0, m.duration_ms / 60000.0, 0.0, 0.0, 0.0)
-            case _ => histogram(bytes)
-          } catch { case scala.util.control.NonFatal(_) => histogram(bytes) }
-        (id, feats.map(_.toFloat).toSeq)
-      }
-      .toDF(idCol, "embedding")
-  }
-
-  /** The format-unknown fallback embedding: 8-bucket byte histogram. */
-  private def histogram(bytes: Array[Byte]): Array[Double] = {
-    val hist = new Array[Double](8)
-    bytes.foreach(b => hist((b & 0xff) / 32) += 1.0)
-    val n = math.max(1, bytes.length).toDouble
-    hist.map(_ / n)
   }
 
   /** Decoded MP3 stream metadata: everything a frame-header walk yields

@@ -1045,20 +1045,11 @@ object TrainPrep {
     expr("CAST((CAST(cab AS DECIMAL(38,0)) * 1000000000000) div " +
       "(CAST(ca AS DECIMAL(18,0)) * CAST(cb AS DECIMAL(18,0))) AS BIGINT)")
 
-  /** WordPiece pair statistics — the building block the trainer's
-    * argmax reads (the q152/q210 pattern): adjacent-pair counts AND
-    * both unit counts over the ##-marked symbol sequences, with the
-    * quantized score. One corpus scan for the word table; everything
-    * after is vocab-sized.
+  /** WordPiece pair statistics over the ##-marked symbol sequences —
+    * the building block the trainer's argmax reads (the q152/q210
+    * pattern): adjacent-pair counts AND both unit counts, with the
+    * quantized score. Everything here is vocab-sized.
     */
-  def wordPiecePairStats(docs: DataFrame, textCol: String): DataFrame = {
-    val words = docs
-      .select(explode(TextOps.tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("f"))
-    wordPiecePairStatsFromSyms(
-      words.select(col("f"), wordPieceInitSyms(col("w")).as("syms")))
-  }
-
   private def wordPiecePairStatsFromSyms(symbols: DataFrame): DataFrame = {
     val pairs = symbols
       .filter(size(col("syms")) >= 2)

@@ -73,8 +73,9 @@ class BucketingSpec extends SparkSpec {
       // ledger that CANNOT broadcast
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val surv = Dedup.againstBucketedLedger(batch, ledger,
-        nBuckets = 8, warehouseDir = wh, tablePrefix = "graft_spec_ledger")
+      Dedup.prepareBucketedLedger(ledger, nBuckets = 8, warehouseDir = wh,
+        tablePrefix = "graft_spec_ledger")
+      val surv = Dedup.probeBucketedLedger(batch, tablePrefix = "graft_spec_ledger")
       val exec = surv.queryExecution.executedPlan
       // the two anti-joins must be sort-merge with a LEDGER side (right)
       // that reads co-located buckets and contains NO shuffle exchange —

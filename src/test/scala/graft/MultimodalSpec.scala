@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Multimodal, VectorOps}
+import graft.operators.Multimodal
 import graft.sources.Ingest
 
 class MultimodalSpec extends SparkSpec {
@@ -196,21 +196,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out.first_sample == 0 && out.last_sample == 96 * 3) // samples 0,4,...,96
     assert(out.duration_ms == 12) // 25 / 2000 Hz — within a sample of 100/8000
     assert(out.sum_sq == (0 until 100 by 4).map(i => (i * 3L) * (i * 3L)).sum)
-  }
-
-  test("Bmp resize samples real pixels at scaled coordinates") {
-    // 4×4 source with channel = f(x, y); downsample to 2×2: nearest
-    // neighbor picks source pixels (0,0),(2,0),(0,2),(2,2).
-    val enc = Multimodal.Bmp.encode(4, 4, (x, y) => (16 * x + y, 100 + x, 10 * y))
-    val out = Multimodal.Bmp.decode(2L, Multimodal.bmpResize(2L, enc, 2, 2))
-    assert(out.width == 2 && out.height == 2)
-    assert(out.px00 == 0L * 65536 + 100L * 256 + 0L) // source (0,0)
-    assert(out.sum_r == 0 + 32 + 2 + 34) // r at (0,0),(2,0),(0,2),(2,2)
-    assert(out.sum_g == 100 + 102 + 100 + 102 && out.sum_b == 0 + 0 + 20 + 20)
-    // upsample 1×1 → 3×3 replicates the single pixel
-    val one = Multimodal.Bmp.encode(1, 1, (_, _) => (7, 8, 9))
-    val up = Multimodal.Bmp.decode(3L, Multimodal.bmpResize(3L, one, 3, 3))
-    assert(up.sum_r == 63 && up.sum_g == 72 && up.sum_b == 81)
   }
 
   test("Png encode∘decode is identity across all five scanline filters") {
@@ -585,50 +570,6 @@ class MultimodalSpec extends SparkSpec {
       (1 to r.n_tracks.toInt).flatMap(t =>
         (0 until (8 + (r.doc_id + t) % 5).toInt).map(i =>
           1 + (r.doc_id + 7 * t + 3 * i) % 50)).sum))
-  }
-
-  test("real-format features cluster by format (nearest neighbor shares the format code)") {
-    import org.apache.spark.sql.functions.col
-    val ids = (0L until 20L).toDF("doc_id") // 4 docs per format (doc_id % 5)
-    val media = ids.as[Long].map(id => (id, Multimodal.synthMedia(id)))
-      .toDF("doc_id", "bin")
-    val feats = Multimodal.extractFeatures(media, "doc_id", "bin")
-      .as[(Long, Seq[Float])].collect().toMap
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
-      val na = math.sqrt(a.map(x => x.toDouble * x).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x).sum)
-      dot / (na * nb)
-    }
-    // cross-IMAGE-format proximity (bmp/png/jpeg) is correct content
-    // behavior — the guarantee is FAMILY clustering: audio, image, video
-    def family(id: Long): Int = (id % 5) match {
-      case 0 => 0 // wav → audio
-      case 4 => 2 // mp4 → video
-      case _ => 1 // bmp/png/jpeg → image
-    }
-    for ((id, v) <- feats) {
-      val nn = feats.filter(_._1 != id).maxBy { case (_, w) => cos(v, w) }
-      assert(family(nn._1) == family(id),
-        s"doc $id (family ${family(id)}) nearest neighbor is doc ${nn._1} (family ${family(nn._1)})")
-    }
-    // feature 0 is the exact format code — constant within a format,
-    // distinct across formats
-    for (f <- 0L until 5L) {
-      val codes = feats.filter(_._1 % 5 == f).values.map(_.head).toSet
-      assert(codes.size == 1)
-    }
-    assert(feats.groupBy(_._1 % 5).values.map(_.values.head.head).toSet.size == 5)
-  }
-
-  test("multimodal features feed ANN end-to-end") {
-    val feats = Multimodal.extractFeatures(media, "doc_id", "bin")
-    val topk = VectorOps.bruteForceTopK(
-      feats.filter(col("doc_id") < 2), feats, "doc_id", "embedding", 3)
-    val perQuery = topk.groupBy("query_id").count().as[(Long, Long)].collect().toMap
-    assert(perQuery.values.forall(_ == 3))
-    // histogram vectors are all-positive → cosine in (0, 1]
-    assert(topk.filter(col("cosine_sim") <= 0 || col("cosine_sim") > 1.0001).count() == 0)
   }
 
   test("Webp decodes all three flavors and rejects corrupt containers") {

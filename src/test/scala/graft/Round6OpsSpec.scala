@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-6 operator specs: degree-ordered triangle orientation. */
@@ -28,7 +29,16 @@ class Round6OpsSpec extends AnyFunSuite with SparkSpec {
     val edges = star ++ tris
     val df = edges.toDF("u", "v")
 
-    val (byDeg, byId) = Analytics.wedgeCounts(df, "u", "v")
+    // wedges the triangle join would enumerate under degree ordering vs
+    // the naive id ordering (orient low-id → high-id)
+    val e = Analytics.canonicalEdges(df, "u", "v")
+    val o = Analytics.orientByDegree(e, Analytics.vertexDegrees(e))
+    val byDeg = o.as("e1").join(o.as("e2"),
+        col("e1.a") === col("e2.a") &&
+          (col("e1.rd") < col("e2.rd") ||
+            (col("e1.rd") === col("e2.rd") && col("e1.b") < col("e2.b"))))
+      .count()
+    val byId = e.as("e1").join(e.as("e2"), col("e1.v") === col("e2.u")).count()
     // id ordering: every (low, hub)×(hub, high) pair is a wedge through
     // the hub: 200 × 200 = 40000 (+ the triangle wedges)
     assert(byId >= 40000L)

@@ -200,7 +200,7 @@ class TrainPrepSpec extends SparkSpec {
 
   test("cluster split never straddles a near-dup pair; q46's doc split does (q174)") {
     val dir = "/root/testdata/sf0.01"
-    val pairs = Queries.ngramJaccardPairsNoCache(spark, dir, 0.7)
+    val pairs = Queries.ngramJaccardPairs(spark, dir, 0.7)
       .select(col("id1").cast("long"), col("id2").cast("long"))
       .as[(Long, Long)].collect()
     assert(pairs.nonEmpty, "fixture must contain near-dup pairs at theta 0.7")

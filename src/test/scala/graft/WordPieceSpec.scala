@@ -84,9 +84,10 @@ class WordPieceSpec extends SparkSpec {
       .collect()(0)
     assert((first.getString(1), first.getString(2)) == (("x", "##z")),
       s"picked ${first.getString(1)}+${first.getString(2)}")
-    // raw-count argmax would have been (a, ##a) at cab=10 vs 3
-    val stats = TrainPrep.wordPiecePairStats(corpus.toDF("text"), "text")
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    // raw-count argmax would have been (a, ##a) at cab=10 vs 3: the
+    // second merge is (a, ##a), whose count the first merge left intact
+    val stats = TrainPrep.wordPieceTrain(corpus.toDF("text"), "text", 2)
+      .collect().map(r => (r.getString(1), r.getString(2)) -> r.getLong(4)).toMap
     assert(stats(("a", "##a")) == 10L && stats(("x", "##z")) == 3L)
   }
 
