@@ -42,6 +42,18 @@ object Queries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Ingest.table(s, dir, name)
 
+  /** The one per-process directory that every query's on-disk state
+    * (bucketed warehouses, tar shards, prepared state, artifacts) lives
+    * under, so two processes running the same queries on the same
+    * testdata never share a path. It is deleted when the JVM exits.
+    */
+  private[graft] lazy val scratchRoot: String = {
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-${ProcessHandle.current.pid}")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root))
+    root.getPath
+  }
+
   /** Dimension-role read (broadcast build side / tiny table): no fan-out
     * repartition — see Ingest.dim.
     */
@@ -3714,7 +3726,7 @@ object Queries {
     q00.oracle,
     prepare = Some((s, dir) => Dedup.prepareBucketedLedger(
       silverLedgerKeys(s, dir), nBuckets = 8,
-      warehouseDir = s"${System.getProperty("java.io.tmpdir")}/graft_q108_wh",
+      warehouseDir = s"$scratchRoot/q108_wh",
       tablePrefix = "graft_q108")))
 
   /** EWMA revenue baseline per order priority
@@ -4012,7 +4024,7 @@ object Queries {
     (s, dir) => {
       Dedup.prepareBucketedLedger(
         silverLedgerKeys(s, dir), nBuckets = 8,
-        warehouseDir = s"${System.getProperty("java.io.tmpdir")}/graft_q116_wh",
+        warehouseDir = s"$scratchRoot/q116_wh",
         tablePrefix = "graft_q116")
       s.table("graft_q116_ck").agg(count(lit(1)).as("n_ck_keys"))
         .crossJoin(s.table("graft_q116_eck").agg(count(lit(1)).as("n_eck_keys")))
@@ -4992,8 +5004,7 @@ object Queries {
     */
   val q146: Q = Q(
     "q146_tar_shard_scan",
-    (s, dir) => CrawlFormats.readTarShards(s,
-        s"${System.getProperty("java.io.tmpdir")}/graft_q146_shards")
+    (s, dir) => CrawlFormats.readTarShards(s, s"$scratchRoot/q146_shards")
       .toDF().orderBy(col("doc_id")),
     Some("""
       |SELECT doc_id,
@@ -5006,8 +5017,8 @@ object Queries {
       |""".stripMargin.trim),
     prepare = Some { (s, dir) =>
       import s.implicits._
-      val out = new java.io.File(
-        s"${System.getProperty("java.io.tmpdir")}/graft_q146_shards")
+      val shards = s"$scratchRoot/q146_shards"
+      val out = new java.io.File(shards)
       if (out.exists()) out.listFiles().foreach(_.delete()) else out.mkdirs()
       t(s, dir, "documents")
         .select(col("doc_id").cast("long"), col("text").cast("string"))
@@ -5025,8 +5036,7 @@ object Queries {
         .foreachPartition { it: Iterator[(Long, Array[Byte])] =>
           it.foreach { case (gid, bytes) =>
             java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"${System.getProperty("java.io.tmpdir")}" +
-                f"/graft_q146_shards/shard-$gid%06d.tar"), bytes)
+              java.nio.file.Paths.get(shards, f"shard-$gid%06d.tar"), bytes)
           }
         }
     })
@@ -8084,15 +8094,12 @@ object Queries {
     * asserted. Cost scales with |assignment| + |batch|, never the
     * lifetime edge count.
     */
-  private def q202StateDir(dir: String): String =
-    s"/tmp/graft_q202_${Integer.toHexString(dir.hashCode)}"
-
   val q202: Q = Q(
     "q202_incremental_components",
     (s, dir) => {
       // TIMED: the production steady state — yesterday's persisted
       // assignment + today's delta edges in, updated assignment out.
-      val st = q202StateDir(dir)
+      val st = artifactScope("q202", dir)
       val assignment = s.read.parquet(s"$st/assignment")
       val newEdges = s.read.parquet(s"$st/delta")
       val updated = Analytics.incrementalComponents(assignment, "doc_id",
@@ -8112,7 +8119,7 @@ object Queries {
       // edges (the work a production pipeline already paid on prior days;
       // its own price is benched by q61/q36)
       val cutoff = 350L
-      val st = q202StateDir(dir)
+      val st = artifactScope("q202", dir)
       val pairs = ngramJaccardPairs(s, dir, theta = 0.7)
         .select(col("id1").cast("long").as("id1"),
           col("id2").cast("long").as("id2"))
@@ -8827,14 +8834,11 @@ object Queries {
     * blocked-Jaccard join, the update touches |assignment| + |delta|,
     * never the lifetime edge set.
     */
-  private def q208StateDir(dir: String): String =
-    s"/tmp/graft_q208_${Integer.toHexString(dir.hashCode)}"
-
   val q208: Q = Q(
     "q208_lifecycle_admit_cluster",
     (s, dir) => graft.CacheScope.scoped { cs =>
       val cutoff = 350L
-      val st = q208StateDir(dir)
+      val st = artifactScope("q208", dir)
       val assignment = s.read.parquet(s"$st/assignment")
       val docs = t(s, dir, "documents")
       val batch = docs.filter(col("doc_id") >= cutoff)
@@ -8882,7 +8886,7 @@ object Queries {
       // UNTIMED: yesterday's pipeline — corpus CC over pairs both < 350
       // persisted as the assignment (the work prior days already paid)
       val cutoff = 350L
-      val st = q208StateDir(dir)
+      val st = artifactScope("q208", dir)
       val pairs = ngramJaccardPairs(s, dir, theta = 0.7)
         .select(col("id1").cast("long").as("id1"),
           col("id2").cast("long").as("id2"))
@@ -9790,9 +9794,6 @@ object Queries {
         |""".stripMargin.trim))
   }
 
-  private def q222ArtifactDir(dir: String): String =
-    s"/tmp/graft_q222_${Integer.toHexString(dir.hashCode)}/artifact"
-
   /** Tokenize FROM a committed artifact (round 15 — the deployed shape:
     * the applying job never sees the trainer, only the versioned text
     * artifact). `prepare` (UNTIMED, the work a pipeline amortizes: train
@@ -9808,8 +9809,8 @@ object Queries {
     "q222_artifact_apply",
     (s, dir) => {
       import graft.operators.{TokenizerArtifact, UnigramLm}
-      val content = TokenizerArtifact.load(s, q222ArtifactDir(dir))
-        .getOrElse(sys.error(s"q222: no artifact at ${q222ArtifactDir(dir)}"))
+      val content = TokenizerArtifact.load(s, artifactDir("q222", dir))
+        .getOrElse(sys.error(s"q222: no artifact at ${artifactDir("q222", dir)}"))
       val vocab = TokenizerArtifact.parseUnigram(content)
       UnigramLm.apply(t(s, dir, "documents"), "doc_id", "text", vocab, 4)
         .orderBy(col("doc_id"))
@@ -9819,7 +9820,7 @@ object Queries {
       import graft.operators.{TokenizerArtifact, UnigramLm}
       val vocab = UnigramLm.collectVocab(
         UnigramLm.seedVocab(t(s, dir, "documents"), "text", 4, 48))
-      TokenizerArtifact.commit(s, q222ArtifactDir(dir),
+      TokenizerArtifact.commit(s, artifactDir("q222", dir),
         TokenizerArtifact.serializeUnigram(vocab))
       ()
     }))
@@ -9866,7 +9867,7 @@ object Queries {
   }
 
   private def artifactDir(q: String, dir: String): String =
-    s"/tmp/graft_${q}_${Integer.toHexString(dir.hashCode)}/artifact"
+    s"${artifactScope(q, dir)}/artifact"
 
   /** Byte-BPE tokenization FROM a committed merge-list artifact (round
     * 15 — q222's deployed-shape gate for the merges family): `prepare`
@@ -9990,10 +9991,11 @@ object Queries {
   private val q227EmailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
   private val q227PhoneRe = "[0-9]{3}-[0-9]{4}"
 
-  /** Run-scoped artifact location for a `prepare`-committed artifact
-    * (r16 ADVICE: the old 32-bit `dir.hashCode` key could collide two
-    * different data dirs, cross-contaminating the artifact a timed
-    * query then loads). The FULL data dir is encoded injectively —
+  /** Location, under [[scratchRoot]], of a query's `prepare`-written
+    * state (artifacts, models, incremental-components state) for one
+    * data dir (a 32-bit `dir.hashCode` key could collide two different
+    * data dirs, cross-contaminating the state a timed query then
+    * loads). The FULL data dir is encoded injectively —
     * every non-[A-Za-z0-9.-] char hex-escaped as `_xNNNN` (the escape
     * char `_` is itself escaped), so distinct dirs can never map to the
     * same path — and each dataset's artifacts live under one per-query
@@ -10018,17 +10020,12 @@ object Queries {
           .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
         enc.take(80) + "_" + md
       }
-    s"/tmp/graft_artifacts/$tag/$comp"
+    s"$scratchRoot/artifacts/$tag/$comp"
   }
-
-  private def q227ArtifactDir(dir: String): String =
-    s"${artifactScope("q227", dir)}/artifact"
 
   /** The q228 spam marker, planted content-keyed into the q232 corpus. */
   private val q232SpamText = " buy now click here free offer"
 
-  private[graft] def q232ArtifactDir(dir: String): String =
-    s"${artifactScope("q232", dir)}/artifact"
   private def q232ModelDir(dir: String): String =
     s"${artifactScope("q232", dir)}/model"
 
@@ -10189,8 +10186,8 @@ object Queries {
         Map("en" -> 80, "de" -> 50, "fr" -> 50, "es" -> 30, "zh" -> 20)))
       // tokenize FROM the committed artifact (q222 shape)
       val vocab = TokenizerArtifact.parseUnigram(
-        TokenizerArtifact.load(s, q227ArtifactDir(dir))
-          .getOrElse(sys.error(s"q227: no artifact at ${q227ArtifactDir(dir)}")))
+        TokenizerArtifact.load(s, artifactDir("q227", dir))
+          .getOrElse(sys.error(s"q227: no artifact at ${artifactDir("q227", dir)}")))
       // pinned (round 19, guide §5): tkf feeds TWO consumers — the pack
       // arithmetic reads (doc_id, n_pieces) and the output join reads the
       // rest — and without the pin the whole per-word Viterbi tokenize
@@ -10345,7 +10342,7 @@ object Queries {
       val train = q227Corpus(s, dir).filter(col("doc_id") < 1000000L)
       val vocab = UnigramLm.collectVocab(
         UnigramLm.seedVocab(train, "text", maxPieceLen = 4, vocabSize = 48))
-      TokenizerArtifact.commit(s, q227ArtifactDir(dir),
+      TokenizerArtifact.commit(s, artifactDir("q227", dir),
         TokenizerArtifact.serializeUnigram(vocab))
       ()
     }))
@@ -11010,8 +11007,8 @@ object Queries {
         Map("en" -> 80, "de" -> 50, "fr" -> 50, "es" -> 30, "zh" -> 20)))
       // tokenize FROM the committed artifact (q222 shape)
       val vocab = TokenizerArtifact.parseUnigram(
-        TokenizerArtifact.load(s, q232ArtifactDir(dir))
-          .getOrElse(sys.error(s"q232: no artifact at ${q232ArtifactDir(dir)}")))
+        TokenizerArtifact.load(s, artifactDir("q232", dir))
+          .getOrElse(sys.error(s"q232: no artifact at ${artifactDir("q232", dir)}")))
       // pinned (round 19, guide §5): two consumers — packEpochShards and
       // the output join — otherwise the Viterbi tokenize runs per side
       val tkf = cs.cache(UnigramLm.apply(mixed, "doc_id", "text", vocab, 4)
@@ -11209,7 +11206,7 @@ object Queries {
         .filter(col("doc_id") < 1000000L)
       val vocab = UnigramLm.collectVocab(
         UnigramLm.seedVocab(train, "text", maxPieceLen = 4, vocabSize = 48))
-      TokenizerArtifact.commit(s, q232ArtifactDir(dir),
+      TokenizerArtifact.commit(s, artifactDir("q232", dir),
         TokenizerArtifact.serializeUnigram(vocab))
       val w = TrainPrep.logregTrain(train, "doc_id", "text", "y",
         logregDim, logregRounds, logregLrDiv)

@@ -237,8 +237,7 @@ object Multimodal {
     * track-major layout — the degenerate stco/stsc case [[Mp4.encode]]
     * writes; a general file adds a chunk-offset lookup, same shape).
     * Everything up to entropy-decoding the frame PAYLOAD is real; only
-    * that last step needs an H.264/VP9 codec (outside the JDK). The
-    * audio analogue is fully real ([[wavDecimate]]).
+    * that last step needs an H.264/VP9 codec (outside the JDK).
     *
     * Scale shape: pure `mapPartitions` over the binary column — no
     * shuffle, scales at scan bandwidth like the rest of the codecs
@@ -1868,29 +1867,6 @@ object Multimodal {
     import spark.implicits._
     ids.select(col(idCol).cast("long")).as[Long]
       .mapPartitions(_.map(id => Flac.decode(id, synthFlac(id))))
-  }
-
-  /** REAL WAV decimation (the frame-sample op for audio): keep every
-    * `everyN`th sample and divide the declared rate to match, so
-    * duration is preserved (±1 sample) — a genuine parse → resample →
-    * re-encode pass, not a byte stride.
-    */
-  def wavDecimate(id: Long, bytes: Array[Byte], everyN: Int): Array[Byte] = {
-    require(everyN > 0, s"everyN must be positive (doc $id)")
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val meta = Wav.decode(id, bytes)
-    // re-walk to the data chunk (decode validated the container)
-    var off = 12
-    var dataOff = -1
-    while (off + 8 <= bytes.length && dataOff < 0) {
-      val cid = new String(bytes, off, 4, "US-ASCII")
-      val sz = buf.getInt(off + 4)
-      if (cid == "data") dataOff = off + 8 else off += 8 + sz + (sz & 1)
-    }
-    val kept = Array.tabulate((meta.n_samples.toInt + everyN - 1) / everyN)(j =>
-      buf.getShort(dataOff + 2 * j * everyN))
-    Wav.encode(kept, math.max(1, meta.sample_rate.toInt / everyN))
   }
 
   /** Per-doc deterministic PCM16 synth (what a crawler's audio column

@@ -1,6 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
+
+import graft.CacheScope
 
 /** Pipeline framework (SURVEY.md §2.6, P1–P5).
   *
@@ -46,13 +49,34 @@ object Pipeline {
 
   /** P3+P4 `run_etl` (`theetl/etl.py:171-184`): extraction, left-fold
     * through transformations then filters, run every load.
+    *
+    * Loads share one evaluation, as the reference's loads share one
+    * `list[dict]`: with more than one load on a batch frame, the loads get
+    * a lazy local checkpoint of the filtered frame. Under AQE its shuffle
+    * stages run when it is planned, as they would in the first load; the
+    * first load's own job computes and stores its rows, later loads read
+    * them, and the blocks are freed after the last load
+    * ([[CacheScope.free]]), also when a load throws. So the chain
+    * (scan, stages, shuffles, and any non-deterministic column) runs once
+    * per call, not once per load. The pin is lazy because an eager one
+    * (`CacheScope.cache`, `localCheckpoint()`) runs its own job before the
+    * first load can commit: an eager prototype raised the silver-commit
+    * latency by up to 30%. It is not a `persist()`: under AQE a cached plan
+    * that is not yet built is materialized as its own query stage, which
+    * is again a job before the first load's write. A frame the caller
+    * already cached is handed on as it is. The returned frame is the
+    * filtered frame itself, not the freed pin.
     */
   def run(spark: SparkSession, conf: Conf, reg: Registry,
       params: Map[String, String] = Map.empty): DataFrame = {
     val extracted = reg.resolveExtraction(conf.extraction)(spark, params)
     val transformed = conf.transformations.foldLeft(extracted)((df, n) => reg.resolveStage(n)(df))
     val filtered = conf.filters.foldLeft(transformed)((df, n) => reg.resolveStage(n)(df))
-    conf.loads.foreach(n => reg.resolveLoad(n)(filtered))
+    val pin = conf.loads.size > 1 && !filtered.isStreaming &&
+      filtered.storageLevel == StorageLevel.NONE
+    val shared = if (pin) filtered.localCheckpoint(eager = false) else filtered
+    try conf.loads.foreach(n => reg.resolveLoad(n)(shared))
+    finally if (pin) CacheScope.free(shared)
     filtered
   }
 

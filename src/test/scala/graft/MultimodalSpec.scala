@@ -188,16 +188,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("Wav decimation is a real resample: every Nth sample, duration kept") {
-    val s = Array.tabulate(100)(i => (i * 3).toShort)
-    val out = Multimodal.Wav.decode(1L,
-      Multimodal.wavDecimate(1L, Multimodal.Wav.encode(s, 8000), 4))
-    assert(out.sample_rate == 2000 && out.n_samples == 25)
-    assert(out.first_sample == 0 && out.last_sample == 96 * 3) // samples 0,4,...,96
-    assert(out.duration_ms == 12) // 25 / 2000 Hz — within a sample of 100/8000
-    assert(out.sum_sq == (0 until 100 by 4).map(i => (i * 3L) * (i * 3L)).sum)
-  }
-
   test("Png encode∘decode is identity across all five scanline filters") {
     // h=7 → the per-row filter cycle (y mod 5) covers None/Sub/Up/
     // Average/Paeth plus two repeats; distinct channel affines catch
