@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * distributed loop.
   *
   * The iterative operators (connected components, pagerank, triangle
-  * count, k-core, NN-descent, the BPE/byte-BPE/WordPiece merge loops,
+  * count, k-core, NN-descent, the byte-BPE/WordPiece merge loops,
   * logistic-regression GD) pay a fixed number of Spark jobs per round
   * whatever the data size — the per-query scheduling cost that "From
   * Batch Processing to Real Time Analytics: Running Presto at Scale"

@@ -536,16 +536,16 @@ object Queries {
     (s, dir) => {
       val c = t(s, dir, "customer")
       val a = c.select(col("c_custkey").as("id1"), col("c_acctbal").as("bal1"),
-        col("c_nationkey").as("nat1"), col("c_mktsegment").as("seg"))
+        col("c_nationkey").as("nat1"), col("c_mktsegment").as("seg1"))
       val b = c.select(col("c_custkey").as("id2"), col("c_acctbal").as("bal2"),
-        col("c_nationkey").as("nat2"), col("c_mktsegment").as("seg"))
+        col("c_nationkey").as("nat2"), col("c_mktsegment").as("seg2"))
       val score = Similarity.weightedScore(
         Similarity.exactMatch(col("nat1"), col("nat2")),
         Similarity.numericCloseness(col("bal1"), col("bal2")),
         lit(1.0))
-      a.join(b, "seg").filter(col("id1") < col("id2"))
-        .withColumn("similarity_score", score)
-        .filter(col("similarity_score") >= 0.9)
+      // A3: pairs within a market segment, each unordered pair once
+      Similarity.anomalyPairs(a, b,
+          col("seg1") === col("seg2") && col("id1") < col("id2"), score, 0.9)
         .select(col("id1"), col("id2"), col("similarity_score"))
         .orderBy(col("id1"), col("id2"))
     },
@@ -1960,7 +1960,7 @@ object Queries {
       |""".stripMargin.trim))
 
   /** Dedup clustering: near-dup PAIRS (q36's blocked n-gram Jaccard) →
-    * canonical CLUSTERS via connected components (min-label propagation);
+    * canonical CLUSTERS via connected components (large-star/small-star);
     * every document gets a cluster id (its component's smallest doc_id,
     * itself when unpaired) and a keep flag — the step that turns
     * pairwise similarity into an actual dedup decision. The oracle
@@ -2425,16 +2425,17 @@ object Queries {
       |GROUP BY 1, 2 ORDER BY 1, 2
       |""".stripMargin.trim))
 
-  /** q61's dedup clustering driven by the large-star/small-star CC
-    * variant — same pair pipeline, same recursive-CTE oracle, so the
-    * O(log n) algorithm is hash-checked end to end, not just
-    * property-tested against its sibling.
+  /** q61's dedup clustering under its earlier registered name — same
+    * pair pipeline, same `connectedComponents` operator, same
+    * recursive-CTE oracle. It ran a second CC algorithm until the two
+    * loops merged into one; the name stays so earlier timing and oracle
+    * records remain comparable.
     */
   val q77: Q = Q(
     "q77_dedup_clusters_star",
     (s, dir) => {
       val pairs = ngramJaccardPairs(s, dir, theta = 0.7)
-      val comp = Analytics.connectedComponentsStar(pairs, "id1", "id2")
+      val comp = Analytics.connectedComponents(pairs, "id1", "id2")
         .withColumnRenamed("id", "doc_id")
       t(s, dir, "documents").select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
@@ -3194,12 +3195,12 @@ object Queries {
     "q96_avro_roundtrip",
     (s, dir) => {
       import graft.sources.AvroSource
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q96-avro").toString
+      val avro = s"$scratchRoot/q96_avro" // replaced whole by each write
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"),
           col("l_shipdate"))
-      AvroSource.write(li, s"$tmp/lineitem_avro")
-      AvroSource.read(s, s"$tmp/lineitem_avro")
+      AvroSource.write(li, avro)
+      AvroSource.read(s, avro)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
@@ -4486,7 +4487,7 @@ object Queries {
     * vocabulary makes the threshold bite (many 3-grams recur), so the
     * oracle discriminates: a wrong doc-frequency count or a dropped
     * left-join null shifts every ratio. See
-    * `TextOps.commonNgramScrub` for the 100-TB shuffle shape.
+    * `TextOps.commonNgramScrubRelative` for the 100-TB shuffle shape.
     */
   val q129: Q = Q(
     "q129_common_ngram_scrub",
@@ -5248,15 +5249,14 @@ object Queries {
   val q151: Q = Q(
     "q151_orc_roundtrip",
     (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q151-orc").toString
+      val orc = s"$scratchRoot/q151_orc"
       val src = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
           col("l_shipdate"), col("l_returnflag"))
-      src.write.mode("overwrite").partitionBy("l_returnflag")
-        .orc(s"$tmp/lineitem_orc")
+      src.write.mode("overwrite").partitionBy("l_returnflag").orc(orc)
       // explicit schema: an all-empty write leaves no files to infer from
       // (and skipping inference also saves a footer-listing pass at scale)
-      s.read.schema(src.schema).orc(s"$tmp/lineitem_orc")
+      s.read.schema(src.schema).orc(orc)
         .filter(col("l_returnflag") =!= "N")
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"),
@@ -5278,11 +5278,9 @@ object Queries {
   /** BPE pair statistics (round 10): the inner building block of BPE
     * vocabulary training — word-frequency table first (vocab-sized;
     * the corpus is touched once), then adjacent character-pair counts
-    * weighted by word frequency. [[graft.operators.TrainPrep.bpeTrain]]
+    * weighted by word frequency. [[graft.operators.TrainPrep.byteBpeTrain]]
     * loops the generalized symbol-level form of this with a one-row
-    * argmax read per merge round; the full n-merge trainer is gated by
-    * `BpeSpec` against a naive single-machine reference (the loop is
-    * not SQL-expressible, the building block is).
+    * argmax read per merge round.
     */
   val q152: Q = Q(
     "q152_bpe_pairs",
@@ -5317,14 +5315,13 @@ object Queries {
     "q153_footer_audit",
     (s, dir) => {
       import graft.sources.ParquetFooters
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q153-footer").toString
+      val bucketed = s"$scratchRoot/q153_lineitem_bucketed"
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"),
           (col("l_orderkey") % 8).as("bucket"))
         .repartition(8, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$tmp/lineitem_bucketed")
-      ParquetFooters.footerStats(s, s"$tmp/lineitem_bucketed", "l_orderkey")
+        .write.mode("overwrite").partitionBy("bucket").parquet(bucketed)
+      ParquetFooters.footerStats(s, bucketed, "l_orderkey")
         .select(regexp_extract(col("path"), "bucket=(\\d+)", 1)
           .cast("long").as("bucket"),
           col("n_rows"), col("min_v"), col("max_v"))
@@ -5616,10 +5613,9 @@ object Queries {
 
   /** Fixture merge list for the BPE APPLY queries (q159/q160) — FIXED,
     * not trained in-query, so the oracle replays the IDENTICAL merge
-    * chain from the same literals (training itself is gated by BpeSpec
-    * against a textbook reference, and its pair-count building block is
-    * q152). Ordered: later merges consume earlier merges' outputs
-    * ("t"+"h" → "th", then "th"+"e" → "the", then "the"+"</w>").
+    * chain from the same literals (the pair-count building block of
+    * training is q152). Ordered: later merges consume earlier merges'
+    * outputs ("t"+"h" → "th", then "th"+"e" → "the", then "the"+"</w>").
     */
   private val bpeMerges: Seq[(String, String)] = Seq(
     "t" -> "h", "th" -> "e", "the" -> "</w>", "i" -> "n", "a" -> "n",
@@ -6132,14 +6128,13 @@ object Queries {
     "q168_compaction_plan",
     (s, dir) => {
       import graft.sources.ParquetFooters
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q168-compact").toString
+      val docs = s"$scratchRoot/q168_docs"
       t(s, dir, "documents")
         .select(col("doc_id"),
           floor(sqrt(col("doc_id") % 169)).cast("long").as("bucket"))
         .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$tmp/docs")
-      val perBucket = ParquetFooters.footerStats(s, s"$tmp/docs", "doc_id")
+        .write.mode("overwrite").partitionBy("bucket").parquet(docs)
+      val perBucket = ParquetFooters.footerStats(s, docs, "doc_id")
         .select(regexp_extract(col("path"), "bucket=(\\d+)", 1)
           .cast("long").as("input_id"), col("n_rows"))
         .groupBy(col("input_id"))
@@ -6698,9 +6693,7 @@ object Queries {
     * `bit_xor` content digest — the consumer-verifiable manifest every
     * shard writer emits. The xor digest is a commutative monoid, so it
     * partial-aggregates map-side (no per-shard list, unlike q86's
-    * sorted-collect fingerprint) — see `TrainPrep.shardManifest`; the
-    * write half (`exportShards`) recomputes this same manifest from the
-    * written files, spec-gated for equality.
+    * sorted-collect fingerprint) — see `TrainPrep.shardManifest`.
     */
   val q178: Q = Q(
     "q178_shard_manifest",
@@ -8529,7 +8522,7 @@ object Queries {
         k = 20, iters = 3, nBits = 4, seedMod = 64)
       val edges = g.filter(col("cosine_sim") >= 0.4)
         .select(col("vec_id").as("id1"), col("neighbor_id").as("id2"))
-      val cc = Analytics.connectedComponentsStar(edges, "id1", "id2")
+      val cc = Analytics.connectedComponents(edges, "id1", "id2")
         .withColumnRenamed("id", "vec_id")
       emb.select(col("vec_id").cast("long").as("vec_id"))
         .join(cc, Seq("vec_id"), "left")
@@ -9189,7 +9182,7 @@ object Queries {
       // pinned: the edge union feeds CC AND both modality-flag reads
       val edges = cs.cache(img.withColumn("__m", lit("img"))
         .unionByName(txt.withColumn("__m", lit("txt"))))
-      val cc = Analytics.connectedComponentsStar(
+      val cc = Analytics.connectedComponents(
         edges.select(col("id1"), col("id2")).distinct(), "id1", "id2")
         .withColumnRenamed("id", "doc_id")
       val flags = edges

@@ -137,28 +137,6 @@ object Analytics {
       .drop("__bin", "__lus", "__rus")
   }
 
-  /** Connected components over an undirected edge list by iterative
-    * min-label propagation: every node's label converges to the smallest
-    * node id in its component — the canonical-representative step that
-    * turns near-duplicate PAIRS into dedup CLUSTERS.
-    *
-    * Each round propagates labels across edges (one hash-shuffle join +
-    * a partial-aggregable min) AND across the current labeling itself
-    * (pointer doubling: node → label(label(node))), so rounds needed are
-    * O(log diameter), not diameter — measured 21 s → ~5-6 s on the sf0.1
-    * near-dup chain graph. The full large-star/small-star formulation
-    * (provably O(log n) with bounded intermediate sizes) is implemented
-    * as [[connectedComponentsStar]] behind the same contract
-    * (property-tested equivalent) for graphs where edge multiplicity
-    * makes propagation's neighbor joins the bottleneck at 100 TB.
-    *
-    * Convergence is detected exactly: the label total (exact decimal sum)
-    * strictly decreases every non-converged round, so equal consecutive
-    * totals == fixpoint. Deterministic at any parallelism (min is
-    * order-free). Returns (id BIGINT, component BIGINT) for every node
-    * that appears in an edge; isolated nodes never enter and callers
-    * left-join + coalesce to themselves.
-    */
   // Local fast paths (round 18 for components, round 19 for pagerank,
   // k-core and triangles — guide §1.2/§2.4): the iterative loops below
   // cost a fixed 1–6 Spark jobs per round regardless of data size, so an
@@ -238,57 +216,110 @@ object Analytics {
         StructField("component", LongType, nullable = false))))
   }
 
+  /** Connected components over an undirected edge list by alternating
+    * large-star / small-star contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14): every node's label
+    * converges to the smallest node id in its component, the
+    * canonical-representative step that turns near-duplicate PAIRS into
+    * dedup CLUSTERS. O(log n) rounds with BOUNDED intermediate edge
+    * growth, where plain min-label propagation can amplify high-degree
+    * neighborhoods.
+    *
+    *  - large-star(u): every STRICTLY LARGER neighbor of u re-points to
+    *    `m(u) = min(Γ(u) ∪ u)`;
+    *  - small-star(u): on the (larger → smaller) canonical edges, every
+    *    smaller neighbor and u itself re-point to m(u).
+    *
+    * The input is read ONCE: its distinct canonical (larger, smaller)
+    * pairs, self-loops and NULL endpoints included, are checkpointed,
+    * and both the contraction's edge set and the final label-every-node
+    * aggregate read that checkpoint. Both steps are one groupBy-min + one
+    * equi-join — partial-aggregable, no windows. Convergence is exact AND
+    * single-job: the old and new canonical edge sets are tagged ±1,
+    * unioned, and groupBy-summed — the symmetric difference is empty iff
+    * every (u,v) nets to zero. Per-round `localCheckpoint()` truncates
+    * lineage: without it the logical plan grows every round and exhausts
+    * the driver heap long before the data does.
+    *
+    * Returns (id BIGINT, component BIGINT) for every node that appears in
+    * an edge; a NULL endpoint is its own node labelled NULL. Deterministic
+    * at any parallelism (min is order-free). Isolated nodes never enter
+    * and callers left-join + coalesce to themselves.
+    */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 25): DataFrame = {
-    val e0 = edges.select(col(srcCol).cast("long").as("a"),
+      maxIters: Int = 50): DataFrame = {
+    val raw = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))
-    val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().persist()
-    // size-adaptive local fast path: the symmetric edge set is
-    // materialized either way — one count against the pinned cache
-    // decides, and the collect is bounded
-    LocalFastPath.collect(sym, LocalFastPath.CcEdges)(edgeRow).foreach { es =>
-      sym.unpersist(blocking = false)
+    // `a > b` is NULL on a NULL endpoint, so that row keeps both values
+    val larger = col("a") > col("b")
+    // lazy: the first job over it (the fast path's size probe, or the
+    // loop's first round) fills the blocks, later jobs read them
+    val base = raw
+      .select(when(larger, col("a")).otherwise(col("b")).as("u"),
+        when(larger, col("b")).otherwise(col("a")).as("v"))
+      .distinct().localCheckpoint(eager = false)
+
+    // size-adaptive local fast path: union-find over every canonical pair
+    // (a self-loop labels its node) is the whole answer; a NULL endpoint
+    // sends the edge set to the loop
+    LocalFastPath.collect(base, LocalFastPath.CcEdges)(edgeRow).foreach { es =>
+      CacheScope.free(base)
       return localComponentsDf(edges.sparkSession, es)
     }
-    // localCheckpoint, not persist, for the per-round labeling: the
-    // pointer-doubling self-join references the previous round's plan
-    // several times, so without lineage TRUNCATION the logical plan tree
-    // grows ~3^rounds and exhausts the driver heap long before the data
-    // does (persist caches rows but keeps the full plan). Checkpoint
-    // blocks of dropped rounds are GC-managed by the ContextCleaner.
-    var labels = sym.select(col("a").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint()
-    var prevTotal: java.math.BigDecimal = null
+
+    def largeStar(cur: DataFrame): DataFrame = {
+      val sym = cur.union(cur.select(col("v").as("u"), col("u").as("v")))
+      val m = sym.groupBy(col("u"))
+        .agg(min(col("v")).as("__mn"))
+        .select(col("u"), least(col("__mn"), col("u")).as("m"))
+      sym.join(m, "u")
+        .filter(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+    }
+
+    def smallStar(cur: DataFrame): DataFrame = {
+      // cur is canonical (u > v) after largeStar's (bigger → min) emits
+      val canon = cur.select(greatest(col("u"), col("v")).as("u"),
+        least(col("u"), col("v")).as("v"))
+      val m = canon.groupBy(col("u")).agg(min(col("v")).as("m"))
+      canon.join(m, "u")
+        .select(col("v").as("u"), col("m").as("v"))
+        .union(m.select(col("u"), col("m").as("v")))
+        .filter(col("u") =!= col("v"))
+        .select(greatest(col("u"), col("v")).as("u"),
+          least(col("u"), col("v")).as("v"))
+        .distinct()
+    }
+
+    // self-loops and NULL-endpoint rows carry no edge to contract
+    var e = base.filter(col("u") =!= col("v"))
     var iter = 0
-    var done = false
+    var done = e.isEmpty
     while (!done && iter < maxIters) {
-      // a NULL id takes no neighbour's label and keeps its own NULL, as
-      // in connectedComponentsStar, which drops NULL edges
-      val nbr = sym.join(labels, sym("b") === labels("id") && sym("a").isNotNull)
-        .select(sym("a").as("id"), labels("component").as("component"))
-      // pointer doubling: jump to the label's label in the same round
-      val l2 = labels.select(col("id").as("pid"), col("component").as("pcomp"))
-      val jumped = labels.join(l2, labels("component") === l2("pid"))
-        .select(labels("id").as("id"), l2("pcomp").as("component"))
-      val next = labels.union(nbr).union(jumped)
-        .groupBy(col("id")).agg(min(col("component")).as("component"))
-        .localCheckpoint()
-      val total = next.agg(sum(col("component")).cast("decimal(38,0)"))
-        .head().getDecimal(0)
-      // null total == empty graph: converged trivially (otherwise the
-      // null-vs-null comparison would spin all maxIters empty rounds)
-      done = total == null || (prevTotal != null && total.compareTo(prevTotal) == 0)
-      prevTotal = total
-      // the previous round's checkpoint is dead the moment `next` is
-      // materialized (the eager checkpoint + the total probe both ran):
-      // free its blocks now instead of waiting on the ContextCleaner (§5)
-      CacheScope.free(labels)
-      labels = next
+      val next = smallStar(largeStar(e)).localCheckpoint()
+      // exact convergence, ONE job: both sides are distinct sets, so the
+      // symmetric difference is empty iff every (u,v) appears with +1 and
+      // −1 — a single union+groupBy probe over the two edge sets
+      done = next.withColumn("__side", lit(1))
+        .unionByName(e.withColumn("__side", lit(-1)))
+        .groupBy(col("u"), col("v")).agg(sum(col("__side")).as("__d"))
+        .filter(col("__d") =!= 0).isEmpty
+      // the old round's checkpoint is dead once the probe above ran (it
+      // was the last reader); free its blocks eagerly (§5). The first
+      // round's `e` is a filter over `base`, which free leaves alone.
+      CacheScope.free(e)
+      e = next
       iter += 1
     }
-    sym.unpersist(blocking = false)
-    labels
+    // converged edges are stars (node → component root); roots and
+    // nodes with only self-loop or NULL-endpoint rows label themselves
+    val nodes = base.select(col("u").as("id"))
+      .union(base.select(col("v").as("id"))).distinct()
+    e.select(col("u").as("id"), col("v").as("component"))
+      .union(nodes.select(col("id"), col("id").as("component")))
+      .groupBy(col("id")).agg(min(col("component")).as("component"))
   }
 
   /** Interval overlap join WITHOUT an equi key: pairs of intervals (in
@@ -402,106 +433,7 @@ object Analytics {
       col(compCol).cast("long").as("v"))
     val delta = newEdges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
-    connectedComponentsStar(star.unionByName(delta), "u", "v")
-  }
-
-  /** Connected components via alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SOCC'14) — the deep-graph fallback behind the same
-    * contract as [[connectedComponents]]: O(log n) rounds with BOUNDED
-    * intermediate edge growth, where plain min-label propagation can
-    * amplify high-degree neighborhoods.
-    *
-    *  - large-star(u): every STRICTLY LARGER neighbor of u re-points to
-    *    `m(u) = min(Γ(u) ∪ u)`;
-    *  - small-star(u): on the (larger → smaller) canonical edges, every
-    *    smaller neighbor and u itself re-point to m(u).
-    *
-    * Both steps are one groupBy-min + one equi-join — partial-aggregable,
-    * no windows. Convergence is exact AND single-job: the old and new
-    * canonical edge sets are tagged ±1, unioned, and groupBy-summed — the
-    * symmetric difference is empty iff every (u,v) nets to zero — instead
-    * of a lossy checksum or a 3-job count+count+anti-join probe; per-round
-    * `localCheckpoint()` truncates lineage (same driver-heap reasoning as
-    * the propagation variant). Returns (id, component) for every node in
-    * an edge, component = smallest node id, identical to
-    * [[connectedComponents]] (property-tested equivalence).
-    */
-  def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 50): DataFrame = {
-    val raw = edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v"))
-    // every node that appears in ANY edge (self-loops included) gets a
-    // label — same contract as connectedComponents
-    val nodes = raw.select(col("u").as("id"))
-      .union(raw.select(col("v").as("id"))).distinct()
-    var e = raw
-      .filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct().localCheckpoint()
-
-    // size-adaptive local fast path: the canonical edge set is already
-    // materialized by the checkpoint; when admitted, close it with
-    // union-find and keep ONLY the final label-every-node aggregate
-    // distributed (nodes is corpus-sized; the component table is
-    // answer-sized)
-    LocalFastPath.collect(e, LocalFastPath.CcEdges)(edgeRow).foreach { es =>
-      return localComponentsDf(edges.sparkSession, es)
-        .union(nodes.select(col("id"), col("id").as("component")))
-        .groupBy(col("id")).agg(min(col("component")).as("component"))
-    }
-
-    def largeStar(cur: DataFrame): DataFrame = {
-      val sym = cur.union(cur.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy(col("u"))
-        .agg(min(col("v")).as("__mn"))
-        .select(col("u"), least(col("__mn"), col("u")).as("m"))
-      sym.join(m, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-
-    def smallStar(cur: DataFrame): DataFrame = {
-      // cur is canonical (u > v) after largeStar's (bigger → min) emits
-      val canon = cur.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val m = canon.groupBy(col("u")).agg(min(col("v")).as("m"))
-      canon.join(m, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(m.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-        .distinct()
-    }
-
-    var iter = 0
-    var done = e.isEmpty
-    while (!done && iter < maxIters) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      // exact convergence, ONE job: both sides are distinct sets, so the
-      // symmetric difference is empty iff every (u,v) appears with +1 and
-      // −1 — a single union+groupBy probe over the two checkpointed RDDs
-      // (was count+count+anti-join = 3 jobs per round; driver round-trips
-      // dominate the small-tail rounds)
-      done = next.withColumn("__side", lit(1))
-        .unionByName(e.withColumn("__side", lit(-1)))
-        .groupBy(col("u"), col("v")).agg(sum(col("__side")).as("__d"))
-        .filter(col("__d") =!= 0).isEmpty
-      // the old round's checkpoint is dead once the probe above ran
-      // (it was the last reader); free its blocks eagerly (§5)
-      CacheScope.free(e)
-      e = next
-      iter += 1
-    }
-    // converged edges are stars (node → component root); roots and
-    // nodes with only self-loop edges label themselves
-    e.select(col("u").as("id"), col("v").as("component"))
-      .union(nodes.select(col("id"), col("id").as("component")))
-      .groupBy(col("id")).agg(min(col("component")).as("component"))
+    connectedComponents(star.unionByName(delta), "u", "v")
   }
 
   /** PageRank over an undirected graph (symmetrized edge list), EXACT
@@ -999,8 +931,7 @@ object Analytics {
       .groupBy("id").agg(count(lit(1)).as("deg"))
 
   /** Orient each canonical edge from its (degree, id)-lower endpoint `a`
-    * to its higher endpoint `b`; `rd` carries rank-degree of `b` so the
-    * wedge join can order out-neighbour pairs without a third join. */
+    * to its higher endpoint `b`. */
   private[graft] def orientByDegree(e: DataFrame, deg: DataFrame): DataFrame = {
     val uLower = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
@@ -1008,8 +939,7 @@ object Analytics {
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
       .select(
         when(uLower, col("u")).otherwise(col("v")).as("a"),
-        when(uLower, col("v")).otherwise(col("u")).as("b"),
-        when(uLower, col("dv")).otherwise(col("du")).as("rd"))
+        when(uLower, col("v")).otherwise(col("u")).as("b"))
   }
 
   /** Equi-depth (quantile) binning: split rows into `nBins` buckets of

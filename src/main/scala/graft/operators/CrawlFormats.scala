@@ -37,7 +37,6 @@ object CrawlFormats {
       text_md5: String)
 
   object Gzip {
-    private val Ftext = 1
     private val Fhcrc = 2
     private val Fextra = 4
     private val Fname = 8

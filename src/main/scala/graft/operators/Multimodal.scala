@@ -127,13 +127,6 @@ object Multimodal {
       }
   }
 
-  /** Resized-media record; `resample_ok` = a real pixel resample ran
-    * (false → the payload had no decodable pixel grid and the labeled
-    * strided-byte fallback was emitted instead).
-    */
-  case class ResizedMedia(doc_id: Long, format: String, resample_ok: Boolean,
-      out_w: Int, out_h: Int, bytes: Array[Byte])
-
   /** Fixed-point bilinear resample over a top-down RGB grid. All
     * arithmetic is exact int64-safe integer math (8-bit fractional
     * weights, round-half-up at 1/131072) so the q127 DuckDB oracle can
@@ -174,51 +167,6 @@ object Multimodal {
       oy += 1
     }
     out
-  }
-
-  /** REAL image resize (round 10 — the resize stub's justification
-    * expired once the decoders produced actual pixels): decode the
-    * payload's pixel grid with the matching REAL codec (BMP/PNG/JPEG),
-    * run the exact-integer [[bilinearResample]], and re-encode as BMP
-    * (the canonical raw-RGB output container). Non-pixel formats
-    * (wav/mp4) and corrupt payloads keep the labeled strided-byte
-    * fallback with `resample_ok = false` — same total-decode contract as
-    * [[decodeMedia]].
-    */
-  def resize(df: DataFrame, idCol: String, binCol: String,
-      outW: Int, outH: Int): Dataset[ResizedMedia] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val fmt = sniffFormat(bytes)
-          def fallback = {
-            val target = math.max(1, math.min(outW * outH, bytes.length))
-            val stride = math.max(1, bytes.length / target)
-            ResizedMedia(id, fmt, resample_ok = false, outW, outH,
-              bytes.grouped(stride).map(_.head).toArray)
-          }
-          try {
-            val grid = fmt match {
-              case "bmp" => Some(Bmp.pixels(id, bytes))
-              case "png" => Some(Png.pixels(id, bytes))
-              case "jpeg" => Some(Jpeg.pixels(id, bytes))
-              case "gif" => Some(Gif.pixels(id, bytes))
-              case _ => None
-            }
-            grid.fold(fallback) { case (w, h, rgb) =>
-              val out = bilinearResample(w, h, rgb, outW, outH)
-              ResizedMedia(id, fmt, resample_ok = true, outW, outH,
-                Bmp.encode(outW, outH, (x, y) => (
-                  out((y * outW + x) * 3) & 0xff,
-                  out((y * outW + x) * 3 + 1) & 0xff,
-                  out((y * outW + x) * 3 + 2) & 0xff)))
-            }
-          } catch { case scala.util.control.NonFatal(_) => fallback }
-        }
-      }
   }
 
   /** One sampled frame, extracted from the container: its byte window in
@@ -447,7 +395,7 @@ object Multimodal {
 
     /** Top-down RGB pixel grid (the decoder re-orders the file's
       * bottom-up rows and unpacks BGR + padding) — the input real pixel
-      * ops (resize, feature extraction) consume.
+      * ops ([[bilinearResample]], the perceptual hashes) consume.
       */
     def pixels(id: Long, bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
       val buf = java.nio.ByteBuffer.wrap(bytes)
@@ -600,8 +548,9 @@ object Multimodal {
     private[Multimodal] case class Parsed(w: Int, h: Int, bitDepth: Int,
         colorType: Int, nIdat: Long, rgb: Array[Byte])
 
-    /** Top-down RGB pixel grid — the input real pixel ops (resize,
-      * feature extraction) consume. Same full parse as [[decode]].
+    /** Top-down RGB pixel grid — the input real pixel ops
+      * ([[bilinearResample]], the perceptual hashes) consume. Same full
+      * parse as [[decode]].
       */
     def pixels(id: Long, bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
       val p = parse(id, bytes)
@@ -947,14 +896,6 @@ object Multimodal {
       bw.flush()
       marker(0xd9) // EOI
       out.toByteArray
-    }
-
-    /** Top-down RGB pixel grid (post IDCT + color convert + crop) — the
-      * input real pixel ops (resize, feature extraction) consume.
-      */
-    def pixels(id: Long, bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
-      val (w, h, _, _, rgb) = parse(id, bytes)
-      (w, h, rgb)
     }
 
     def decode(id: Long, bytes: Array[Byte]): JpegMeta = {
@@ -1679,7 +1620,7 @@ object Multimodal {
     }
 
     /** Decoded top-down RGB grid (palette applied) — the same shape the
-      * other image codecs expose, so GIFs flow through the real resize.
+      * other image codecs expose, so GIFs flow through the real pixel ops.
       */
     def pixels(id: Long, bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
       val (meta, palette, idx) = decodePixels(id, bytes)

@@ -195,13 +195,10 @@ object Perceptual {
     Multimodal.synthWav(base)
   }
 
-  /** doc_id, 15-bit frame-energy fingerprint, exact content aggregates,
-    * and the canonical (minimum) doc_id among identical-content clips.
-    */
-  case class AudioFp(doc_id: Long, fp: Long, n_samples: Long, sum_sq: Long,
-      dup_of: Long, is_dup: Boolean)
-
-  /** documents → real WAV bytes → REAL PCM decode → [[AudioFp]].
+  /** documents → real WAV bytes → REAL PCM decode → (doc_id, fp,
+    * n_samples, sum_sq, dup_of, is_dup): the frame-energy fingerprint,
+    * exact content aggregates, and the canonical (minimum) doc_id among
+    * identical-content clips.
     * Fingerprint: split the clip into `nFrames` contiguous frames
     * (boundaries k·n div nFrames), exact int64 energy per frame, bit k
     * set iff energy(k+1) > energy(k). Duplicate resolution groups on the

@@ -45,24 +45,11 @@ object Similarity {
     * Candidate generation is a hash-shuffle equi-join on `blockOn`, so
     * the pair count is Σ per-block |t1ᵦ|·|t2ᵦ| — never the unbounded
     * |t1|·|t2| the reference's nested loop implies, which does not
-    * survive 100 TB. The raw cross-join parity form still exists but
-    * only under the explicitly-named opt-in
-    * [[anomalyPairsUnblocked]] — this signature cannot express the
-    * O(n²) mistake.
+    * survive 100 TB — this signature cannot express the O(n²) mistake.
     */
   def anomalyPairs(t1: DataFrame, t2: DataFrame, blockOn: Column,
       score: Column, threshold: Double): DataFrame =
     t1.join(t2, blockOn).withColumn("similarity_score", score)
-      .filter(col("similarity_score") >= threshold)
-
-  /** A3 exact parity form: score ALL pairs — an unbounded O(|t1|·|t2|)
-    * cross join. Explicit opt-in for callers that have already bounded a
-    * side (a broadcast-size dim, a single-entity probe); everywhere else
-    * use [[anomalyPairs]] with a blocking key.
-    */
-  def anomalyPairsUnblocked(t1: DataFrame, t2: DataFrame, score: Column,
-      threshold: Double): DataFrame =
-    t1.crossJoin(t2).withColumn("similarity_score", score)
       .filter(col("similarity_score") >= threshold)
 
   /** TF-IDF pipeline fitted once per corpus (Q6 fix): text → tokens →

@@ -282,14 +282,25 @@ object TextOps {
         length(p) > 0 && !p.rlike("^(utm_[^=]*|gclid|fbclid)(=|$)")))
         .cast("long").as("n_params"))
 
-  /** Cross-document boilerplate detection (round 10 — the corpus-level
-    * repeated-span scrub crawl pipelines run after per-doc dedup: nav
-    * bars, cookie banners and license footers repeat VERBATIM across
-    * thousands of pages, and n-grams shared by more than `maxDocs`
-    * distinct documents are boilerplate, not content). Emits one row
-    * per doc that has any n-gram at all: total distinct n-grams, how
-    * many are corpus-common, and the common ratio — the signal a
-    * pipeline thresholds on to route docs to span-removal.
+  /** Cross-document boilerplate detection (round 10; threshold made
+    * corpus-relative in round 11 — the corpus-level repeated-span scrub
+    * crawl pipelines run after per-doc dedup: nav bars, cookie banners
+    * and license footers repeat VERBATIM across thousands of pages, and
+    * n-grams shared by more than `perMille`/1000 of the corpus's
+    * documents are boilerplate, not content). Emits one row per doc that
+    * has any n-gram at all: total distinct n-grams, how many are
+    * corpus-common, and the common ratio — the signal a pipeline
+    * thresholds on to route docs to span-removal.
+    *
+    * The absolute threshold is derived from a corpus count —
+    * ⌈N·perMille/1000⌉, floored at 1, in exact integer arithmetic
+    * ((N·p + 999) DIV 1000, so both engines agree; a double multiply
+    * would disagree with DuckDB's decimal 0.05·500) — which bounds the
+    * common-gram broadcast BY CONSTRUCTION: at most 1000/perMille ·
+    * (grams per doc) distinct grams can cross a fraction-of-corpus
+    * threshold (an absolute doc count would let the broadcast common set
+    * grow with the corpus). The count rides in as a broadcast scalar,
+    * never a driver read.
     *
     * Scale shape: the gram→doc-frequency aggregation is two-phase
     * (partial counts map-side, one shuffle on the gram key); the
@@ -298,26 +309,6 @@ object TextOps {
     * it — the corpus's gram stream is never shuffled a second time. At
     * 100 TB the first aggregation is the one unavoidable shuffle; a
     * count-min sketch pre-filter can shrink it further, same shape.
-    */
-  def commonNgramScrub(df: DataFrame, idCol: String, textCol: String,
-      n: Int, maxDocs: Long): DataFrame = {
-    require(n >= 1, s"n-gram order must be >= 1, got $n")
-    require(maxDocs >= 1, s"maxDocs must be >= 1, got $maxDocs")
-    scrubWithThreshold(df, idCol, textCol, n, _ => lit(maxDocs))
-  }
-
-  /** [[commonNgramScrub]] with the CORPUS-RELATIVE threshold the
-    * operator's contract always implied (round 11 — the round-10
-    * verdict's "absolute maxDocs lets the broadcast common set grow
-    * with the corpus"): a gram is boilerplate when it appears in more
-    * than `perMille`/1000 of the corpus's documents. The absolute
-    * threshold is derived from a corpus count — ⌈N·perMille/1000⌉,
-    * floored at 1, in exact integer arithmetic ((N·p + 999) DIV 1000,
-    * so both engines agree; a double multiply would disagree with
-    * DuckDB's decimal 0.05·500) — which bounds the common-gram
-    * broadcast BY CONSTRUCTION: at most 1000/perMille · (grams per
-    * doc) distinct grams can cross a fraction-of-corpus threshold.
-    * The count rides in as a broadcast scalar, never a driver read.
     */
   def commonNgramScrubRelative(df: DataFrame, idCol: String, textCol: String,
       n: Int, perMille: Int): DataFrame = {
@@ -470,10 +461,10 @@ object TextOps {
       .filter(col("dist") <= 1)
   }
 
-  /** Shared scrub core: gram doc-frequencies vs a threshold that may
-    * depend on the corpus doc count (exposed to `mkThreshold` as the
-    * broadcast scalar column `__total`). */
-  private def scrubWithThreshold(df: DataFrame, idCol: String, textCol: String,
+  /** Scrub core of [[commonNgramScrubRelative]]: gram doc-frequencies vs
+    * a threshold that may depend on the corpus doc count (exposed to
+    * `mkThreshold` as the broadcast scalar column `__total`). */
+  private[graft] def scrubWithThreshold(df: DataFrame, idCol: String, textCol: String,
       n: Int, mkThreshold: Column => Column): DataFrame = {
     val grams = df.select(col(idCol).as("doc_id"),
       explode(wordNgrams(tokens(col(textCol)), n)).as("gram"))
@@ -779,13 +770,6 @@ object TextOps {
         sum(col("q")).as("nll_micro"))
       .withColumn("avg_nll",
         col("nll_micro").cast("double") / col("n_bigrams").cast("double"))
-  }
-
-  /** Jaccard similarity of two shingle sets; 0 when both empty. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val uni = size(array_union(a, b)).cast("double")
-    when(uni === 0, lit(0.0)).otherwise(inter / uni)
   }
 
   /** MinHash base: one md5 per shingle → first 15 hex digits as int64 →

@@ -400,19 +400,8 @@ object TrainPrep {
         (col("max_x") - col("min_x") + 1) * (col("max_y") - col("min_y") + 1))
   }
 
-  /** Encoding advisor — the companion to [[zorderLayout]]: given a file
-    * assignment and the write order WITHIN each file, report per file
-    * the statistics that decide a column's physical encoding the way a
-    * parquet writer does — value count, RUN count (RLE pays when runs
-    * are long), distinct count (dictionary pays when it is small), and
-    * the max absolute delta between consecutive values (bit-packed
-    * delta pays when it is narrow). A table-maintenance job runs this
-    * before choosing a rewrite; at 100 TB the window is per FILE
-    * (PlanAuditSpec's no-partitionless-window rule holds — row groups
-    * live inside files, so a global order is never needed).
-    */
   /** Character-pair frequency counts — the inner building block of BPE
-    * vocabulary training ([[bpeTrain]] loops a generalized form of it).
+    * vocabulary training ([[byteBpeTrain]] loops a generalized form of it).
     * Tokenize on whitespace, collapse to a word-frequency table FIRST
     * (vocab-sized — orders of magnitude smaller than the corpus; this
     * is what makes distributed BPE tractable at 100 TB), then count
@@ -436,89 +425,6 @@ object TrainPrep {
       .agg(sum(col("f")).as("cnt"))
   }
 
-  /** Distributed BPE vocabulary training (pair-merge loop). Builds the
-    * word-frequency table once (the corpus is touched exactly once; the
-    * loop runs over the vocab-sized symbol table), then for each of
-    * `nMerges` rounds: count adjacent symbol pairs weighted by word
-    * frequency, pick the most frequent (ties broken lexicographically —
-    * fully deterministic at any parallelism), and merge that pair in
-    * every word's symbol sequence. The per-round driver read is ONE row
-    * (the argmax) — a bounded control-plane read, same budget as the
-    * IVF centroid reads. The merge itself is an `aggregate` fold over
-    * the symbol array (greedy leftmost-first, the reference BPE order):
-    * stays declarative, no UDF.
-    *
-    * Words end with an explicit `</w>` symbol so merges can't cross
-    * word boundaries and final-position subwords stay distinct — the
-    * classic formulation. Returns the learned merges (rank, a, b,
-    * weighted count) as a DataFrame; `BpeSpec` checks the full list
-    * against a naive single-machine reference implementation.
-    */
-  def bpeTrain(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
-    require(nMerges >= 1 && nMerges <= 10000, s"bpeTrain: bad nMerges $nMerges")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val words = docs
-      .select(explode(split(lower(col(textCol)), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("f"))
-    // chars + explicit end-of-word marker as the initial symbol sequence.
-    // Checkpointed iteration (the pagerank/kcore pattern): each round's
-    // symbol table is lineage-truncated, so the per-round fold doesn't
-    // stack nMerges aggregate()s into one plan; dropped checkpoints are
-    // GC-managed, no pin bookkeeping.
-    var symbols = words.select(col("f"),
-      concat(split(col("w"), ""), array(lit("</w>"))).as("syms"))
-      .localCheckpoint()
-    // round 19: in-process merge loop when the word table is bounded
-    // (one count job against the checkpoint — the CC fast-path budget)
-    collectSyms(symbols).foreach { rows =>
-      return pairMergeLoopLocal(rows, nMerges)
-        .toDF("rank", "a", "b", "cnt")
-        .select(col("rank").cast("long").as("rank"), col("a"), col("b"),
-          col("cnt"))
-    }
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var rank = 0
-    while (rank < nMerges) {
-      val top = symbols
-        .select(col("f"), explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("l"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("r"))).as("p"))
-        .select(col("p.l").as("a"), col("p.r").as("b"), col("f"))
-        .groupBy(col("a"), col("b")).agg(sum(col("f")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) rank = nMerges
-      else {
-        val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((rank, a, b, cnt))
-        // greedy leftmost-first merge of (a, b) inside every sequence:
-        // fold symbols left to right; when the running tail is `a` and
-        // the next symbol is `b`, replace the tail with `a || b`. A
-        // just-merged token never re-merges in the same round (the fold
-        // compares the MERGED tail against `a`), matching reference BPE.
-        val merged = expr(
-          s"""aggregate(syms, cast(array() as array<string>), (acc, x) ->
-             |  if(size(acc) > 0 and element_at(acc, -1) = ${sqlLit(a)}
-             |       and x = ${sqlLit(b)},
-             |     concat(slice(acc, 1, size(acc) - 1),
-             |            array(${sqlLit(a + b)})),
-             |     concat(acc, array(x))))""".stripMargin)
-        val nextSyms = symbols.select(col("f"), merged.as("syms")).localCheckpoint()
-        graft.CacheScope.free(symbols) // dead once nextSyms materialized (§5)
-        symbols = nextSyms
-        rank += 1
-      }
-    }
-    // the merge list lives on the driver — the final symbol table has no
-    // reader left; release its blocks too
-    graft.CacheScope.free(symbols)
-    merges.result()
-      .toDF("rank", "a", "b", "cnt")
-      .select(col("rank").cast("long").as("rank"), col("a"), col("b"), col("cnt"))
-  }
-
   /** SQL single-quoted string literal with escaping (merge symbols can
     * contain quotes if the corpus does). */
   private def sqlLit(s: String): String = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -526,7 +432,7 @@ object TrainPrep {
   // ==========================================================================
   // Round 19 (guide §1.2/§2.4 — the CC/graph-tier fast-path pattern,
   // judged REAL in r18, applied to the tokenizer merge loops): each of
-  // the sequential trainers (bpeTrain / byteBpeTrain / wordPieceTrain)
+  // the sequential trainers (byteBpeTrain / wordPieceTrain)
   // pays 2 bounded jobs PER MERGE ROUND (argmax collect + symbol-table
   // re-checkpoint) over a vocab-sized table whose per-round job
   // scheduling, not data, dominates at benchmark scale. When the
@@ -592,7 +498,7 @@ object TrainPrep {
     rows
   }
 
-  /** In-process replay of the bpeTrain/byteBpeTrain merge loop: argmax
+  /** In-process replay of the byteBpeTrain merge loop: argmax
     * by (count desc, a, b) under UTF-8 byte order, leftmost-first
     * merge, stop when no pair remains — identical selections and
     * counts round for round. */
@@ -685,17 +591,17 @@ object TrainPrep {
     merges.result()
   }
 
-  /** Tokenize ONE word with a trained BPE merge list — the apply half of
-    * [[bpeTrain]], and the single most-executed step in a training-data
-    * pipeline (its output counts feed packing, budget mixing and shard
-    * writing).
+  /** Tokenize ONE word with a BPE merge list (words end with an explicit
+    * `</w>` symbol, so merges never cross word boundaries) — the single
+    * most-executed step in a training-data pipeline (its output counts
+    * feed packing, budget mixing and shard writing).
     *
     * Encoding trick: the word is spread into a delimited symbol string
     * where every symbol owns one LEADING and one TRAILING space
     * ("the" → " t  h  e  </w> "), so applying merge (a, b) is ONE
     * literal string replace: " a  b " → " ab ". `replace` substitutes
     * disjoint matches scanning left to right, which is exactly the
-    * greedy leftmost-first semantics of [[bpeTrain]]'s aggregate fold —
+    * greedy leftmost-first semantics of [[byteBpeTrain]]'s aggregate fold —
     * each pair's boundary spaces belong to that pair alone, so adjacent
     * matches (" a  b  a  b ") both fire, while a just-merged token
     * never re-merges in the same round. BpeSpec proves token-for-token
@@ -893,10 +799,12 @@ object TrainPrep {
 
   /** Byte-level BPE trainer: pre-token frequency table (no lowercasing,
     * whitespace runs are pre-tokens too), byte-char initial symbols
-    * (no end-of-word marker), then the identical greedy merge loop as
-    * [[bpeTrain]] — top pair by (count desc, a, b), leftmost-first
-    * fold, checkpointed per round. Returns (rank, a, b, cnt) over
-    * byte-char symbols.
+    * (no end-of-word marker), then the pair-merge loop: per round, count
+    * adjacent symbol pairs weighted by frequency, pick the top pair by
+    * (count desc, a, b) — fully deterministic at any parallelism; the
+    * per-round driver read is ONE row — and merge it leftmost-first in
+    * every symbol sequence (an `aggregate` fold, no UDF), checkpointed
+    * per round. Returns (rank, a, b, cnt) over byte-char symbols.
     */
   def byteBpeTrain(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     require(nMerges >= 1 && nMerges <= 10000, s"byteBpeTrain: bad nMerges $nMerges")
@@ -929,6 +837,11 @@ object TrainPrep {
       else {
         val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((rank, a, b, cnt))
+        // greedy leftmost-first merge of (a, b) inside every sequence:
+        // fold symbols left to right; when the running tail is `a` and
+        // the next symbol is `b`, replace the tail with `a || b`. A
+        // just-merged token never re-merges in the same round (the fold
+        // compares the MERGED tail against `a`), matching reference BPE.
         val merged = expr(
           s"""aggregate(syms, cast(array() as array<string>), (acc, x) ->
              |  if(size(acc) > 0 and element_at(acc, -1) = ${sqlLit(a)}
@@ -1075,7 +988,7 @@ object TrainPrep {
 
   /** WordPiece vocabulary training: `nMerges` rounds of (pair stats →
     * quantized-score argmax → greedy leftmost fold merge), the
-    * [[bpeTrain]] loop with the normalized selection criterion. The
+    * [[byteBpeTrain]] loop with the normalized selection criterion. The
     * per-round driver read is ONE row (the argmax); the corpus is
     * touched once for the word table, every round runs over the
     * vocab-sized symbol table, checkpointed per round. Returns
@@ -1353,34 +1266,17 @@ object TrainPrep {
         pmod(col("__start"), lit(budget)).as("pack_offset"))
   }
 
-  /** Materialize the packed epoch-shard assignment as ACTUAL shard files
-    * (round 15 — the last step between q216's reproducible assignment
-    * and a resumable training run): one `epoch=E/shard=S` directory per
-    * shard, JSON-lines content, rows in seeded position order. The
-    * repartition keys on EXACTLY (epoch, shard), so every shard's rows
-    * land whole in one task → exactly ONE part file per directory; with
-    * `sortWithinPartitions(epoch, shard, pos)` the file's BYTES are a
-    * pure function of (corpus, seed, epochs, nShards, budget) — two
-    * independent writes are byte-identical per shard (file NAMES carry
-    * task ids; contents, which is what a resuming trainer reads, do
-    * not). TrainPrepSpec pins the double-write equality; a trainer
-    * resuming mid-epoch re-reads only `epoch=E/shard=S` — partition
-    * pruning on the directory keys, never a corpus scan.
+  /** Encoding advisor — the companion to [[zorderLayout]]: given a file
+    * assignment and the write order WITHIN each file, report per file
+    * the statistics that decide a column's physical encoding the way a
+    * parquet writer does — value count, RUN count (RLE pays when runs
+    * are long), distinct count (dictionary pays when it is small), and
+    * the max absolute delta between consecutive values (bit-packed
+    * delta pays when it is narrow). A table-maintenance job runs this
+    * before choosing a rewrite; at 100 TB the window is per FILE
+    * (PlanAuditSpec's no-partitionless-window rule holds — row groups
+    * live inside files, so a global order is never needed).
     */
-  def writeEpochShards(docsWithTok: DataFrame, idCol: String, tokCol: String,
-      seed: String, epochs: Int, nShards: Int, budget: Long,
-      outDir: String): Unit = {
-    require(epochs.toLong * nShards <= (1 << 20),
-      s"writeEpochShards: ${epochs}x$nShards output partitions is too many")
-    packEpochShards(docsWithTok, idCol, tokCol, seed, epochs, nShards, budget)
-      .select(col("epoch"), col("shard"),
-        to_json(struct(col(idCol).as("id"), col("pos"), col("n_tok"),
-          col("pack_id"), col("pack_offset"))).as("value"))
-      .repartition(epochs * nShards, col("epoch"), col("shard"))
-      .sortWithinPartitions(col("epoch"), col("shard"), col("pos"))
-      .write.partitionBy("epoch", "shard").mode("overwrite").text(outDir)
-  }
-
   def encodingAdvisor(df: DataFrame, fileCol: Column, orderCols: Seq[Column],
       valueCol: Column): DataFrame = {
     df.select(fileCol.cast("long").as("file_id"),
@@ -1733,27 +1629,6 @@ object TrainPrep {
       .agg(count(lit(1)).as("n_docs"), sum(col("__t")).as("n_tokens"),
         expr("bit_xor(__h)").as("digest_xor"))
 
-  /** The write half: land the corpus as shard-partitioned parquet and
-    * return the manifest recomputed FROM THE WRITTEN FILES — the
-    * manifest certifies what landed, not what was meant. One shuffle-
-    * free partitioned write (partitionBy moves no rows; each input task
-    * appends to its shards' directories), then a read-back aggregate.
-    */
-  def exportShards(df: DataFrame, idCol: String, textCol: String,
-      nShards: Int, outDir: String): DataFrame = {
-    shardAssign(df, idCol, nShards)
-      .select(col(idCol), col(textCol), col("shard_id"))
-      .write.mode("overwrite").partitionBy("shard_id").parquet(outDir)
-    val back = df.sparkSession.read.parquet(outDir)
-    back.select(col("shard_id").cast("long").as("shard_id"),
-        conv(substring(md5(concat(col(idCol).cast("string"), lit(":"),
-          col(textCol))), 1, 15), 16, 10).cast("long").as("__h"),
-        TextOps.tokenCount(col(textCol)).cast("long").as("__t"))
-      .groupBy(col("shard_id"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("__t")).as("n_tokens"),
-        expr("bit_xor(__h)").as("digest_xor"))
-  }
-
   // ==========================================================================
   // Trained quality classifier (round 16 — verdict item 3): deterministic
   // integer-micro BATCH logistic regression over the q110 hashed
@@ -1780,7 +1655,7 @@ object TrainPrep {
   // per-doc margin sum under the broadcast (dim+1)-row weight vector,
   // and a per-bucket gradient sum — with only the (dim+1)-long gradient
   // ever reaching the driver. Rounds are a driver loop over bounded
-  // state, exactly like bpeTrain's merge loop.
+  // state, exactly like byteBpeTrain's merge loop.
   // ==========================================================================
 
   /** Margin clamp for [[sigmoidMicro]]: past ±1e12 micro the rational

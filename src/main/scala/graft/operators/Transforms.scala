@@ -16,15 +16,11 @@ import org.apache.spark.sql.types.{DecimalType, StringType}
   */
 object Transforms {
 
-  /** T3 date-format precedence, exactly the reference's order
-    * (`transactions.py:57-81`, SURVEY.md Q3): `yyyy-MM-dd`, `dd-MM-yyyy`,
-    * `yyyy/MM/dd`, `dd/MM/yyyy`. Strict 4-digit-year patterns make the
-    * precedence unambiguous (`15-03-1997` cannot match `yyyy-MM-dd`).
-    */
-  val DateFormats: Seq[String] =
-    Seq("yyyy-MM-dd", "dd-MM-yyyy", "yyyy/MM/dd", "dd/MM/yyyy")
-
   /** T3 `fix_date_format` → typed DATE; null when no format matches.
+    * Formats are tried in the reference's order (`transactions.py:57-81`,
+    * SURVEY.md Q3): `yyyy-MM-dd`, `dd-MM-yyyy`, `yyyy/MM/dd`,
+    * `dd/MM/yyyy`. Strict 4-digit-year patterns make the precedence
+    * unambiguous (`15-03-1997` cannot match `yyyy-MM-dd`).
     *
     * Shape-guarded: each `try_to_date` is gated by a cheap regex so
     * non-matching rows skip the parser instead of throwing internally —

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM (SentencePiece-shape) tokenizer — the OTHER public
-  * tokenizer family next to BPE (`TrainPrep.bpeTrain`/`bpeApply`):
+  * tokenizer family next to BPE (`TrainPrep.byteBpeTrain`/`bpeApply`):
   * instead of a merge list, a VOCABULARY of pieces with log-
   * probabilities, applied by Viterbi-segmenting each word into the
   * maximum-likelihood piece sequence (Kudo 2018). The published
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * corpus-likelihood monotonicity hard-EM guarantees.
   *
   * Scale shape (100 TB): the corpus is touched once per stage —
-  * word-frequency table first (vocab-sized, like `bpeTrain`), seed
+  * word-frequency table first (vocab-sized, like the BPE trainers), seed
   * counting and EM recounting are partial-aggregating groupBys over
   * exploded substrings, and application segments DISTINCT words only
   * (one DP per word, joined back to documents on the word — an
@@ -56,7 +56,7 @@ object UnigramLm {
   case class Piece(piece: String, cnt: Long, lp_micro: Long)
 
   /** Lowercase-whitespace word frequency table — the same word model
-    * as `bpeTrain` (tokenizers segment words independently).
+    * as `TrainPrep.bpePairCounts` (tokenizers segment words independently).
     */
   def wordFreqs(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(TextOps.tokens(col(textCol))).as("w"))
@@ -725,278 +725,6 @@ object UnigramLm {
       .reduce(_ + _)
   }
 
-  /** The O(n·maxPieceLen) forward–backward soft-EM expectation — the
-    * 100-TB SCALE PATH next to [[softEmRound]]'s SQL-replayable
-    * enumeration: identical semantics (expected piece counts over the
-    * full segmentation lattice), computed in unquantized double
-    * log-space with log-sum-exp, so there is NO word-length cap — the
-    * lattice never materializes. Not cross-engine-replayable (per-cell
-    * transcendentals don't round-trip), hence no oracle face; instead
-    * UnigramSpec pins agreement with the enumeration path on in-cap
-    * words (the two compute the same sum, differing only by the
-    * enumeration's single micro-quantization per segmentation) and
-    * coverage of words BEYOND the enumeration cap. Returns
-    * (piece, ec) with ec in expected-count units (doubles).
-    */
-  def softEmRoundFB(words: DataFrame, vocab: Seq[Piece],
-      maxPieceLen: Int): DataFrame = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    val lpB = spark.sparkContext.broadcast(
-      vocab.map(p => p.piece -> p.lp_micro).toMap)
-    words.select(col("w").cast("string"), col("f").cast("long"))
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        val lp = lpB.value
-        it.flatMap { case (w, f) =>
-          val n = w.length
-          if (n == 0) Iterator.empty
-          else {
-            def lse(a: Double, b: Double): Double =
-              if (a == Double.NegativeInfinity) b
-              else if (b == Double.NegativeInfinity) a
-              else { val m = math.max(a, b); m + math.log1p(math.exp(math.min(a, b) - m)) }
-            val fa = Array.fill(n + 1)(Double.NegativeInfinity)
-            val fb = Array.fill(n + 1)(Double.NegativeInfinity)
-            fa(0) = 0.0; fb(n) = 0.0
-            var j = 1
-            while (j <= n) {
-              var i = math.max(0, j - maxPieceLen)
-              while (i < j) {
-                lp.get(w.substring(i, j)).foreach { v =>
-                  fa(j) = lse(fa(j), fa(i) + v / 1e6)
-                }
-                i += 1
-              }
-              j += 1
-            }
-            var i2 = n - 1
-            while (i2 >= 0) {
-              var j2 = math.min(n, i2 + maxPieceLen)
-              while (j2 > i2) {
-                lp.get(w.substring(i2, j2)).foreach { v =>
-                  fb(i2) = lse(fb(i2), v / 1e6 + fb(j2))
-                }
-                j2 -= 1
-              }
-              i2 -= 1
-            }
-            val z = fa(n)
-            if (z == Double.NegativeInfinity) Iterator.empty
-            else {
-              val acc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-              var a = 0
-              while (a < n) {
-                var b = a + 1
-                val bMax = math.min(n, a + maxPieceLen)
-                while (b <= bMax) {
-                  val piece = w.substring(a, b)
-                  lp.get(piece).foreach { v =>
-                    val post = math.exp(fa(a) + v / 1e6 + fb(b) - z)
-                    if (post > 0.0) acc.update(piece, acc.getOrElse(piece, 0.0) + post)
-                  }
-                  b += 1
-                }
-                a += 1
-              }
-              acc.iterator.map { case (p, e) => (p, f * e) }
-            }
-          }
-        }
-      }
-      .toDF("piece", "e")
-      .groupBy(col("piece")).agg(sum(col("e")).as("ec"))
-  }
-
-  /** Cap-free leave-one-out pruning loss via forward DPs in double
-    * log-space (round 14 — the 100-TB face of [[pruneLosses]], which
-    * still enumerates under the `maxWordLen` cap): per distinct word,
-    * one O(n·maxPieceLen) forward pass gives logZ_w; for each
-    * multi-char vocab piece whose occurrence is on a live lattice path
-    * (forward(a) and backward(b) both finite around an occurrence),
-    * one more forward pass over the lattice with that piece BANNED
-    * gives logZ_w^{−p} — banning kills every occurrence at once, the
-    * exact leave-one-out semantics. loss(p) = Σ_w f_w·(logZ_w −
-    * logZ_w^{−p}), the same quantity [[pruneLosses]] computes exactly,
-    * here unquantized (per-cell log-sum-exp does not replay
-    * cross-engine — hence no oracle face; UnigramSpec gates keep-set
-    * agreement with the enumeration loss on in-cap fixtures and
-    * coverage of words beyond the cap). Per-word cost is
-    * O(n²·maxPieceLen²) — polynomial, NO length cap, so the pruning
-    * schedule no longer drops long words from its statistics. Output:
-    * (piece, loss_micro DOUBLE) for every multi-char vocab piece. A
-    * piece that is some word's ONLY bridge over a char the vocab lacks
-    * (possible on externally-supplied vocabs; trained vocabs keep full
-    * char coverage) gets loss +Infinity — irreplaceable, and the top-k
-    * keep-rank retains it by construction (UnigramSpec pins this).
-    */
-  def pruneLossesFB(words: DataFrame, vocab: Seq[Piece],
-      maxPieceLen: Int): DataFrame = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    val lpB = spark.sparkContext.broadcast(
-      vocab.map(p => p.piece -> p.lp_micro).toMap)
-    val contrib = words.select(col("w").cast("string"), col("f").cast("long"))
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        val lp = lpB.value
-        def lse(a: Double, b: Double): Double =
-          if (a == Double.NegativeInfinity) b
-          else if (b == Double.NegativeInfinity) a
-          else { val m = math.max(a, b); m + math.log1p(math.exp(math.min(a, b) - m)) }
-        def forward(w: String, banned: String): Array[Double] = {
-          val n = w.length
-          val fa = Array.fill(n + 1)(Double.NegativeInfinity)
-          fa(0) = 0.0
-          var j = 1
-          while (j <= n) {
-            var i = math.max(0, j - maxPieceLen)
-            while (i < j) {
-              if (fa(i) != Double.NegativeInfinity) {
-                val piece = w.substring(i, j)
-                if (piece != banned)
-                  lp.get(piece).foreach(v => fa(j) = lse(fa(j), fa(i) + v / 1e6))
-              }
-              i += 1
-            }
-            j += 1
-          }
-          fa
-        }
-        it.flatMap { case (w, f) =>
-          val n = w.length
-          if (n == 0) Iterator.empty
-          else {
-            val fa = forward(w, null)
-            val z = fa(n)
-            if (z == Double.NegativeInfinity) Iterator.empty
-            else {
-              // backward reachability for candidate pruning (values are
-              // the suffix log-partitions; only finiteness is used)
-              val fb = Array.fill(n + 1)(Double.NegativeInfinity)
-              fb(n) = 0.0
-              var i2 = n - 1
-              while (i2 >= 0) {
-                var j2 = math.min(n, i2 + maxPieceLen)
-                while (j2 > i2) {
-                  if (fb(j2) != Double.NegativeInfinity)
-                    lp.get(w.substring(i2, j2)).foreach(v =>
-                      fb(i2) = lse(fb(i2), v / 1e6 + fb(j2)))
-                  j2 -= 1
-                }
-                i2 -= 1
-              }
-              val cands = scala.collection.mutable.LinkedHashSet.empty[String]
-              var a = 0
-              while (a < n) {
-                if (fa(a) != Double.NegativeInfinity) {
-                  var b = math.min(n, a + maxPieceLen)
-                  while (b > a + 1) { // multi-char only
-                    if (fb(b) != Double.NegativeInfinity) {
-                      val piece = w.substring(a, b)
-                      if (lp.contains(piece)) cands += piece
-                    }
-                    b -= 1
-                  }
-                }
-                a += 1
-              }
-              cands.iterator.map { p =>
-                val zm = forward(w, p)(n)
-                // With full char coverage the char-only path survives every
-                // ban, so zm is finite. When the vocab MISSES a char of `w`
-                // (possible on externally-supplied vocabs), a banned piece
-                // can be the only bridge over that char: zm = -Inf. That
-                // piece is IRREPLACEABLE — its leave-one-out loss is
-                // +Infinity by definition, emitted explicitly so the top-k
-                // keep-rank (loss desc) always retains it. +Inf sums with
-                // any finite word contribution to +Inf — never NaN, since
-                // z >= zm makes every contribution non-negative.
-                if (zm == Double.NegativeInfinity)
-                  (p, Double.PositiveInfinity)
-                else
-                  (p, f.toDouble * (z - zm) * 1e6)
-              }
-            }
-          }
-        }
-      }
-      .toDF("piece", "loss")
-      .groupBy(col("piece")).agg(sum(col("loss")).as("loss_micro"))
-    vocab.filter(p => cpLen(p.piece) > 1).map(_.piece).toDF("piece")
-      .join(contrib, Seq("piece"), "left")
-      .select(col("piece"),
-        coalesce(col("loss_micro"), lit(0.0)).as("loss_micro"))
-  }
-
-  /** [[pruneVocab]] on the cap-free FB loss — keep-rank distributed the
-    * same way (top-k; only the keep rows reach the driver). */
-  def pruneVocabFB(words: DataFrame, vocab: Seq[Piece], maxPieceLen: Int,
-      targetMultis: Int): Seq[Piece] = {
-    require(targetMultis >= 0, s"pruneVocabFB: bad targetMultis $targetMultis")
-    val keep = keepSet(pruneLossesFB(words, vocab, maxPieceLen), targetMultis)
-    vocab.filter(p => cpLen(p.piece) == 1 || isBytePiece(p.piece) || keep(p.piece))
-  }
-
-  /** Collect a forward–backward re-estimate to the driver vocab
-    * artifact: chars floored at a tiny positive mass (ln must stay
-    * finite; chars guarantee segmentability), multi-char pieces with
-    * no expectation mass dropped, lp = round(ln(ec/Σec)·1e6). The
-    * `cnt` field carries round(ec·1e6) for interop with [[Piece]].
-    */
-  def collectSoftRoundFB(words: DataFrame, vocab: Seq[Piece],
-      maxPieceLen: Int): Seq[Piece] = {
-    val ec = softEmRoundFB(words, vocab, maxPieceLen)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val floorMass = 1e-6
-    val entries = vocab.flatMap { p =>
-      if (cpLen(p.piece) == 1)
-        Some(p.piece -> math.max(ec.getOrElse(p.piece, 0.0), floorMass))
-      else ec.get(p.piece).filter(_ > 0.0).map(p.piece -> _)
-    }.sortBy(_._1)
-    val total = entries.map(_._2).sum
-    entries.map { case (piece, e) =>
-      Piece(piece, math.round(e * 1e6),
-        math.round(math.log(e / total) * 1e6))
-    }
-  }
-
-  /** The CAP-FREE composed trainer (round 14 — the 100-TB face of
-    * [[trainSoft]], closing the scale story [[softEmRoundFB]] and
-    * [[pruneLossesFB]] opened piecewise): the identical published
-    * schedule — seed oversized, re-estimate, prune the lowest-loss
-    * multis by keepFrac, repeat, final re-estimate — with every
-    * lattice pass forward–backward in double log-space, so NO word
-    * ever drops out of the statistics for being long. Not
-    * cross-engine-replayable (per-cell transcendentals), hence no
-    * oracle face; UnigramSpec gates vocabulary agreement with
-    * [[trainSoft]] on an in-cap fixture and end-to-end training on a
-    * corpus whose words exceed the enumeration cap.
-    */
-  def trainSoftFB(docs: DataFrame, textCol: String, maxPieceLen: Int,
-      seedSize: Int, vocabSize: Int, keepFrac: Double = 0.75): Seq[Piece] = {
-    require(seedSize >= vocabSize,
-      s"trainSoftFB: seedSize $seedSize must be >= vocabSize $vocabSize")
-    require(keepFrac > 0 && keepFrac < 1, s"trainSoftFB: bad keepFrac $keepFrac")
-    val words = wordFreqs(docs, textCol).localCheckpoint()
-    var vocab = collectVocab(seedVocab(docs, textCol, maxPieceLen, seedSize))
-    val nChars = vocab.count(p => cpLen(p.piece) == 1)
-    val targetMultis = math.max(vocabSize - nChars, 0)
-    var guard = 0
-    while (vocab.count(p => cpLen(p.piece) > 1) > targetMultis && guard < 64) {
-      vocab = collectSoftRoundFB(words, vocab, maxPieceLen)
-      val multis = vocab.count(p => cpLen(p.piece) > 1)
-      val next = math.max(targetMultis,
-        math.min(multis - 1, math.ceil(multis * keepFrac).toInt))
-      if (next < multis)
-        vocab = pruneVocabFB(words, vocab, maxPieceLen, next)
-      guard += 1
-    }
-    val out = collectSoftRoundFB(words, vocab, maxPieceLen)
-    graft.CacheScope.free(words) // out is driver-side; words is dead (§5)
-    out
-  }
-
   /** Subword-regularization SAMPLING (round 14 — the published
     * unigram-LM training-time feature the Viterbi [[apply]] face
     * deliberately lacks: instead of always emitting the best
@@ -1123,41 +851,5 @@ object UnigramLm {
         coalesce(col("n_pieces"), lit(0L)).as("n_pieces"),
         coalesce(col("pieces_md5"), md5(lit(""))).as("pieces_md5"),
         coalesce(col("n_resampled"), lit(0L)).as("n_resampled"))
-  }
-
-  /** Full soft-EM trainer with the published pruning schedule: seed at
-    * `seedSize` (oversized), then per round — one soft-EM re-estimate,
-    * then prune the lowest-loss multi-char pieces down to
-    * max(target, ⌈keep·current⌉) — until the vocab reaches
-    * `vocabSize`, finishing with one final re-estimate so scores match
-    * the surviving vocabulary. `keepFrac` 0.75 mirrors the published
-    * shrinking factor.
-    */
-  def trainSoft(docs: DataFrame, textCol: String, maxPieceLen: Int,
-      seedSize: Int, vocabSize: Int, keepFrac: Double = 0.75,
-      maxWordLen: Int = 16): Seq[Piece] = {
-    require(seedSize >= vocabSize,
-      s"trainSoft: seedSize $seedSize must be >= vocabSize $vocabSize")
-    require(keepFrac > 0 && keepFrac < 1, s"trainSoft: bad keepFrac $keepFrac")
-    val words = wordFreqs(docs, textCol).localCheckpoint()
-    var vocab = collectVocab(seedVocab(docs, textCol, maxPieceLen, seedSize))
-    val nChars = vocab.count(p => cpLen(p.piece) == 1)
-    val targetMultis = math.max(vocabSize - nChars, 0)
-    var guard = 0
-    while (vocab.count(p => cpLen(p.piece) > 1) > targetMultis && guard < 64) {
-      vocab = collectSoftRound(words, vocab, maxPieceLen, maxWordLen)
-      val multis = vocab.count(p => cpLen(p.piece) > 1)
-      // clamp to guarantee progress: ceil(multis·keepFrac) == multis for
-      // tiny multis (1..3 at 0.75), which would spin the loop without
-      // ever pruning — always step down at least one piece
-      val next = math.max(targetMultis,
-        math.min(multis - 1, math.ceil(multis * keepFrac).toInt))
-      if (next < multis)
-        vocab = pruneVocab(words, vocab, maxPieceLen, next, maxWordLen)
-      guard += 1
-    }
-    val out = collectSoftRound(words, vocab, maxPieceLen, maxWordLen)
-    graft.CacheScope.free(words) // out is driver-side; words is dead (§5)
-    out
   }
 }

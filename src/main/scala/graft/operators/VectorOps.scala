@@ -119,8 +119,9 @@ object VectorOps {
     concat((1 to nBits).map(i =>
       when(element_at(vec, i) >= 0, lit("1")).otherwise(lit("0"))): _*)
 
-  /** Deterministic k-means coarse quantizer for IVF: returns (idCol,
-    * cell) assignments after `iters` Lloyd iterations.
+  /** Deterministic k-means coarse quantizer for IVF: returns the (idCol,
+    * cell) assignments after `iters` Lloyd iterations and the fitted
+    * centroids themselves (index = cell id, quantized-int units).
     *
     * Scale shape: per iteration one broadcast of k×dim centroids into a
     * codegen'd argmin projection over the corpus + one k-row groupBy —
@@ -134,17 +135,12 @@ object VectorOps {
     * Distances compare `|c|² − 2·v·c` (monotone in true distance) in
     * exact int64 arithmetic; ties break toward the lower cell id via
     * struct ordering.
-    */
-  def kmeansCells(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int = 3): DataFrame =
-    kmeansFit(corpus, idCol, vecCol, k, iters)._1
-
-  /** `kmeansCells` plus the fitted centroids themselves (index = cell
-    * id, quantized-int units). The centroids are already ON THE DRIVER
-    * when the fit finishes — handing them to `ivfTopK` lets the probe
-    * build its centroid table as a k-row local relation instead of
-    * re-aggregating the full corpus (one whole corpus scan + two-level
-    * aggregate removed from the probe plan).
+    *
+    * The centroids are already ON THE DRIVER when the fit finishes —
+    * handing them to `ivfTopK` lets the probe build its centroid table
+    * as a k-row local relation instead of re-aggregating the full corpus
+    * (one whole corpus scan + two-level aggregate removed from the probe
+    * plan).
     *
     * Job-count invariant (PlanAuditSpec): the fit runs exactly ONE Spark
     * job per Lloyd iteration (the integer SUM/COUNT update collect) —
@@ -164,7 +160,7 @@ object VectorOps {
       .select(col("__v")).collect().map(_.getSeq[Double](0))
     // an empty corpus would make the argmin an empty array() whose
     // NullType fails analysis — fail fast with a real message instead
-    require(centroids.nonEmpty, "kmeansCells: corpus has no vectors")
+    require(centroids.nonEmpty, "kmeansFit: corpus has no vectors")
     // argmin as ONE expression over array-literal centroids (complex-type
     // literals land in the codegen references array, so the generated
     // source is independent of k AND of the centroid values — one compile
@@ -258,7 +254,7 @@ object VectorOps {
       if (dim > 0) dim
       else corpus.select(size(col(vecCol))).limit(1).collect()
         .headOption.map(_.getInt(0)).getOrElse(0)
-    // same fail-fast as kmeansCells: an empty corpus would otherwise build
+    // same fail-fast as kmeansFit: an empty corpus would otherwise build
     // array() (NullType) centroids and die with an obscure analysis error
     require(nDims > 0, "ivfTopK: corpus has no vectors")
     // integer-rounded centroids: element-wise mean of the quantized cell,
@@ -311,7 +307,7 @@ object VectorOps {
 
   /** Per-label centroid (average pooling): element-wise integer mean of
     * the quantized vectors in each label group, rounded once — the
-    * deterministic building block shared with kmeansCells' update step,
+    * deterministic building block shared with kmeansFit's update step,
     * exposed as an operator (class prototypes, cluster summaries).
     *
     * Scale shape: posexplode fans each vector into (label, dim, value)
@@ -849,31 +845,7 @@ object VectorOps {
       rankAll(cands)
     }
 
-    /** Edges of `next` absent from `g` — the convergence probe's
-      * left-anti count. */
-    def changedCount(g: G, next: G): Long = {
-      var c = 0L
-      var i = 0
-      while (i < n) {
-        val nb = next(i)
-        if (nb != null) {
-          val old = g(i)
-          if (old == null) c += nb.length
-          else {
-            val os = old.clone(); java.util.Arrays.sort(os)
-            var j = 0
-            while (j < nb.length) {
-              if (java.util.Arrays.binarySearch(os, nb(j)) < 0) c += 1L
-              j += 1
-            }
-          }
-        }
-        i += 1
-      }
-      c
-    }
-
-    /** Final exact scoring pass over the converged graph — rows in
+    /** Final exact scoring pass over the last round's graph — rows in
       * (id, rank) order; per-node rankings computed in parallel. */
     def scored(g: G): Seq[(Long, Long, Long, Double)] = {
       val perNode = new Array[Array[(Int, Double)]](n)
@@ -943,69 +915,6 @@ object VectorOps {
     nnRankTopK(nnBase(corpus, idCol, vecCol), g, k)
       .select(col("id").as("vec_id"), col("nb").as("neighbor_id"),
         col("__rn").cast("long").as("nn_rank"), col("__c").as("cosine_sim"))
-  }
-
-  /** NN-descent with the paper's CONVERGENCE criterion instead of a
-    * fixed round count: stop when a round changes fewer than
-    * `minUpdateFrac · k · n` edges (Dong et al.'s δ termination — the
-    * update count is the natural progress measure because every change
-    * is a strict cosine improvement, see the supersets-only-improve
-    * invariant in VectorOpsSpec). One exact edge-diff count per round
-    * (an anti-join on (id, nb) — the same convergence-probe shape as
-    * the CC loop's symmetric-difference check). Returns the scored
-    * graph plus the number of rounds executed. `maxIters` bounds the
-    * loop; data-dependent iteration count means no SQL oracle — the
-    * fixed-iteration q205 face is the oracle, this is the production
-    * driver loop (spec-gated: converges on the fixture, and converged
-    * recall ≥ the fixed-3-round recall).
-    */
-  def nnDescentGraphConverged(corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, maxIters: Int = 12,
-      minUpdateFrac: Double = 0.001, nBits: Int = 4,
-      seedMod: Int = 64): (DataFrame, Int) = {
-    require(minUpdateFrac > 0 && minUpdateFrac < 1,
-      s"nnDescentGraphConverged: bad minUpdateFrac $minUpdateFrac")
-    require(maxIters >= 1 && maxIters <= 64,
-      s"nnDescentGraphConverged: bad maxIters $maxIters")
-    val base = nnBase(corpus, idCol, vecCol)
-    val n = base.count()
-    // size-adaptive local fast path — same δ-termination loop over the
-    // in-process engine (see the LocalNnDescent contract above)
-    if (LocalFastPath.admits(corpus.sparkSession, n, LocalFastPath.NnVecs)) {
-      collectQuantized(base).foreach { data =>
-        val eng = new LocalNnDescent(data, k, nBits, seedMod)
-        val threshold = math.max(1L, (minUpdateFrac * k * n).toLong)
-        var g = eng.init()
-        var rounds = 0
-        var converged = false
-        while (rounds < maxIters && !converged) {
-          val next = eng.round(g)
-          val changed = eng.changedCount(g, next)
-          g = next
-          rounds += 1
-          if (changed < threshold) converged = true
-        }
-        return (localNnScoredDf(corpus.sparkSession, eng.scored(g)), rounds)
-      }
-    }
-    var g = nnDescentInit(corpus, idCol, vecCol, k, nBits, seedMod)
-      .localCheckpoint()
-    val threshold = math.max(1L, (minUpdateFrac * k * n).toLong)
-    var rounds = 0
-    var converged = false
-    while (rounds < maxIters && !converged) {
-      val next = nnDescentRound(corpus, idCol, vecCol, g, k).localCheckpoint()
-      val changed = next.join(g, Seq("id", "nb"), "left_anti").count()
-      // the diff probe was the old round's last reader; free it (§5)
-      graft.CacheScope.free(g)
-      g = next
-      rounds += 1
-      if (changed < threshold) converged = true
-    }
-    val scored = nnRankTopK(base, g, k)
-      .select(col("id").as("vec_id"), col("nb").as("neighbor_id"),
-        col("__rn").cast("long").as("nn_rank"), col("__c").as("cosine_sim"))
-    (scored, rounds)
   }
 
   /** SemDeDup (round 10 — the published semantic-dedup recipe: cluster

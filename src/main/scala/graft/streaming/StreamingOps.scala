@@ -65,43 +65,6 @@ object StreamingOps {
   def dedupExact(events: DataFrame, keyCols: Seq[String]): DataFrame =
     events.dropDuplicates(keyCols)
 
-  /** Stream–static enrichment: join the event stream against a static
-    * dimension table (company/account attributes — the reference's
-    * "header" lookup done stream-shaped). No streaming state at all:
-    * the join re-executes per micro-batch, and AQE picks broadcast-hash
-    * when the dim is small (no forced hint — an oversized dim falls back
-    * to a shuffle join instead of an 8 GB broadcast failure).
-    *
-    * Staleness caveat: a plain `spark.read.parquet(path)` dim SNAPSHOTS
-    * its file listing when the DataFrame is built — rows added to the
-    * path after stream start are never seen. For per-batch freshness use
-    * [[enrichWithRefreshedDim]], which rebuilds the dim inside
-    * `foreachBatch` (or a source that re-resolves snapshots, i.e. a
-    * transactional table format).
-    */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame,
-      keyCols: Seq[String]): DataFrame =
-    stream.join(dim, keyCols, "left")
-
-  /** Stream enrichment with PER-BATCH dimension refresh: the dim frame is
-    * rebuilt from `dimPath` inside `foreachBatch`, so its file listing
-    * re-resolves every micro-batch and rows added mid-stream are joined
-    * from the next batch on — the reference re-queries its lookup on
-    * every event (`/root/reference/etl/transformation/adapt.py` reads the
-    * header per message), and this is that freshness contract with batch
-    * amortization. Trade-off vs [[enrichWithDim]]: a re-list + re-read
-    * per batch (cheap for a dim table; the scan still prunes columns) in
-    * exchange for bounded staleness = one micro-batch. Enriched rows
-    * append to `outPath` as parquet.
-    */
-  def enrichWithRefreshedDim(stream: DataFrame, dimPath: String,
-      keyCols: Seq[String], outPath: String) =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val dim = batch.sparkSession.read.parquet(dimPath)
-        batch.join(dim, keyCols, "left").write.mode("append").parquet(outPath)
-    }
-
   /** §2.7 streaming generalization of the per-batch counters: tumbling
     * window counts/sums per event_type.
     */
@@ -448,71 +411,6 @@ object StreamingOps {
           .write.mode("append").parquet(outPath)
         ()
     }
-  }
-
-  /** Streaming quantile profile — the ONLINE twin of the batch quantile
-    * profiles (`Analytics.equiDepthBins` boundaries / q93's
-    * approx_percentile): every micro-batch appends one profile row per
-    * key (batch id, requested percentiles, count) to `outPath`, giving
-    * the per-batch distribution time series a curation pipeline watches
-    * for drift (price quantiles shifting mid-ingest, document-length
-    * collapse after an upstream change).
-    *
-    * Scale shape: each batch runs ONE partial-aggregable groupBy — the
-    * GK sketch behind `approx_percentile` (O(accuracy) state per key,
-    * mergeable map-side) — and appends |keys| tiny rows; no raw history
-    * is ever retained, no keyed streaming state grows. With `accuracy`
-    * ≥ the batch row count the sketch degenerates to EXACT order
-    * statistics (rank error < 1 row — the q105→q106 exact-mode
-    * argument), which is what the spec gates against the batch operator.
-    *
-    * Output rows: (batch_id, keyCol, p<pct>… one column per requested
-    * percentile, n).
-    */
-  def approxQuantileStream(stream: DataFrame, keyCol: String, valueCol: String,
-      percentiles: Seq[Double], accuracy: Int, outPath: String) = {
-    require(percentiles.nonEmpty && percentiles.forall(p => p > 0 && p < 1),
-      s"approxQuantileStream: percentiles must be in (0,1), got $percentiles")
-    require(percentiles.distinct.size == percentiles.size,
-      s"approxQuantileStream: percentiles must be distinct, got $percentiles")
-    require(accuracy >= 1,
-      s"approxQuantileStream: accuracy must be >= 1, got $accuracy")
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        batchQuantileProfile(batch, keyCol, valueCol, percentiles, accuracy)
-          .withColumn("batch_id", lit(batchId))
-          .select(col("batch_id") +: col(keyCol) +:
-            percentiles.map(p => col(pctName(p))) :+ col("n"): _*)
-          .write.mode("append").parquet(outPath)
-    }
-  }
-
-  /** The per-batch aggregate `approxQuantileStream` runs, exposed so the
-    * batch and streaming forms are one plan by construction (the spec
-    * compares their outputs on identical rows). */
-  private[graft] def batchQuantileProfile(df: DataFrame, keyCol: String,
-      valueCol: String, percentiles: Seq[Double], accuracy: Int): DataFrame =
-    // Column API throughout (round-7 advice fix: the old string-built
-    // `expr` broke on value columns with spaces/specials)
-    df.groupBy(col(keyCol))
-      .agg(percentile_approx(col(valueCol), typedLit(percentiles), lit(accuracy))
-          .as("__qs"),
-        count(lit(1)).as("n"))
-      .select(col(keyCol) +:
-        percentiles.zipWithIndex.map { case (p, i) =>
-          element_at(col("__qs"), i + 1).as(pctName(p))
-        } :+ col("n"): _*)
-
-  /** Column name for percentile `p`, derived from the FULL decimal
-    * (0.334 → "p33_4", 0.005 → "p0_5", 0.5 → "p50") so nearby
-    * percentiles never collide — round-7 advice fix: whole-percent
-    * rounding mapped 0.333 and 0.334 both to "p33", a duplicate column
-    * that breaks the parquet append downstream. `Double.toString` is the
-    * shortest round-tripping form, so distinct doubles give distinct
-    * names. */
-  private[graft] def pctName(p: Double): String = {
-    val s = (BigDecimal(p.toString) * 100).underlying.stripTrailingZeros.toPlainString
-    "p" + s.replace(".", "_").replace("-", "m")
   }
 
   /** Streaming media-decode health monitor (round 10): run the REAL
@@ -917,9 +815,9 @@ object StreamingOps {
       val spark = batch.sparkSession
       // the reference may be a plain one-shot histogram dump or a
       // VersionedLedger (round 13): resolving through readOrPlain means a
-      // refit via commitDriftReference swaps in atomically under a live
-      // stream — the gate sees the old reference or the new one, never a
-      // half-deleted dir
+      // refit committed with `VersionedLedger.commit` swaps in atomically
+      // under a live stream — the gate sees the old reference or the new
+      // one, never a half-deleted dir
       val ref = VersionedLedger.readOrPlain(spark, referencePath)
         .getOrElse(throw new java.io.FileNotFoundException(
           s"driftGateStream: no reference histogram at $referencePath"))
@@ -961,7 +859,7 @@ object StreamingOps {
     * is closed by shipping that version swap. No lineage pin is needed
     * any more: the update plan reads snapshot v{N} and writes v{N+1},
     * never the path it read (and [[graft.operators.Analytics
-    * .connectedComponentsStar]] already truncates per-round lineage
+    * .connectedComponents]] already truncates per-round lineage
     * internally). StreamingSpec pins the invariant that after any number
     * of batches the ledger equals the batch CC over the union of every
     * edge ever streamed, plus the mid-commit-kill recovery case.
@@ -977,23 +875,12 @@ object StreamingOps {
       val updated = VersionedLedger.read(spark, assignmentPath) match {
         case Some(prev) => Analytics.incrementalComponents(
           prev, "id", "component", delta, "id1", "id2")
-        case None => Analytics.connectedComponentsStar(delta, "id1", "id2")
+        case None => Analytics.connectedComponents(delta, "id1", "id2")
       }
       VersionedLedger.commit(
         updated.select(col("id"), col("component")), assignmentPath)
       ()
     }
-  }
-
-  /** Atomically (re)fit the [[driftGateStream]] reference histogram:
-    * commit via [[VersionedLedger]] so a refit under a live gate swaps
-    * in whole-or-not-at-all.
-    */
-  def commitDriftReference(docs: DataFrame, textCol: String, dim: Int,
-      referencePath: String): Long = {
-    import graft.operators.TrainPrep
-    VersionedLedger.commit(
-      TrainPrep.tokenHistogram(docs, textCol, dim), referencePath)
   }
 
   /** Per-key streaming distinct estimate after each micro-batch. */

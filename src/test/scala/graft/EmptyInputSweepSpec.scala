@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Crash sweep: every registered query must run (not necessarily return
   * rows) against EMPTY tables with the production schemas — the
   * empty-batch path the reference special-cases by hand
@@ -27,28 +25,29 @@ class EmptyInputSweepSpec extends SparkSpec {
       "q234_ann_ivfpq_serve")
 
   test("all registered queries survive empty inputs (or fail fast by contract)") {
-    val dir = Files.createTempDirectory("graft-empty").toString
-    // events.ts has shipped as both TIMESTAMP(NANOS) and timestamp[us];
-    // keep the nanosAsLong conf (same as Ingest.events) so either form
-    // copies cleanly — Ingest.events branches on the resulting type.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
-        .limit(0).write.parquet(s"$dir/$t.parquet")
-    }
-    val failures = Queries.all.flatMap { q =>
-      try {
-        q.run(spark, dir).write.format("noop").mode("overwrite").save()
-        if (documentedFailFast(q.name)) Some(s"${q.name}: expected fail-fast, ran")
-        else None
-      } catch {
-        case e: IllegalArgumentException if documentedFailFast(q.name) =>
-          None // contract: require() with a real message
-        case e: Throwable =>
-          Some(s"${q.name}: ${e.getClass.getSimpleName} ${Option(e.getMessage).getOrElse("").take(120)}")
+    SparkSpec.withTempDir("graft-empty") { dir =>
+      // events.ts has shipped as both TIMESTAMP(NANOS) and timestamp[us];
+      // keep the nanosAsLong conf (same as Ingest.events) so either form
+      // copies cleanly — Ingest.events branches on the resulting type.
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings").foreach { t =>
+        spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
+          .limit(0).write.parquet(s"$dir/$t.parquet")
       }
+      val failures = Queries.all.flatMap { q =>
+        try {
+          q.run(spark, dir).write.format("noop").mode("overwrite").save()
+          if (documentedFailFast(q.name)) Some(s"${q.name}: expected fail-fast, ran")
+          else None
+        } catch {
+          case e: IllegalArgumentException if documentedFailFast(q.name) =>
+            None // contract: require() with a real message
+          case e: Throwable =>
+            Some(s"${q.name}: ${e.getClass.getSimpleName} ${Option(e.getMessage).getOrElse("").take(120)}")
+        }
+      }
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
-    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

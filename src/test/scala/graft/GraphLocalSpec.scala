@@ -86,22 +86,4 @@ class GraphLocalSpec extends SparkSpec {
       assert(f == s, s"nnDescentGraph diverges at $f vs $s")
     }
   }
-
-  test("nnDescentGraphConverged local fast path matches rows AND round count") {
-    val emb = graft.sources.Ingest.table(spark, "/root/testdata/sf0.001",
-      "embeddings")
-    val (slowDf, slowRounds) = withLocalFastPathOff {
-      val (d, r) = VectorOps.nnDescentGraphConverged(emb, "vec_id",
-        "embedding", k = 10, maxIters = 6)
-      (nnRows(d), r)
-    }
-    val (fastDf, fastRounds) = {
-      val (d, r) = VectorOps.nnDescentGraphConverged(emb, "vec_id",
-        "embedding", k = 10, maxIters = 6)
-      (nnRows(d), r)
-    }
-    assert(fastRounds == slowRounds,
-      s"converged round count $fastRounds != $slowRounds")
-    assert(fastDf == slowDf, "nnDescentGraphConverged rows diverge")
-  }
 }

@@ -49,34 +49,37 @@ class IngestSpec extends SparkSpec {
   // to synthetic fixtures so the next drift fails one readable test here
   // instead of sixteen queries at verify time.
   test("events loader: BIGINT-nanos fixture takes the legacy DIV-1000 path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-nanos").toString
-    // 2024-01-02T03:04:05.678901 UTC in nanoseconds
-    val micros = 1704164645678901L
-    Seq((1L, micros * 1000L, "click"), (2L, micros * 1000L + 999L, "view"))
-      .toDF("event_id", "ts", "kind")
-      .write.parquet(s"$dir/events.parquet")
-    val e = Ingest.events(spark, dir)
-    assert(e.schema("ts").dataType.typeName == "timestamp")
-    val got = e.orderBy("event_id").select(unix_micros(col("ts"))).as[Long].collect()
-    assert(got.toSeq == Seq(micros, micros)) // sub-µs nanos truncate losslessly
+    SparkSpec.withTempDir("graft-events-nanos") { dir =>
+      // 2024-01-02T03:04:05.678901 UTC in nanoseconds
+      val micros = 1704164645678901L
+      Seq((1L, micros * 1000L, "click"), (2L, micros * 1000L + 999L, "view"))
+        .toDF("event_id", "ts", "kind")
+        .write.parquet(s"$dir/events.parquet")
+      val e = Ingest.events(spark, dir)
+      assert(e.schema("ts").dataType.typeName == "timestamp")
+      val got = e.orderBy("event_id").select(unix_micros(col("ts"))).as[Long].collect()
+      assert(got.toSeq == Seq(micros, micros)) // sub-µs nanos truncate losslessly
+    }
   }
 
   test("events loader: timestamp-typed fixture passes through by value") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-ts").toString
-    Seq((1L, java.sql.Timestamp.valueOf("2024-01-02 03:04:05.678901"), "click"))
-      .toDF("event_id", "ts", "kind")
-      .write.parquet(s"$dir/events.parquet")
-    val e = Ingest.events(spark, dir)
-    assert(e.schema("ts").dataType.typeName == "timestamp")
-    assert(e.select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")).as[String].head()
-      == "2024-01-02 03:04:05.678901")
+    SparkSpec.withTempDir("graft-events-ts") { dir =>
+      Seq((1L, java.sql.Timestamp.valueOf("2024-01-02 03:04:05.678901"), "click"))
+        .toDF("event_id", "ts", "kind")
+        .write.parquet(s"$dir/events.parquet")
+      val e = Ingest.events(spark, dir)
+      assert(e.schema("ts").dataType.typeName == "timestamp")
+      assert(e.select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")).as[String].head()
+        == "2024-01-02 03:04:05.678901")
+    }
   }
 
   test("events loader fails loudly on an unsupported ts type") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-bad").toString
-    Seq((1L, "2024-01-02", "click")).toDF("event_id", "ts", "kind")
-      .write.parquet(s"$dir/events.parquet")
-    val ex = intercept[IllegalStateException](Ingest.events(spark, dir))
-    assert(ex.getMessage.contains("events.ts"))
+    SparkSpec.withTempDir("graft-events-bad") { dir =>
+      Seq((1L, "2024-01-02", "click")).toDF("event_id", "ts", "kind")
+        .write.parquet(s"$dir/events.parquet")
+      val ex = intercept[IllegalStateException](Ingest.events(spark, dir))
+      assert(ex.getMessage.contains("events.ts"))
+    }
   }
 }

@@ -22,37 +22,25 @@ class MultimodalSpec extends SparkSpec {
     assert(r.format == "unknown" && !r.decode_ok)
   }
 
-  test("resize falls back (flagged) on non-pixel payloads") {
-    val out = Multimodal.resize(media, "doc_id", "bin", 4, 4).collect()
-    assert(out.length == 50)
-    assert(out.forall(r => !r.resample_ok && r.format == "unknown"))
-    assert(out.forall(r => r.bytes.length <= r.out_w * r.out_h * 32)) // strided sample bound
-    assert(out.forall(r => r.bytes.nonEmpty))
-  }
-
   test("resize really resamples pixels on decodable images") {
-    import spark.implicits._
-    // 2×1 → 3×1 bilinear: out = [p0, (p0+p1+1)/2-ish fixed point, p1]
+    // 2×1 → 3×1 bilinear over the REAL decoded pixel grid:
+    // out = [p0, (p0+p1+1)/2-ish fixed point, p1]
     val png = Multimodal.Png.encode(2, 1, (x, _) => if (x == 0) (10, 40, 90) else (20, 60, 110))
-    val df = Seq((1L, png), (2L, Multimodal.synthBmp(2L))).toDF("doc_id", "bin")
-    val out = Multimodal.resize(df, "doc_id", "bin", 3, 1).collect()
-      .map(r => r.doc_id -> r).toMap
-    assert(out(1L).resample_ok && out(1L).format == "png")
-    assert(out(2L).resample_ok && out(2L).format == "bmp")
-    val m = Multimodal.Bmp.decode(1L, out(1L).bytes)
+    val (w, h, rgb) = Multimodal.Png.pixels(1L, png)
+    val out = Multimodal.bilinearResample(w, h, rgb, 3, 1)
+    def ch(px: Array[Byte], c: Int) = px.indices.filter(_ % 3 == c).map(px(_) & 0xff).sum
     // midpoint: fx=128 → (p0·128·256 + p1·128·256 + 32768) >> 16
     def mid(a: Int, b: Int) = (a * 128 * 256 + b * 128 * 256 + 32768) >> 16
-    assert(m.width == 3 && m.height == 1)
-    assert(m.sum_r == 10 + mid(10, 20) + 20)
-    assert(m.sum_g == 40 + mid(40, 60) + 60)
-    assert(m.sum_b == 90 + mid(90, 110) + 110)
-    assert(m.px00 == 10L * 65536 + 40L * 256 + 90L)
+    assert(out.length == 3 * 1 * 3)
+    assert(ch(out, 0) == 10 + mid(10, 20) + 20)
+    assert(ch(out, 1) == 40 + mid(40, 60) + 60)
+    assert(ch(out, 2) == 90 + mid(90, 110) + 110)
+    assert((out(0) & 0xff, out(1) & 0xff, out(2) & 0xff) == ((10, 40, 90)))
     // identity resize reproduces the source exactly (fx=fy=0 everywhere)
-    val idm = Multimodal.Bmp.decode(3L,
-      Multimodal.resize(Seq((3L, png)).toDF("doc_id", "bin"), "doc_id", "bin", 2, 1)
-        .collect().head.bytes)
-    assert(idm.sum_r == 30 && idm.sum_g == 100 && idm.sum_b == 200)
+    val idm = Multimodal.bilinearResample(w, h, rgb, 2, 1)
+    assert(ch(idm, 0) == 30 && ch(idm, 1) == 100 && ch(idm, 2) == 200)
   }
+
 
   test("frame sampling slices the REAL frame bytes out of mdat") {
     // two tracks, known sizes, known payload: every frame's byte window
@@ -405,11 +393,10 @@ class MultimodalSpec extends SparkSpec {
       .collect().head
     assert(routed.format == "gif" && routed.decode_ok &&
       routed.width == 4 + 11 % 9 && routed.n_frames == 1)
-    // and GIFs flow through the real pixel resize
-    val rz = Multimodal.resize(
-      Seq((12L, Multimodal.synthGif(12L))).toDF("doc_id", "bin"),
-      "doc_id", "bin", 4, 4).collect().head
-    assert(rz.resample_ok && rz.format == "gif")
+    // and GIFs decode to a pixel grid the real resample consumes
+    val (gw, gh, grgb) = Multimodal.Gif.pixels(12L, Multimodal.synthGif(12L))
+    assert(grgb.length == gw * gh * 3)
+    assert(Multimodal.bilinearResample(gw, gh, grgb, 4, 4).length == 4 * 4 * 3)
   }
 
   test("Flac decode unpacks the bit-packed STREAMINFO exactly") {

@@ -32,7 +32,10 @@ class Round6OpsSpec extends AnyFunSuite with SparkSpec {
     // wedges the triangle join would enumerate under degree ordering vs
     // the naive id ordering (orient low-id → high-id)
     val e = Analytics.canonicalEdges(df, "u", "v")
-    val o = Analytics.orientByDegree(e, Analytics.vertexDegrees(e))
+    val deg = Analytics.vertexDegrees(e)
+    // `rd`: the degree of out-neighbour `b`, which orders b's pairs
+    val o = Analytics.orientByDegree(e, deg)
+      .join(deg.select(col("id").as("b"), col("deg").as("rd")), "b")
     val byDeg = o.as("e1").join(o.as("e2"),
         col("e1.a") === col("e2.a") &&
           (col("e1.rd") < col("e2.rd") ||

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.operators.Sink
 import graft.sources.Ingest
@@ -14,16 +12,17 @@ class SinkSpec extends SparkSpec {
       Ingest.table(spark, "/root/testdata/sf0.001", "orders")))).cache()
 
   test("L1 silver sink: partitioned parquet append, partition pruning on read") {
-    val dir = Files.createTempDirectory("graft-silver").toString
-    Sink.writeSilver(silver, dir)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == silver.count())
-    // hive layout by company → partition filter prunes files
-    val one = silver.select("company_id").head().getString(0)
-    val pruned = back.filter(col("company_id") === one)
-    assert(pruned.count() == silver.filter(col("company_id") === one).count())
-    val scanned = pruned.queryExecution.executedPlan.toString()
-    assert(scanned.contains("PartitionFilters"))
+    SparkSpec.withTempDir("graft-silver") { dir =>
+      Sink.writeSilver(silver, dir)
+      val back = spark.read.parquet(dir)
+      assert(back.count() == silver.count())
+      // hive layout by company → partition filter prunes files
+      val one = silver.select("company_id").head().getString(0)
+      val pruned = back.filter(col("company_id") === one)
+      assert(pruned.count() == silver.filter(col("company_id") === one).count())
+      val scanned = pruned.queryExecution.executedPlan.toString()
+      assert(scanned.contains("PartitionFilters"))
+    }
   }
 
   test("T7/L2 pubsub projection drops created_at + etl_checksum, keeps the rest") {
@@ -34,27 +33,30 @@ class SinkSpec extends SparkSpec {
     assert(!m.contains("created_at"))
     assert(!m.contains("etl_checksum"))
     // JSON lines sink round-trips through a text file
-    val dir = Files.createTempDirectory("graft-msgs").toString + "/out"
-    Sink.writeJsonLines(silver, dir)
-    val back = spark.read.text(dir)
-    assert(back.count() == silver.count())
-    assert(Sink.logged(silver) == silver.count()) // L4
+    SparkSpec.withTempDir("graft-msgs") { tmp =>
+      val dir = s"$tmp/out"
+      Sink.writeJsonLines(silver, dir)
+      val back = spark.read.text(dir)
+      assert(back.count() == silver.count())
+      assert(Sink.logged(silver) == silver.count()) // L4
+    }
   }
 
   test("compact: many small files rewritten to the size-derived count, rows intact") {
-    val dir = Files.createTempDirectory("graft-compact").toString
-    val in = dir + "/in"
-    val out = dir + "/out"
-    // 40 tiny files
-    spark.range(0, 4000).repartition(40).write.parquet(in)
-    val small = spark.read.parquet(in)
-    // target sized so the listing-derived count lands well under 40
-    val n = Sink.compact(small, in, out, targetBytes = 64L * 1024)
-    assert(n < 40)
-    val files = new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files == n)
-    assert(spark.read.parquet(out).collect().map(_.getLong(0)).sorted.toSeq == (0L until 4000L))
-    // refuses in-place rewrite
-    intercept[IllegalArgumentException](Sink.compact(small, in, in))
+    SparkSpec.withTempDir("graft-compact") { dir =>
+      val in = dir + "/in"
+      val out = dir + "/out"
+      // 40 tiny files
+      spark.range(0, 4000).repartition(40).write.parquet(in)
+      val small = spark.read.parquet(in)
+      // target sized so the listing-derived count lands well under 40
+      val n = Sink.compact(small, in, out, targetBytes = 64L * 1024)
+      assert(n < 40)
+      val files = new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files == n)
+      assert(spark.read.parquet(out).collect().map(_.getLong(0)).sorted.toSeq == (0L until 4000L))
+      // refuses in-place rewrite
+      intercept[IllegalArgumentException](Sink.compact(small, in, in))
+    }
   }
 }

@@ -30,6 +30,16 @@ object SparkSpec {
     s
   }
 
+  /** Run `body` with a fresh directory under `java.io.tmpdir` (named
+    * `prefix` plus a random suffix), deleted recursively afterwards,
+    * also when `body` throws. A streaming query writing there must stop
+    * inside `body`. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.getPath)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   /** Run `body` with the given session confs set; each previous value
     * (or its absence) is restored afterwards. */
   def withConfs[T](confs: (String, String)*)(body: => T): T = {

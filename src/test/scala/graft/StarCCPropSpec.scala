@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Analytics
 
-/** Property test: large-star/small-star CC must produce EXACTLY the same
-  * (id → min-of-component) labeling as the min-label-propagation variant
-  * on random graphs of varying shape — sparse scatter, dense blocks,
-  * long chains (worst case for propagation, the star variant's raison
-  * d'être), rings, and an empty graph.
+/** Property test: large-star/small-star connected components labels
+  * every node with the smallest id of its component, and the
+  * size-adaptive union-find fast path gives EXACTLY the labeling of the
+  * distributed loop on random graphs of varying shape — sparse scatter,
+  * dense blocks, long chains, rings, self-loops and NULL endpoints.
   */
 class StarCCPropSpec extends SparkSpec {
   import spark.implicits._
@@ -15,19 +14,30 @@ class StarCCPropSpec extends SparkSpec {
   private def labels(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.as[(Long, Long)].collect().toSet
 
+  /** The min-label propagation fixpoint — every node labelled with the
+    * smallest id of its component — by a driver-side union-find. */
+  private def expected(edges: Seq[(Long, Long)]): Set[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => (k, find(k))).toSet
+  }
+
   private def check(edges: Seq[(Long, Long)], tag: String): Unit = {
     val df = edges.toDF("a", "b")
-    // distributed loops (fast path disabled) — the 100-TB plans
-    val (prop, star) = withLocalFastPathOff(
-      (labels(Analytics.connectedComponents(df, "a", "b")),
-        labels(Analytics.connectedComponentsStar(df, "a", "b"))))
-    assert(star == prop, s"$tag: star vs propagation labelings diverge")
-    // size-adaptive union-find fast path (round 18) must be label-exact
-    // against both loops
-    val propFast = labels(Analytics.connectedComponents(df, "a", "b"))
-    val starFast = labels(Analytics.connectedComponentsStar(df, "a", "b"))
-    assert(propFast == prop, s"$tag: local fast path diverges from propagation")
-    assert(starFast == prop, s"$tag: local star fast path diverges")
+    // distributed loop (fast path disabled) — the 100-TB plan
+    val loop = withLocalFastPathOff(
+      labels(Analytics.connectedComponents(df, "a", "b")))
+    assert(loop == expected(edges), s"$tag: loop labeling is not min-id")
+    // size-adaptive union-find fast path must be label-exact
+    val fast = labels(Analytics.connectedComponents(df, "a", "b"))
+    assert(fast == loop, s"$tag: local fast path diverges from the loop")
   }
 
   test("random sparse graphs match propagation labeling") {
@@ -55,30 +65,29 @@ class StarCCPropSpec extends SparkSpec {
     val dense = for (a <- 1L to 12L; b <- 1L to 12L if a < b) yield (a, b)
     val pairs = Seq((100L, 101L), (200L, 201L), (300L, 300L))
     check(dense ++ pairs, "dense+pairs")
-    // self-loop-only input → empty labeling from both
+    // a self-loop adds no edge to contract; its node labels itself
     check(Seq((7L, 7L)), "self-loop-only")
   }
 
   test("a non-numeric endpoint casts to NULL: the fallback labels alike on and off") {
-    // "x" casts to NULL under a non-ANSI cast, so connectedComponents'
-    // fast path rejects the symmetric edge set and falls back to the
-    // loop; star CC drops the NULL edge before its fast path
+    // "x" casts to NULL under a non-ANSI cast, so the fast path rejects
+    // the edge set and falls back to the loop
     val df = Seq(("1", "2"), ("2", "3"), ("x", "4"), ("5", "6"))
       .toDF("a", "b")
     def nullable(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
-    def both() = (nullable(Analytics.connectedComponents(df, "a", "b")),
-      nullable(Analytics.connectedComponentsStar(df, "a", "b")))
+    def cc() = nullable(Analytics.connectedComponents(df, "a", "b"))
     val ansi = "spark.sql.ansi.enabled"
     val prevAnsi = spark.conf.getOption(ansi)
     spark.conf.set(ansi, "false")
     val (off, on) =
-      try (withLocalFastPathOff(both()), both())
+      try (withLocalFastPathOff(cc()), cc())
       finally prevAnsi.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
     assert(on == off, "fast-path switch changes the NULL-endpoint labeling")
-    // both variants label the NULL id NULL: no neighbour's label reaches it
-    assert(on._1 == on._2, s"propagation ${on._1} vs star ${on._2} on a NULL endpoint")
-    // union-find never emits a NULL id: this one proves the loop ran
-    assert(on._1.exists(_._1.isEmpty), s"no NULL-row label: ${on._1}")
+    // the NULL id is a node of its own: no neighbour's label reaches it,
+    // and 4 keeps its own label
+    assert(on == Set((Some(1L), Some(1L)), (Some(2L), Some(1L)),
+      (Some(3L), Some(1L)), (None, None), (Some(4L), Some(4L)),
+      (Some(5L), Some(5L)), (Some(6L), Some(5L))), s"labeling: $on")
   }
 }

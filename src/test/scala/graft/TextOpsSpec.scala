@@ -44,14 +44,6 @@ class TextOpsSpec extends SparkSpec {
     assert(out.forall { case (_, nProbes, nGrams) => nProbes == 1 && nGrams == 1 })
   }
 
-  test("jaccard basics") {
-    val df = Seq((Seq("a", "b"), Seq("b", "c")), (Seq.empty[String], Seq.empty[String]))
-      .toDF("x", "y")
-    val out = df.select(TextOps.jaccard(col("x"), col("y"))).collect().map(_.getDouble(0))
-    assert(out(0) == 1.0 / 3.0)
-    assert(out(1) == 0.0)
-  }
-
   test("minhash: identical sets → identical signatures; supersets differ") {
     val df = Seq(
       ("d1", Seq("x y", "y z")), ("d2", Seq("y z", "x y")), ("d3", Seq("x y", "q r"))
@@ -201,7 +193,7 @@ class TextOpsSpec extends SparkSpec {
       (3L, "nothing shared here"),
       (4L, "ab")) // 1 token < n → no grams, absent from output
       .toDF("doc_id", "text")
-    val got = TextOps.commonNgramScrub(docs, "doc_id", "text", n = 3, maxDocs = 2)
+    val got = TextOps.scrubWithThreshold(docs, "doc_id", "text", 3, _ => lit(2L))
       .orderBy("doc_id").collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L))
     val byId = got.map(r => r.getLong(0) -> r).toMap
@@ -366,8 +358,8 @@ class TextOpsSpec extends SparkSpec {
     // N = 4, perMille = 500 → threshold = (4·500 + 999) DIV 1000 = 2
     val rel = TextOps.commonNgramScrubRelative(docs, "doc_id", "text",
       n = 3, perMille = 500).orderBy("doc_id").collect()
-    val abs = TextOps.commonNgramScrub(docs, "doc_id", "text",
-      n = 3, maxDocs = 2).orderBy("doc_id").collect()
+    val abs = TextOps.scrubWithThreshold(docs, "doc_id", "text", 3,
+      _ => lit(2L)).orderBy("doc_id").collect()
     assert(rel.map(_.toSeq).toSeq == abs.map(_.toSeq).toSeq)
     // "shared common gram" (df 3 > 2) is common; docs 0-2 carry it
     assert(rel(0).getLong(2) == 1 && rel(3).getLong(2) == 0)

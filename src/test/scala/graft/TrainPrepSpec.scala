@@ -307,27 +307,6 @@ class TrainPrepSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("psi_contrib")).sum > 0L)
   }
 
-  test("exportShards: manifest recomputed from written files equals the pure manifest") {
-    import org.apache.spark.sql.functions.col
-    val docs = graft.sources.Ingest.table(spark, "/root/testdata/sf0.001", "documents")
-      .select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString + "/out"
-    val written = TrainPrep.exportShards(docs, "doc_id", "text", nShards = 8, dir)
-      .orderBy("shard_id").collect()
-    val pure = TrainPrep.shardManifest(docs, "doc_id", "text", nShards = 8)
-      .orderBy("shard_id").collect()
-    assert(written.toSeq == pure.toSeq)
-    // every shard directory landed
-    assert(written.length == pure.length)
-    // xor digest detects a single dropped doc: manifest over written
-    // files minus one row differs in exactly that shard
-    val one = spark.read.parquet(dir).where(col("doc_id") =!= 0L)
-    val tampered = TrainPrep.shardManifest(
-      one.select(col("doc_id"), col("text")), "doc_id", "text", nShards = 8)
-      .orderBy("shard_id").collect()
-    assert(tampered.toSeq != pure.toSeq)
-  }
-
   test("groupAuc: exact Mann-Whitney with midrank ties (hand-computed)") {
     import graft.operators.TrainPrep
     val rows = Seq(
@@ -464,51 +443,6 @@ class TrainPrepSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
     assert(again.sorted.toSeq == rows.sorted.toSeq)
-  }
-
-  test("writeEpochShards: two independent writes are byte-identical per shard; one file per shard dir") {
-    val docs = (0L until 160L).map(i => (i, 1L + i % 5)).toDF("doc_id", "n_tok")
-    val base = java.nio.file.Files.createTempDirectory("epoch-shards").toString
-    def md5(f: java.io.File): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(java.nio.file.Files.readAllBytes(f.toPath))
-        .map(b => f"${b & 0xff}%02x").mkString
-    }
-    def shardDigests(dir: String): Map[String, String] = {
-      val root = new java.io.File(dir)
-      val out = scala.collection.mutable.Map.empty[String, String]
-      for (e <- root.listFiles() if e.getName.startsWith("epoch=");
-           s <- e.listFiles() if s.getName.startsWith("shard=")) {
-        val parts = s.listFiles().filter(f => f.getName.startsWith("part-"))
-        assert(parts.length == 1,
-          s"${e.getName}/${s.getName}: ${parts.length} part files, expected exactly 1")
-        out(s"${e.getName}/${s.getName}") = md5(parts(0))
-      }
-      out.toMap
-    }
-    TrainPrep.writeEpochShards(docs, "doc_id", "n_tok", seed = "sw",
-      epochs = 2, nShards = 4, budget = 16L, outDir = s"$base/a")
-    // second, INDEPENDENT write — different output dir, re-planned job
-    TrainPrep.writeEpochShards(docs, "doc_id", "n_tok", seed = "sw",
-      epochs = 2, nShards = 4, budget = 16L, outDir = s"$base/b")
-    val da = shardDigests(s"$base/a")
-    val db = shardDigests(s"$base/b")
-    assert(da.keySet == (for (e <- 0 until 2; s <- 0 until 4)
-      yield s"epoch=$e/shard=$s").toSet, s"missing shard dirs: ${da.keySet}")
-    assert(da == db, "re-running the write must produce byte-identical shards")
-    // a different seed moves at least one shard's bytes
-    TrainPrep.writeEpochShards(docs, "doc_id", "n_tok", seed = "OTHER",
-      epochs = 2, nShards = 4, budget = 16L, outDir = s"$base/c")
-    assert(shardDigests(s"$base/c") != da)
-    // the files round-trip: every (doc, epoch) exactly once, pack math intact
-    val back = spark.read.format("json").load(s"$base/a")
-    assert(back.count() == 320L)
-    assert(back.select("id").distinct().count() == 160L)
-    // partition pruning: resuming one shard reads ONLY its directory
-    val one = spark.read.format("json").load(s"$base/a/epoch=1/shard=2")
-    val full = back.where(col("epoch") === 1 && col("shard") === 2)
-      .drop("epoch", "shard")
-    assert(one.count() > 0 && one.count() == full.count())
   }
 
   test("logreg sigmoid is the pinned rational — integer-exact, odd-symmetric, saturating (r16 ADVICE)") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{TextOps, TrainPrep}
 
 /** Round-19 equivalence gates for the tokenizer trainers' size-adaptive
-  * LOCAL merge loops (bpeTrain / byteBpeTrain / wordPieceTrain): with
+  * LOCAL merge loops (byteBpeTrain / wordPieceTrain): with
   * [[LocalFastPath]] off the audited distributed loops run; with
   * defaults the in-process replay runs; both must produce
   * IDENTICAL merge lists (ranks, symbols, counts, scores) on the real
@@ -44,17 +44,6 @@ class TrainerLocalSpec extends SparkSpec {
       "éé öö éé öö", "宇宙 宇宙 词 词").zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     Seq(("real-sf0.001", real), ("ties", ties), ("unicode", unicode))
-  }
-
-  test("bpeTrain local merge loop equals the distributed loop") {
-    for ((tag, docs) <- fixtures; nM <- Seq(1, 6, 12)) {
-      assertLocalSized(tag, docs, split(lower(col("text")), "\\s+"))
-      val slow = withLocalFastPathOff(rowsOf(
-        TrainPrep.bpeTrain(docs, "text", nM).orderBy(col("rank"))))
-      val fast = rowsOf(
-        TrainPrep.bpeTrain(docs, "text", nM).orderBy(col("rank")))
-      assert(fast == slow, s"bpeTrain $tag nM=$nM diverges")
-    }
   }
 
   test("byteBpeTrain local merge loop equals the distributed loop") {

@@ -195,67 +195,6 @@ class UnigramSpec extends SparkSpec {
     assert(zReest >= zPruned, "soft-EM round after pruning regressed logZ")
   }
 
-  test("softEmRoundFB: forward-backward agrees with the enumeration lattice sum; no word-length cap") {
-    val words = UnigramLm.wordFreqs(docs, "text").localCheckpoint()
-    val vocab = UnigramLm.collectVocab(UnigramLm.seedVocab(docs, "text", 4, 24))
-    // enumeration path (micro ints) vs FB path (unquantized doubles):
-    // the same lattice sum, differing only by the enumeration's single
-    // per-segmentation micro-quantization → sub-0.1% agreement
-    val enumEc = UnigramLm.softEmRound(words, vocab, 4)
-      .select(col("piece"), col("ec_micro")).as[(String, Long)]
-      .collect().toMap.view.mapValues(_ / 1e6).toMap
-    val fbEc = UnigramLm.softEmRoundFB(words, vocab, 4)
-      .as[(String, Double)].collect().toMap
-    val multis = vocab.filter(_.piece.length > 1).map(_.piece)
-    assert(multis.nonEmpty)
-    (multis ++ vocab.filter(_.piece.length == 1).map(_.piece)).foreach { p =>
-      val e = enumEc.getOrElse(p, 0.0)
-      val fb = fbEc.getOrElse(p, 0.0)
-      // chars are floored at 1 micro on the enum side; skip pure-floor rows
-      if (e > 1e-5 || fb > 1e-5) {
-        val rel = math.abs(e - fb) / math.max(math.max(e, fb), 1e-9)
-        assert(rel <= 1e-3, f"piece '$p': enum $e%.6f vs FB $fb%.6f (rel $rel%.2e)")
-      }
-    }
-    // the FB path has NO length cap: a 20-char word (excluded from the
-    // enumeration path's stats) still contributes expectation mass
-    val long = Seq(("a" * 20, 7L)).toDF("w", "f")
-    val lv = Seq(UnigramLm.Piece("a", 1, -100L), UnigramLm.Piece("aa", 1, -150L))
-    assert(UnigramLm.softEmRound(long, lv, 4).count() ==
-      lv.count(_.piece.length == 1).toLong) // chars only, floored
-    val fbLong = UnigramLm.softEmRoundFB(long, lv, 4)
-      .as[(String, Double)].collect().toMap
-    assert(fbLong("a") > 0 && fbLong("aa") > 0,
-      "FB must cover words beyond the enumeration cap")
-  }
-
-  test("trainSoft: published schedule reaches the target size; words round-trip") {
-    val vocab = UnigramLm.trainSoft(docs, "text", maxPieceLen = 4,
-      seedSize = 30, vocabSize = 14)
-    assert(vocab.length == 14, s"got ${vocab.length} pieces")
-    val words = UnigramLm.wordFreqs(docs, "text")
-    val seg = UnigramLm.segmentWords(words, vocab, 4)
-      .select(col("w"), col("pieces")).as[(String, Seq[String])].collect()
-    seg.foreach { case (w, pieces) =>
-      assert(pieces.mkString("") == w, s"'$w' -> $pieces does not round-trip")
-    }
-  }
-
-  test("trainSoft shrink schedule cannot stall on tiny targets (round-14 advice)") {
-    // ceil(multis * 0.75) == multis for multis in {1,2,3}: without the
-    // clamp the loop would spin 64 full soft-EM passes and exit
-    // oversized. vocabSize barely above the char count forces the
-    // schedule through that regime; the clamp steps down one piece per
-    // round and must land exactly on target.
-    val tiny = Seq((0L, "abab abab ab")).toDF("doc_id", "text")
-    val nChars = 2 // 'a', 'b'
-    val vocab = UnigramLm.trainSoft(tiny, "text", maxPieceLen = 3,
-      seedSize = 8, vocabSize = nChars + 1)
-    assert(vocab.count(_.piece.length > 1) == 1,
-      s"expected exactly 1 multi piece, got ${vocab.filter(_.piece.length > 1)}")
-    assert(vocab.length == nChars + 1)
-  }
-
   test("out-of-vocab characters skip, never crash, in every soft-EM consumer (round-14 advice)") {
     // 'z' has no piece in this vocab → zero valid segmentations; the
     // public APIs must skip the word (the d <= 0 path), not throw from
@@ -272,42 +211,6 @@ class UnigramSpec extends SparkSpec {
     val zOnlyAa = UnigramLm.corpusLogZ(
       Seq(("aa", 2L)).toDF("w", "f"), vocab, 3)
     assert(z == zOnlyAa, "the oov word must contribute exactly nothing")
-  }
-
-  test("pruneLossesFB: cap-free loss agrees with the exact enumeration on keep-sets") {
-    val words = UnigramLm.wordFreqs(docs, "text").localCheckpoint()
-    val seed = UnigramLm.collectVocab(UnigramLm.seedVocab(docs, "text", 4, 30))
-    val vocab = UnigramLm.collectSoftRound(words, seed, 4)
-    val exact = UnigramLm.pruneLosses(words, vocab, 4)
-      .as[(String, Long)].collect().toMap
-    val fb = UnigramLm.pruneLossesFB(words, vocab, 4)
-      .as[(String, Double)].collect().toMap
-    assert(fb.keySet == exact.keySet, "FB must cover every multi-char piece")
-    // value agreement: same quantity, FB unquantized — tight relative gate
-    exact.foreach { case (p, lm) =>
-      val e = lm.toDouble
-      val f = fb(p)
-      val rel = math.abs(e - f) / math.max(math.max(math.abs(e), math.abs(f)), 1.0)
-      assert(rel <= 1e-3, f"piece '$p': exact $e%.1f vs FB $f%.1f (rel $rel%.2e)")
-    }
-    // the decision that matters: keep-set equality at several targets
-    Seq(2, 3, 5).foreach { t =>
-      val kExact = UnigramLm.pruneVocab(words, vocab, 4, t)
-        .filter(_.piece.length > 1).map(_.piece).toSet
-      val kFb = UnigramLm.pruneVocabFB(words, vocab, 4, t)
-        .filter(_.piece.length > 1).map(_.piece).toSet
-      assert(kExact == kFb, s"keep-set diverged at target $t: $kExact vs $kFb")
-    }
-    // and the cap-free property: a 24-char word is invisible to the
-    // enumeration path but carries loss mass on the FB path
-    val long = Seq(("ab" * 12, 5L)).toDF("w", "f")
-    val lv = Seq(Piece("a", 1, -100000L), Piece("b", 1, -100000L),
-      Piece("ab", 1, -150000L))
-    assert(UnigramLm.pruneLosses(long, lv, 4)
-      .as[(String, Long)].collect().toMap.apply("ab") == 0L)
-    val fbLong = UnigramLm.pruneLossesFB(long, lv, 4)
-      .as[(String, Double)].collect().toMap
-    assert(fbLong("ab") > 0.0, "FB loss must cover words beyond the cap")
   }
 
   test("byte fallback: DP equals exhaustive enumeration with the fallback rule, emoji included") {
@@ -392,27 +295,24 @@ class UnigramSpec extends SparkSpec {
   }
 
   test("byte pieces are unprunable and survive the full train -> byteFallbackVocab -> apply composition") {
-    // both pruning faces must exempt reserved byte pieces the way they
-    // exempt chars: byte pieces never match raw text, so every loss pass
+    // pruning must exempt reserved byte pieces the way it
+    // exempts chars: byte pieces never match raw text, so every loss pass
     // sees them at zero and an unguarded top-k would drop them first
     val words = Seq(("ab", 9L), ("ba", 4L)).toDF("w", "f")
     val vocab = UnigramLm.byteFallbackVocab(
       Seq(Piece("a", 9, -100000L), Piece("b", 9, -110000L),
         Piece("ab", 5, -150000L), Piece("ba", 2, -170000L)))
-    for (pruned <- Seq(
-        UnigramLm.pruneVocab(words, vocab, 3, targetMultis = 1),
-        UnigramLm.pruneVocabFB(words, vocab, 3, targetMultis = 1))) {
-      assert(pruned.count(p => UnigramLm.isBytePiece(p.piece)) == 256,
-        "pruning dropped reserved byte pieces")
-      assert(pruned.count(p => p.piece.length > 1 &&
-        !UnigramLm.isBytePiece(p.piece)) == 1)
-    }
+    val pruned = UnigramLm.pruneVocab(words, vocab, 3, targetMultis = 1)
+    assert(pruned.count(p => UnigramLm.isBytePiece(p.piece)) == 256,
+      "pruning dropped reserved byte pieces")
+    assert(pruned.count(p => p.piece.length > 1 &&
+      !UnigramLm.isBytePiece(p.piece)) == 1)
     // published composition order: train, then attach byte pieces to the
     // FINAL artifact — then NOTHING in an out-of-alphabet corpus is
     // unsegmentable (train on ASCII; apply sees accents/emoji)
     val trainCorpus = Seq((0L, "abab baba ab")).toDF("doc_id", "text")
-    val trained = UnigramLm.trainSoft(trainCorpus, "text", maxPieceLen = 3,
-      seedSize = 10, vocabSize = 5)
+    val trained = UnigramLm.train(trainCorpus, "text", maxPieceLen = 3,
+      vocabSize = 5, emRounds = 2)
     val art = UnigramLm.byteFallbackVocab(trained)
     assert(art.count(p => UnigramLm.isBytePiece(p.piece)) == 256)
     val corpus = Seq((0L, "abab baba"), (1L, "héllo 🙂 ab")).toDF("doc_id", "text")
@@ -531,49 +431,6 @@ class UnigramSpec extends SparkSpec {
     assert(v1.filter(_.piece.startsWith("<0x")).forall(_.lp_micro == -20000000L))
     val v2 = UnigramLm.byteFallbackVocab(v1, -20000000L)
     assert(v2.size == 257, "must be idempotent")
-  }
-
-  test("pruneLossesFB: an irreplaceable piece (only bridge over an uncovered char) gets +Inf loss and survives pruning (round-14 advice)") {
-    // vocab lacks the char 'z': the word "azb" is segmentable ONLY via
-    // the multi-char piece "zb" — banning it leaves zm = -Inf. The loss
-    // must surface as +Infinity (never NaN, never a silent garbage sum)
-    // and the keep-rank must retain the piece at any target >= 1.
-    val words = Seq(("azb", 3L), ("ab", 5L)).toDF("w", "f")
-    val vocab = Seq(Piece("a", 8, -100000L), Piece("b", 8, -100000L),
-      Piece("zb", 3, -300000L), Piece("ab", 5, -150000L))
-    val fb = UnigramLm.pruneLossesFB(words, vocab, 3)
-      .as[(String, Double)].collect().toMap
-    assert(fb("zb").isPosInfinity, s"irreplaceable piece loss: ${fb("zb")}")
-    assert(!fb("ab").isNaN && !fb("ab").isInfinity, "replaceable piece stays finite")
-    val kept = UnigramLm.pruneVocabFB(words, vocab, 3, targetMultis = 1)
-      .filter(_.piece.length > 1).map(_.piece).toSet
-    assert(kept == Set("zb"), s"top-1 keep must retain the irreplaceable piece: $kept")
-  }
-
-  test("trainSoftFB: cap-free composed trainer agrees with trainSoft in-cap; trains past the cap") {
-    // in-cap fixture: the quantized and double paths must elect the
-    // same vocabulary (pruneLossesFB's keep-set gate, composed)
-    val q = UnigramLm.trainSoft(docs, "text", maxPieceLen = 4,
-      seedSize = 30, vocabSize = 14)
-    val fb = UnigramLm.trainSoftFB(docs, "text", maxPieceLen = 4,
-      seedSize = 30, vocabSize = 14)
-    assert(fb.length == 14)
-    assert(fb.map(_.piece).toSet == q.map(_.piece).toSet,
-      s"vocabularies diverged:\n${q.map(_.piece).sorted}\n${fb.map(_.piece).sorted}")
-    // beyond the cap: a corpus whose dominant word is 24 chars trains
-    // end-to-end (trainSoft would exclude it from every statistic) and
-    // the trained vocab must actually model it — the repeated bigram
-    // earns a multi-char piece, and the word round-trips
-    val longDocs = Seq((0L, ("ab" * 12) + " " + ("ab" * 12) + " ab ba"))
-      .toDF("doc_id", "text")
-    val v = UnigramLm.trainSoftFB(longDocs, "text", maxPieceLen = 3,
-      seedSize = 8, vocabSize = 4)
-    assert(v.exists(p => p.piece.length > 1),
-      s"expected a multi-char piece, got ${v.map(_.piece)}")
-    val seg = UnigramLm.segmentWords(
-      Seq(("ab" * 12, 1L)).toDF("w", "f"), v, 3)
-      .select(col("pieces")).as[Seq[String]].collect()(0)
-    assert(seg.mkString("") == "ab" * 12)
   }
 
   test("sampleSegments: md5-deterministic draws, CDF-exact picks, resample share tracks the weights") {

@@ -56,7 +56,7 @@ class VectorOpsSpec extends SparkSpec {
       df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
         .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val brute = topSets(VectorOps.bruteForceTopK(queries, emb, "vec_id", "embedding", 10))
-    val cells = VectorOps.kmeansCells(emb, "vec_id", "embedding", k = 8, iters = 3)
+    val cells = VectorOps.kmeansFit(emb, "vec_id", "embedding", k = 8, iters = 3)._1
     val ivf = topSets(VectorOps.ivfTopK(queries, emb.join(cells, "vec_id"),
       "vec_id", "embedding", "cell", k = 10, nProbe = 2))
     val recalls = brute.map { case (q, exact) =>
@@ -178,14 +178,15 @@ class VectorOpsSpec extends SparkSpec {
       "embedding", "cell", cents, books, k = 10, nProbe = 2))
     // the deployed shape: materialize (cell, neighbor_id, codes) once,
     // read it back from bytes on disk, serve from the stored relation
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    VectorOps.pqEncodeIndex(corpus, "vec_id", "embedding", "cell", books)
-      .write.parquet(s"$dir/index")
-    val served = rows(VectorOps.ivfPqTopKFromIndex(queries, "vec_id",
-      "embedding", spark.read.parquet(s"$dir/index"), cents, books,
-      k = 10, nProbe = 2))
-    assert(served == bundled,
-      "serving from the parquet-round-tripped index must equal the bundled plan")
+    SparkSpec.withTempDir("graft-ivfpq") { dir =>
+      VectorOps.pqEncodeIndex(corpus, "vec_id", "embedding", "cell", books)
+        .write.parquet(s"$dir/index")
+      val served = rows(VectorOps.ivfPqTopKFromIndex(queries, "vec_id",
+        "embedding", spark.read.parquet(s"$dir/index"), cents, books,
+        k = 10, nProbe = 2))
+      assert(served == bundled,
+        "serving from the parquet-round-tripped index must equal the bundled plan")
+    }
   }
 
   test("labelCentroids: per-dim integer mean in index order") {
@@ -204,18 +205,18 @@ class VectorOpsSpec extends SparkSpec {
     val mk = (base: Float, ids: Range) =>
       ids.map(i => (i.toLong, Seq.tabulate(16)(d => base + 0.001f * ((i + d) % 3))))
     val df = (mk(1f, 0 until 8) ++ mk(-1f, 8 until 16)).toDF("vec_id", "embedding")
-    val cells = VectorOps.kmeansCells(df, "vec_id", "embedding", k = 2, iters = 3)
+    val cells = VectorOps.kmeansFit(df, "vec_id", "embedding", k = 2, iters = 3)._1
       .as[(Long, Int)].collect().toMap
     val blobA = (0L until 8L).map(cells).toSet
     val blobB = (8L until 16L).map(cells).toSet
     assert(blobA.size == 1 && blobB.size == 1 && blobA != blobB)
     // deterministic: a second training run assigns identically
-    val cells2 = VectorOps.kmeansCells(df, "vec_id", "embedding", k = 2, iters = 3)
+    val cells2 = VectorOps.kmeansFit(df, "vec_id", "embedding", k = 2, iters = 3)._1
       .as[(Long, Int)].collect().toMap
     assert(cells == cells2)
     // IVF over the trained cells: query in blob A sees only blob A at nProbe=1
     val out = VectorOps.ivfTopK(df.filter(col("vec_id") === 0),
-        df.join(VectorOps.kmeansCells(df, "vec_id", "embedding", 2, 3), "vec_id"),
+        df.join(VectorOps.kmeansFit(df, "vec_id", "embedding", 2, 3)._1, "vec_id"),
         "vec_id", "embedding", "cell", k = 20, nProbe = 1)
       .select("neighbor_id").as[Long].collect().toSet
     assert(out == (1L until 8L).toSet)
@@ -345,24 +346,6 @@ class VectorOpsSpec extends SparkSpec {
       ns.take(10).map(_._1).toSet.intersect(brute(id)).size.toDouble / 10 }
     info(f"init-only recall@10: ${initRecall.sum / initRecall.size}%.3f")
     Seq(init, r1, r2, r3).foreach(CacheScope.free)
-  }
-
-  test("nnDescentGraphConverged: delta termination converges and matches fixed-round recall") {
-    val emb = graft.sources.Ingest.table(spark, "/root/testdata/sf0.01", "embeddings")
-    val (g, rounds) = VectorOps.nnDescentGraphConverged(emb, "vec_id", "embedding",
-      k = 20, maxIters = 12, minUpdateFrac = 0.001)
-    info(s"NN-descent converged after $rounds rounds")
-    assert(rounds < 12, "delta termination should fire before maxIters")
-    assert(rounds >= 3, "random 64-dim data needs several rounds")
-    // converged graph must be at least as good as the registered
-    // 3-round q205 graph: per-node top-10 sum of cosines can only grow
-    // with more rounds (supersets-only-improve), so compare totals
-    def top10Sum(df: org.apache.spark.sql.DataFrame): Double =
-      df.filter(col("nn_rank") <= 10).agg(sum(col("cosine_sim")))
-        .collect()(0).getDouble(0)
-    val fixed = VectorOps.nnDescentGraph(emb, "vec_id", "embedding",
-      k = 20, iters = 3, nBits = 4, seedMod = 64)
-    assert(top10Sum(g) >= top10Sum(fixed) - 1e-9)
   }
 
   test("mineSemiHardNegatives: class-size contract is enforced, not just documented") {
